@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.api
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +11,15 @@ import org.apache.spark.sql.functions._
   *
   * Stage 1 salts each (skewed) source into `salts` shards and builds one
   * sketch partial per (source, salt) — the unit of work AND of resume.
-  * Partials land in the checkpoint dir as parquet partitioned by salt with
-  * full lineage (rows, tokens, order-insensitive input hash). Stage 2
-  * kernel-merges partials per source with *_merge_agg.
+  * Partials land in the checkpoint dir as flat parquet part files, one
+  * per write task, with `salt` an ordinary column beside the full lineage
+  * (rows, tokens, order-insensitive input hash). Stage 2 kernel-merges
+  * partials per source with *_merge_agg.
+  *
+  * Layout: checkpoints written before the flat layout hold one `salt=N`
+  * directory per shard and resume in that layout ([[appendPartials]]).
+  * graft versions that record build parameters but predate the flat
+  * layout reject a flat checkpoint before appending to it ([[FlatTag]]).
   *
   * Resume: shards already present in the checkpoint are anti-joined away
   * from the input, so a killed stage-1 job re-processes only missing
@@ -82,6 +89,36 @@ object BuildSketches {
     case "ss" => s"ss;k=${cfg.ssK}"
     case "kmv" => s"kmv;k=${cfg.kmvK}"
     case other => throw new IllegalArgumentException(s"unknown sketch kind $other")
+  }
+
+  /** Suffix of the `build_params` of every flat-layout partial. Older
+    * versions compare `build_params` verbatim, so they reject a flat
+    * checkpoint as built with other parameters instead of appending
+    * `salt=N` directories beside its part files, which Spark's partition
+    * discovery would then silently skip. */
+  private[jobs] val FlatTag = ";layout=flat"
+
+  /** Append stage-1 partials to the checkpoint whose visible entries
+    * ([[graft.util.ParquetState.visibleEntries]]) were listed before
+    * this append — the one place the checkpoint layout is decided. A
+    * fresh or flat checkpoint gets one part file per write task. A
+    * checkpoint of `salt=N` directories, written before the flat layout,
+    * keeps that layout: partition discovery skips part files that sit
+    * beside partition directories, so a mix of both would drop partials
+    * without a trace — and a mix already on disk is rejected. */
+  private[jobs] def appendPartials(partials: DataFrame, checkpointDir: String,
+      entries: Seq[FileStatus]): Unit = {
+    val saltDirs = entries.count(e =>
+      e.isDirectory && e.getPath.getName.startsWith("salt="))
+    require(saltDirs == 0 || saltDirs == entries.length,
+      s"checkpoint at $checkpointDir mixes salt=N directories with flat " +
+      "part files; Spark would skip the part files when reading it — " +
+      "rebuild from a fresh dir")
+    val writer =
+      if (saltDirs > 0) partials.write.partitionBy("salt")
+      else partials.withColumn("build_params",
+        concat(col("build_params"), lit(FlatTag))).write
+    writer.mode(SaveMode.Append).parquet(checkpointDir)
   }
 
   private def mergeAgg(cfg: Config, sketch: Column): Column = cfg.kind match {
@@ -221,8 +258,9 @@ object BuildSketches {
     // leaves _SUCCESS) — counting those as checkpoint data would send
     // the advertised killed-job resume into a parquet read with zero
     // data files (UNABLE_TO_INFER_SCHEMA) instead of a fresh start
+    val entries = graft.util.ParquetState.visibleEntries(spark, checkpointDir)
     val existing: Option[DataFrame] =
-      graft.util.ParquetState.readIfAny(spark, checkpointDir)
+      Option.when(entries.nonEmpty)(spark.read.parquet(checkpointDir))
 
     // observe() metrics on the input actually consumed this run
     val observed = input.observe("graft_build",
@@ -233,7 +271,9 @@ object BuildSketches {
     // recomputing salts from this run's input (autoSalt counts can drift,
     // config can change) would silently drop/double-count rows against
     // the recorded (source, salt) done-set. The scheme travels inside the
-    // checkpoint itself; a checkpoint without it is rejected loudly.
+    // checkpoint itself; a checkpoint without it is rejected loudly. A
+    // checkpoint of zero partials (a flat append of an empty input leaves
+    // one schema-only part file) constrains nothing.
     val scheme: (Map[String, Int], Int) = existing match {
       case Some(ck) if ck.columns.contains("salt_scheme") =>
         // the checkpoint's KIND must match too: resuming a cqf build as
@@ -242,7 +282,7 @@ object BuildSketches {
         if (ck.columns.contains("sketch_kind")) {
           val kinds = ck.select(col("sketch_kind")).distinct()
             .collect().map(_.getString(0))
-          require(kinds.sameElements(Array(cfg.kind)),
+          require(kinds.isEmpty || kinds.sameElements(Array(cfg.kind)),
             s"checkpoint at $checkpointDir holds sketch kind " +
             s"'${kinds.mkString(",")}' but this run builds '${cfg.kind}' — " +
             "use a fresh checkpoint dir per kind")
@@ -255,6 +295,7 @@ object BuildSketches {
         if (ck.columns.contains("build_params")) {
           val params = ck.select(col("build_params")).distinct()
             .collect().map(_.getString(0)).filter(_ != null)
+            .map(_.stripSuffix(FlatTag)).distinct
           require(params.isEmpty || params.sameElements(Array(paramString(cfg))),
             s"checkpoint at $checkpointDir was built with parameters " +
             s"'${params.mkString(",")}' but this run uses " +
@@ -264,9 +305,9 @@ object BuildSketches {
         }
         val recorded = ck.select(col("salt_scheme")).distinct()
           .collect().map(_.getString(0))
-        require(recorded.length == 1,
+        require(recorded.length <= 1,
           s"checkpoint at $checkpointDir mixes salt schemes: ${recorded.mkString(" | ")}")
-        parseScheme(recorded.head)
+        recorded.headOption.map(parseScheme).getOrElse(deriveScheme(input, cfg))
       case Some(_) =>
         throw new IllegalStateException(
           s"checkpoint at $checkpointDir predates salt-scheme tracking — " +
@@ -293,34 +334,14 @@ object BuildSketches {
 
     // unconditional append: probing emptiness first (remaining.take(1))
     // costs a second full anti-join scan of the input; an empty append
-    // writes no data files and the visible-entry guard above ignores its
-    // _SUCCESS marker
-    buildPartials(remaining, cfg, Some(scheme))
-      .write.mode(SaveMode.Append).partitionBy("salt").parquet(checkpointDir)
+    // writes no partial rows (at most a schema-only part file, which a
+    // resume reads as a checkpoint of zero partials)
+    appendPartials(buildPartials(remaining, cfg, Some(scheme)), checkpointDir, entries)
 
-    // a build over an EMPTY input writes no data files — whether the dir
-    // does not exist (PATH_NOT_FOUND), was pre-created by ops (UNABLE_TO_
-    // INFER_SCHEMA on a dir with no data files), or holds only the empty
-    // append's _SUCCESS marker — a scheduled build on a zero-row day must
-    // return an empty result, not crash
-    val partials =
-      try spark.read.parquet(checkpointDir)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("source",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("sketch_bytes",
-                org.apache.spark.sql.types.BinaryType),
-              org.apache.spark.sql.types.StructField("n_rows",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("n_tokens",
-                org.apache.spark.sql.types.LongType))))
-      }
+    // the read-back always finds a schema, even after a zero-row build on
+    // a fresh dir: a flat append commits at least one (schema-only) part
+    // file, and a salt=N checkpoint holds data by construction
+    val partials = spark.read.parquet(checkpointDir)
     // Concurrent resumes (operator retry, overlapping cron) can append
     // the same shard twice: identical re-appends (same input_hash over
     // the same rows) dedupe to one harmlessly; a shard appearing with

@@ -153,10 +153,15 @@ object IncrementalDedup {
     *                (and leading-zero names would not even round-trip)
     */
   def run(spark: SparkSession, df: DataFrame, tokens: Column, id: Column,
-      stateDir: String, batchId: String, cfg: Config = Config()): DataFrame =
-    graft.util.Adaptive.withCoalescedShuffles(spark) {
+      stateDir: String, batchId: String, cfg: Config = Config()): DataFrame = {
+    // runImpl labels its stages through the thread-local job description;
+    // the caller's own description comes back on every exit path
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try graft.util.Adaptive.withCoalescedShuffles(spark) {
       runImpl(spark, df, tokens, id, stateDir, batchId, cfg)
-    }
+    } finally sc.setJobDescription(callerDescription)
+  }
 
   private def runImpl(spark: SparkSession, df: DataFrame, tokens: Column,
       id: Column, stateDir: String, batchId: String, cfg: Config): DataFrame = {
@@ -480,10 +485,6 @@ object IncrementalDedup {
     writeMarker()
 
     allPairs(spark, stateDir)
-    } finally {
-      newBase.unpersist(false)
-      // thread-local: don't leak the last stage label onto caller jobs
-      spark.sparkContext.setJobDescription(null)
-    }
+    } finally newBase.unpersist(false)
   }
 }

@@ -6,6 +6,27 @@ import org.apache.spark.sql.SparkSession
   * (incremental dedup / IVF index maintenance). */
 object Adaptive {
 
+  /** Run `f` with AQE OFF. Used for control actions — commit-marker
+    * and stats reads, delta fingerprint aggs, tiny collects — which are
+    * metadata- or delta-aggregate-sized BY CONSTRUCTION at any corpus
+    * scale and contain no joins whose strategy AQE could improve, so
+    * adaptive execution only adds a re-planning round (a separate job
+    * with its own scheduling latency) per exchange. IncrementalDedup
+    * also runs its data-bearing stages (the candidate bucket join, the
+    * verify and pair append) under it: their skew is bounded by the
+    * bucket cap and both sides are delta-proportional, so their static
+    * plans need no runtime re-planning.
+    * Restores the caller's setting. */
+  def withoutAqe[T](spark: SparkSession)(f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try f finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Run `f` with AQE small-partition coalescing ON (optimization guide
     * §2.2): a state pipeline executes dozens of control queries whose
     * shuffles carry KB-sized frames (markers, counts, candidate ids) —
@@ -17,24 +38,6 @@ object Adaptive {
     * never splits, only merges). Restores the caller's setting after —
     * the bench session keeps coalescing OFF globally so the frozen
     * headline-build plan stays byte-comparable across rounds. */
-  /** Run `f` with AQE OFF — for CONTROL actions only: commit-marker and
-    * stats reads, delta fingerprint aggs, tiny collects. These are
-    * metadata- or delta-aggregate-sized BY CONSTRUCTION at any corpus
-    * scale and contain no joins whose strategy AQE could improve, so
-    * adaptive execution only adds a re-planning round (a separate job
-    * with its own scheduling latency) per exchange. Data-bearing stages
-    * (candidate joins, verifies, writes) stay under AQE for runtime
-    * skew/strategy handling at scale. Restores the caller's setting. */
-  def withoutAqe[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   def withCoalescedShuffles[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val old = spark.conf.getOption(key)

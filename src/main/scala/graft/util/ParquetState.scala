@@ -1,27 +1,32 @@
 package graft.util
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared filesystem guard for resumable parquet state directories
   * (BuildSketches checkpoints, IncrementalDedup stores). */
 object ParquetState {
 
-  /** Read a state table only if the directory holds VISIBLE data
-    * entries: a killed first append leaves `_temporary/` and a committed
-    * empty append a lone `_SUCCESS` — counting those as data would send
-    * a resume into a parquet read with zero data files
+  /** The VISIBLE entries directly under a state directory (none when it
+    * does not exist): a killed first append leaves `_temporary/` and a
+    * committed empty append a lone `_SUCCESS` — counting those as data
+    * would send a resume into a parquet read with zero data files
     * (UNABLE_TO_INFER_SCHEMA) instead of a fresh start. */
-  def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(path) && fs.listStatus(path).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-      Some(spark.read.parquet(dir))
-    else None
+  def visibleEntries(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val fs = FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration)
+    val path = new Path(dir)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq.filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
   }
+
+  /** Read a state table only if the directory holds visible data
+    * entries ([[visibleEntries]]). */
+  def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
+    Option.when(visibleEntries(spark, dir).nonEmpty)(spark.read.parquet(dir))
 
   /** Write `df` as ONE plain parquet FILE at `dest` (local paths) —
     * the driver-fixture layout that single-file readers (streaming

@@ -41,6 +41,20 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def itemsOf(bytes: Array[Byte]): List[(Long, Long)] =
     Cqf.deserialize(bytes).iterator.toList
 
+  /** Append partials exactly as `run` does: through the product's append
+    * function, which picks the checkpoint layout from the listing. */
+  private def appendAsRun(partials: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    BuildSketches.appendPartials(partials, dir,
+      graft.util.ParquetState.visibleEntries(spark, dir))
+
+  /** Visible entry names of a checkpoint dir (hidden _SUCCESS/.crc excluded). */
+  private def visibleNames(dir: String): Seq[String] =
+    graft.util.ParquetState.visibleEntries(spark, dir).map(_.getPath.getName)
+
+  private def perSource(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getString(0) ->
+      ((itemsOf(r.getAs[Array[Byte]](1)), r.getLong(2), r.getLong(3)))).toMap
+
   test("resume from truncated checkpoint == uninterrupted build") {
     val input = TokenGen.generate(spark, 1500, vocab = 2000).cache()
     val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
@@ -60,8 +74,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
       .where(col("salt") < 3)
       .drop("salt")
-    BuildSketches.buildPartials(prefix, cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dirB)
+    appendAsRun(BuildSketches.buildPartials(prefix, cfg, Some(scheme)), dirB)
     // resume processes only the missing shards
     val resumed = BuildSketches.run(spark, input, dirB, cfg)
       .collect().map(r => r.getString(0) ->
@@ -308,9 +321,80 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("empty input on a fresh checkpoint returns an empty result, not a crash") {
     val dir = Files.createTempDirectory("graft_empty").toString + "/ck"
     val empty = TokenGen.generate(spark, 5, vocab = 10).where(lit(false))
-    val out = BuildSketches.run(spark, empty, dir,
-      BuildSketches.Config(kind = "cqf", salts = 2)).collect()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 2, quotientBits = 10)
+    val out = BuildSketches.run(spark, empty, dir, cfg).collect()
     assert(out.isEmpty)
+    // the same on a dir pre-created empty (by ops, say)
+    assert(BuildSketches.run(spark, empty,
+      Files.createTempDirectory("graft_empty_pre").toString, cfg).collect().isEmpty)
+    // the next day's rows build on the zero-row checkpoint exactly as on
+    // a fresh one (it holds no partials, so no kind or scheme to match)
+    val input = TokenGen.generate(spark, 200, vocab = 500).cache()
+    val fresh = Files.createTempDirectory("graft_empty_fresh").toString
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) ==
+      perSource(BuildSketches.run(spark, input, fresh, cfg)))
+  }
+
+  test("a fresh build checkpoints flat: no salt= directory, one part file per task") {
+    val input = TokenGen.generate(spark, 600, vocab = 500).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
+    val dir = Files.createTempDirectory("graft_ckpt_flat").toString
+    BuildSketches.run(spark, input, dir, cfg).collect()
+    val names = visibleNames(dir)
+    assert(!names.exists(_.startsWith("salt=")), s"salt= directory in $names")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(names.nonEmpty && names.length <= parts,
+      s"${names.length} part files from one append (shuffle partitions $parts)")
+    // salt is an ordinary column, and every partial carries the layout
+    // tag that makes versions predating the flat layout reject the dir
+    val ck = spark.read.parquet(dir)
+    assert(ck.select(col("salt")).distinct().count() > 1)
+    assert(ck.select(col("build_params")).distinct().collect().map(_.getString(0))
+      .sameElements(Array(BuildSketches.paramString(cfg) + BuildSketches.FlatTag)))
+  }
+
+  test("a legacy salt=N checkpoint resumes to the same answer and keeps its layout") {
+    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
+    val full = perSource(BuildSketches.run(spark, input,
+      Files.createTempDirectory("graft_ckpt_new").toString, cfg))
+    // the layout every version before flat checkpoints wrote, killed
+    // after salts 0-2
+    val dir = Files.createTempDirectory("graft_ckpt_legacy").toString
+    val scheme = BuildSketches.deriveScheme(input, cfg)
+    BuildSketches.buildPartials(input
+        .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
+        .where(col("salt") < 3).drop("salt"), cfg, Some(scheme))
+      .write.mode("append").partitionBy("salt").parquet(dir)
+    assert(visibleNames(dir).sorted == Seq("salt=0", "salt=1", "salt=2"))
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+    val names = visibleNames(dir)
+    assert(names.length > 3 && names.forall(_.startsWith("salt=")),
+      s"legacy checkpoint lost its layout: $names")
+    // its partials keep the untagged parameters older versions expect
+    assert(spark.read.parquet(dir).select(col("build_params")).distinct()
+      .collect().map(_.getString(0)).sameElements(Array(BuildSketches.paramString(cfg))))
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+  }
+
+  test("a checkpoint mixing flat part files and salt=N directories rejects") {
+    // what a version predating build-parameter tracking leaves when it
+    // resumes a flat checkpoint: partition discovery would skip the flat
+    // part files and the merged counts would silently shrink
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
+    val dir = Files.createTempDirectory("graft_ckpt_mixed").toString
+    val scheme = BuildSketches.deriveScheme(input, cfg)
+    val salted = input.withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
+    appendAsRun(BuildSketches.buildPartials(
+      salted.where(col("salt") === 0).drop("salt"), cfg, Some(scheme)), dir)
+    BuildSketches.buildPartials(
+        salted.where(col("salt") === 1).drop("salt"), cfg, Some(scheme))
+      .write.mode("append").partitionBy("salt").parquet(dir)
+    val e = intercept[IllegalArgumentException] {
+      BuildSketches.run(spark, input, dir, cfg).collect()
+    }
+    assert(e.getMessage.contains("mixes salt=N directories"), e.getMessage)
   }
 
   test("a checkpoint dir holding only hidden entries is a fresh start, not a broken resume") {
@@ -369,15 +453,13 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     // concurrent-resume simulation: the same shards appended a second time
     val scheme = BuildSketches.deriveScheme(input, cfg)
-    BuildSketches.buildPartials(input, cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dir)
+    appendAsRun(BuildSketches.buildPartials(input, cfg, Some(scheme)), dir)
     val deduped = BuildSketches.run(spark, input, dir, cfg)
       .collect().map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(deduped == clean, "identical duplicate shards must not double-count")
     // diverging duplicate (different rows -> different input_hash) rejects
-    BuildSketches.buildPartials(
-        input.where(pmod(xxhash64(col("doc_id"), lit(7)), lit(2)) === 0), cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dir)
+    appendAsRun(BuildSketches.buildPartials(
+      input.where(pmod(xxhash64(col("doc_id"), lit(7)), lit(2)) === 0), cfg, Some(scheme)), dir)
     val e = intercept[IllegalArgumentException] {
       BuildSketches.run(spark, input, dir, cfg).collect()
     }

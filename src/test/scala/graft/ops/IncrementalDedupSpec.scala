@@ -358,6 +358,23 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$sigBytes B — the delta is re-scanning the store")
   }
 
+  test("the caller's job description survives run, also when run rejects") {
+    val state = Files.createTempDirectory("inc_dedup_desc").toString
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly dedup")
+    try {
+      IncrementalDedup.run(spark, batch(0),
+        TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
+      assert(sc.getLocalProperty("spark.job.description") == "caller: nightly dedup")
+      // rejected after the first stage label: drifted parameters
+      intercept[IllegalArgumentException] {
+        IncrementalDedup.run(spark, batch(1), TextOps.tokens(col("text")),
+          col("doc_id"), state, "b1", cfg.copy(threshold = 0.5))
+      }
+      assert(sc.getLocalProperty("spark.job.description") == "caller: nightly dedup")
+    } finally sc.setJobDescription(null)
+  }
+
   test("numeric-looking batch ids reject (partition type inference would break resume)") {
     val state = Files.createTempDirectory("inc_dedup_bid").toString
     for (bad <- Seq("20260818", "0123", "", "a b", "x/y")) {
