@@ -30,24 +30,20 @@ import org.apache.spark.sql.functions._
   */
 object BuildSketches {
 
-  /** kind: cqf | hll | cms | tdigest | kll | bloom | ss | kmv.
-    * groupFirst co-partitions rows by (source, salt) before aggregating:
-    * each shard's sketch is built by exactly one task (cache-resident
-    * working set, no k-way partial re-merge) — the right plan when group
-    * sketches are large relative to per-task slices; disable to use
-    * Catalyst's default map-side partial aggregation.
-    * salts is the MEAN shard count per source; with autoSalt (default)
-    * the per-source counts are derived from observed row counts (one
-    * cheap pre-pass over the `source` column), so one hot source holding
-    * most of the corpus gets most of the shard budget instead of the
-    * same fixed count as a cold source — at 100x data a fixed count
-    * would leave the hot source's shards 100x the others and the stage
-    * wall clock would be that one task. */
+  /** kind: cqf | hll | cms | tdigest | kll | bloom | ss | kmv; the
+    * remaining fields are that kind's build parameters.
+    * salts is the MEAN shard count per source. The per-source counts are
+    * derived from observed row counts (one cheap pre-pass over the
+    * `source` column), so one hot source holding most of the corpus gets
+    * most of the shard budget instead of the same fixed count as a cold
+    * source — at 100x data a fixed count would leave the hot source's
+    * shards 100x the others and the stage wall clock would be that one
+    * task. Stage 1 co-partitions rows by (source, salt) before
+    * aggregating: each shard's sketch is built by exactly one task
+    * (cache-resident working set, no k-way partial re-merge). */
   final case class Config(
       kind: String = "cqf",
       salts: Int = 16,
-      autoSalt: Boolean = true,
-      groupFirst: Boolean = true,
       quotientBits: Int = 12,
       hashBits: Int = 64,
       compact: Boolean = false,
@@ -199,13 +195,7 @@ object BuildSketches {
 
   /** Derive this run's salt scheme from the input (see [[saltCounts]]). */
   private[jobs] def deriveScheme(df: DataFrame, cfg: Config): (Map[String, Int], Int) =
-    (if (cfg.autoSalt) saltCounts(df, cfg) else Map.empty[String, Int], cfg.salts)
-
-  /** The salt expression shared by stage 1 and the resume anti-join. */
-  private[jobs] def saltExpr(df: DataFrame, cfg: Config): Column = {
-    val (map, default) = deriveScheme(df, cfg)
-    saltExprFor(map, default)
-  }
+    (saltCounts(df, cfg), cfg.salts)
 
   /** Stage 1: per-(source, salt) sketch partials with lineage columns
     * (F4 fixture schema). `scheme` overrides the salt scheme — the
@@ -215,10 +205,8 @@ object BuildSketches {
   def buildPartials(df: DataFrame, cfg: Config,
       scheme: Option[(Map[String, Int], Int)] = None): DataFrame = {
     val (saltMap, saltDefault) = scheme.getOrElse(deriveScheme(df, cfg))
-    val salted = df.withColumn("salt", saltExprFor(saltMap, saltDefault))
-    val distributed =
-      if (cfg.groupFirst) salted.repartition(col("source"), col("salt"))
-      else salted
+    val distributed = df.withColumn("salt", saltExprFor(saltMap, saltDefault))
+      .repartition(col("source"), col("salt"))
     // DEFAULT fast path: a `packed` BINARY column (pack_ints layout) keeps
     // the scan on parquet's vectorized primitive path — used automatically
     // for CQF builds when the input table carries it
@@ -268,7 +256,7 @@ object BuildSketches {
       sum(col("n_tok").cast("long")).as("tokens_in"))
 
     // A resume MUST shard under the scheme the checkpoint was built with:
-    // recomputing salts from this run's input (autoSalt counts can drift,
+    // recomputing salts from this run's input (salt counts can drift,
     // config can change) would silently drop/double-count rows against
     // the recorded (source, salt) done-set. The scheme travels inside the
     // checkpoint itself; a checkpoint without it is rejected loudly. A
@@ -303,11 +291,14 @@ object BuildSketches {
             "checkpoint with unmergeable partials; resume with the " +
             "original config or rebuild from a fresh dir")
         }
+        // compared parsed, not as strings: a resume of a pre-v2 checkpoint
+        // appends the v2 encoding of the same scheme beside the untagged one
         val recorded = ck.select(col("salt_scheme")).distinct()
           .collect().map(_.getString(0))
-        require(recorded.length <= 1,
+        val schemes = recorded.map(parseScheme).distinct
+        require(schemes.length <= 1,
           s"checkpoint at $checkpointDir mixes salt schemes: ${recorded.mkString(" | ")}")
-        recorded.headOption.map(parseScheme).getOrElse(deriveScheme(input, cfg))
+        schemes.headOption.getOrElse(deriveScheme(input, cfg))
       case Some(_) =>
         throw new IllegalStateException(
           s"checkpoint at $checkpointDir predates salt-scheme tracking — " +

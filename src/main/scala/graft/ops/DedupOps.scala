@@ -422,20 +422,6 @@ object DedupOps {
       .select(col("id"), coalesce(col("root"), col("id")).as("component")), round)
   }
 
-  /** Per-bucket sizes of the banded MinHash signature table BEFORE the
-    * cap — the LSH-margin observable for scale rehearsals: the max (and
-    * tail) bucket size against `bucketCap` tells how much headroom the
-    * propose stage has before the cap starts dropping candidates.
-    * Output: (band, bucket, bsz). */
-  def bucketHistogram(df: DataFrame, tokens: Column, id: Column,
-      k: Int, bands: Int, rowsPerBand: Int): DataFrame =
-    bandSignatures(
-      df.select(id.as("id"),
-        shingleMinhashSig(tokens, k, bands * rowsPerBand).as("sig")),
-      bands, rowsPerBand)
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bsz"))
-
   /** Full near-dup dedup: candidate pairs -> components -> one kept
     * representative (min id) per component.
     * Output: (id, component, kept) — kept = (id == component). */

@@ -9,8 +9,10 @@ package graft.sketch
   * occurrences keyed by the full hash and folds each distinct hash into
   * the filter once per flush epoch — one CQF insert per DISTINCT key
   * instead of per token. Measured on the headline zipf shard workload
-  * (`KernelBench altbuild`): 40.6 vs 13.3 M inserts/s single-threaded
-  * and 728.6 vs 294.2 M/s at 32 threads.
+  * (`KernelBench altbuild`, a main last present at commit 059525a):
+  * 40.6 vs 13.3 M inserts/s single-threaded and 728.6 vs 294.2 M/s at
+  * 32 threads. perfbench's `sketch.cqf_builder_add_ns` vs
+  * `sketch.cqf_insert_ns` is today's builder-vs-direct comparison.
   *
   * The reference has no analog (its bench drives `insert` per key,
   * /root/reference/src/main.rs:53-62); this is the Spark-side map-side

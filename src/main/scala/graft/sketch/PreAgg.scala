@@ -7,7 +7,9 @@ package graft.sketch
   * [[sink]] once per flush epoch: the duplicate-heavy streams that feed
   * key sketches then pay a 2-3-instruction probe per OCCURRENCE and the
   * sketch's full insert cost only per DISTINCT key. Measured on the
-  * headline zipf workload (`KernelBench altbuild`): 2.5-3x at every
+  * headline zipf workload (`KernelBench altbuild`, a main last present
+  * at commit 059525a; perfbench's `sketch.cqf_builder_add_ns` vs
+  * `sketch.cqf_insert_ns` is today's comparison): 2.5-3x at every
   * thread count for the CQF; the same table fronts CMS (whose weighted
   * `addHash` makes the fold exact) and Bloom (bit-OR idempotent, the
   * table just suppresses repeats).
@@ -80,7 +82,8 @@ abstract class LongPreAgg extends Serializable {
     // adaptive bypass: when a full table drained with ~no duplication,
     // this stream is cardinality-dominated and the table would keep
     // paying probe+rehash+drain on top of every kernel insert (~10-16%
-    // measured, `KernelBench distinct`); route direct from then on.
+    // measured, `KernelBench distinct` at commit 059525a); route direct
+    // from then on.
     // Content is unchanged either way — the sketch sums occurrences.
     if (bypass) { sink(key, count); return }
     calls += 1

@@ -16,16 +16,15 @@ object Adaptive {
     * verify and pair append) under it: their skew is bounded by the
     * bucket cap and both sides are delta-proportional, so their static
     * plans need no runtime re-planning.
-    * Restores the caller's setting. */
-  def withoutAqe[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * Restores the caller's setting.
+    *
+    * Assumes one thread drives `spark` meanwhile: the setting is flipped
+    * on the shared session conf, so a concurrent query on the same
+    * session sees it too. Inside `foreachBatch` the batch frames run
+    * under the stream's cloned session, which does not see a flip made
+    * on the outer session. */
+  def withoutAqe[T](spark: SparkSession)(f: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled", "false")(f)
 
   /** Run `f` with AQE small-partition coalescing ON (optimization guide
     * §2.2): a state pipeline executes dozens of control queries whose
@@ -37,11 +36,19 @@ object Adaptive {
     * already exceed the advisory target, so this is scale-neutral (it
     * never splits, only merges). Restores the caller's setting after —
     * the bench session keeps coalescing OFF globally so the frozen
-    * headline-build plan stays byte-comparable across rounds. */
-  def withCoalescedShuffles[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    * headline-build plan stays byte-comparable across rounds.
+    *
+    * Same single-threaded assumption as [[withoutAqe]]: the flip is on
+    * the shared session conf, visible to concurrent queries and not to
+    * a `foreachBatch` frame running under the stream's cloned session. */
+  def withCoalescedShuffles[T](spark: SparkSession)(f: => T): T =
+    withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled", "true")(f)
+
+  /** Set `key` to `value` for the duration of `f`, then restore the
+    * caller's setting (or unset it if it had none). */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(f: => T): T = {
     val old = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
+    spark.conf.set(key, value)
     try f finally old match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

@@ -140,7 +140,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shardRows.max <= 4 * mean,
       s"skewed shard: max ${shardRows.max} vs mean $mean (${shardRows.length} shards)")
     // the fixed-salt plan for comparison: hot shards ~9x the mean
-    val fixed = BuildSketches.buildPartials(input, cfg.copy(autoSalt = false))
+    val fixed = BuildSketches.buildPartials(input, cfg, Some((Map.empty, cfg.salts)))
       .select(col("n_rows")).collect().map(_.getLong(0))
     assert(fixed.max > 3 * (fixed.sum.toDouble / fixed.length),
       "skew fixture lost its skew — tighten the test data")
@@ -374,6 +374,28 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // its partials keep the untagged parameters older versions expect
     assert(spark.read.parquet(dir).select(col("build_params")).distinct()
       .collect().map(_.getString(0)).sameElements(Array(BuildSketches.paramString(cfg))))
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+  }
+
+  test("a pre-v2 salt scheme checkpoint resumes twice to the uninterrupted answer") {
+    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
+    val full = perSource(BuildSketches.run(spark, input,
+      Files.createTempDirectory("graft_ckpt_v2ref").toString, cfg))
+    // salts 0-1 of a build by a version that recorded the scheme untagged
+    // with raw names; the first resume appends the v2 encoding beside it
+    val dir = Files.createTempDirectory("graft_ckpt_prev2").toString
+    val (map, default) = BuildSketches.deriveScheme(input, cfg)
+    val untagged = map.toSeq.sortBy(_._1).map { case (s, n) => s"$s=$n" }
+      .mkString(s"default=$default;", ",", "")
+    assert(BuildSketches.parseScheme(untagged) == ((map, default)))
+    BuildSketches.buildPartials(input
+        .withColumn("salt", BuildSketches.saltExprFor(map, default))
+        .where(col("salt") < 2).drop("salt"), cfg, Some((map, default)))
+      .withColumn("salt_scheme", lit(untagged))
+      .write.mode("append").partitionBy("salt").parquet(dir)
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+    assert(spark.read.parquet(dir).select(col("salt_scheme")).distinct().count() == 2)
     assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
   }
 

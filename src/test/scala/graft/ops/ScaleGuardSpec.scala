@@ -48,22 +48,26 @@ class ScaleGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until n).map(i => i -> find(i)).toMap
   }
 
-  private def checkCc(n: Long, edges: Seq[(Long, Long)]): Unit = {
+  /** Checks both CC paths against the oracle; returns the rounds the
+    * distributed path took. */
+  private def checkCc(n: Long, edges: Seq[(Long, Long)]): Int = {
     val nodes = (0L until n).toDF("id")
     val pairs = edges.toDF("id_a", "id_b")
     val want = unionFind(n, edges)
     // distributed large-star/small-star path (threshold 0 forces it) AND
     // the adaptive driver-side union-find path must both match the oracle
-    for (threshold <- Seq(0L, Long.MaxValue)) {
-      val got = DedupOps.connectedComponents(nodes, pairs,
+    val rounds = for (threshold <- Seq(0L, Long.MaxValue)) yield {
+      val (cc, ccRounds) = DedupOps.connectedComponentsWithRounds(nodes, pairs,
           localEdgeThreshold = threshold)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.size == want.size)
       want.foreach { case (id, root) =>
         assert(got(id) == root,
           s"node $id (threshold $threshold): got ${got(id)}, want $root")
       }
+      ccRounds
     }
+    rounds.head
   }
 
   test("connected components: 10k-node chain converges in log rounds") {
@@ -72,7 +76,10 @@ class ScaleGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = 10000L
     val perm = new scala.util.Random(7).shuffle((0L until n).toVector)
     val edges = (0 until (n - 1).toInt).map(i => (perm(i), perm(i + 1)))
-    checkCc(n, edges)
+    val rounds = checkCc(n, edges)
+    val log2n = math.ceil(math.log(n.toDouble) / math.log(2)).toInt
+    assert(rounds >= 1 && rounds <= log2n,
+      s"$rounds rounds for a $n-node chain (log2 bound $log2n)")
   }
 
   test("connected components: hot star + triangles + singletons") {
