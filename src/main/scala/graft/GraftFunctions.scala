@@ -2,6 +2,7 @@ package graft
 
 import graft.agg._
 import graft.functions._
+import graft.sketch.SketchKind
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -63,29 +64,30 @@ object GraftFunctions {
         s"argument ${i + 1} must be a numeric literal, got $other")
     }
 
+  /** `<fn>_merge_agg` for every sketch kind, `<fn>_union` for every kind
+    * but cqf (its union takes a combiner mode, so it is listed below). */
+  private def kindBuilders[S >: Null <: AnyRef](k: SketchKind[S])
+      : Seq[(String, Seq[Expression] => Expression)] =
+    (s"${k.fn}_merge_agg" -> ((a: Seq[Expression]) => SketchMergeAgg(a.head, k))) +:
+      (if (k == SketchKind.CqfKind) Nil
+       else Seq(s"${k.fn}_union" -> ((a: Seq[Expression]) => SketchUnion(a(0), a(1), k))))
+
   /** name -> builder for every function this library provides. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    SketchKind.all.flatMap(kindBuilders(_)) ++ Seq(
     // aggregates (sketch builders)
     "cqf_agg" -> (a => CqfAgg(a.head, litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1)),
-    "cqf_merge_agg" -> (a => CqfMergeAgg(a.head)),
     "cqf_agg_packed" -> (a => CqfPackedAgg(a.head, litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1)),
     "pack_ints" -> (a => PackIntsLE(a.head)),
     "hll_agg" -> (a => HllAgg(a.head, litInt(a, 1, 12))),
-    "hll_merge_agg" -> (a => HllMergeAgg(a.head)),
     "cms_agg" -> (a => CmsAgg(a.head, litInt(a, 1, 5), litInt(a, 2, 2048))),
-    "cms_merge_agg" -> (a => CmsMergeAgg(a.head)),
     "bloom_agg" -> (a => BloomAgg(a.head, litLong(a, 1, 1L << 16), litInt(a, 2, 5))),
-    "bloom_merge_agg" -> (a => BloomMergeAgg(a.head)),
     "kmv_agg" -> (a => KmvAgg(a.head, litInt(a, 1, 1024))),
     "kmv_agg_packed" -> (a => KmvPackedAgg(a.head, litInt(a, 1, 1024))),
-    "kmv_merge_agg" -> (a => KmvMergeAgg(a.head)),
     "ss_agg" -> (a => SsAgg(a.head, litInt(a, 1, 256))),
     "ss_agg_packed" -> (a => SsPackedAgg(a.head, litInt(a, 1, 256))),
-    "ss_merge_agg" -> (a => SsMergeAgg(a.head)),
     "td_agg" -> (a => TDigestAgg(a.head, litDouble(a, 1, 100.0))),
-    "td_merge_agg" -> (a => TDigestMergeAgg(a.head)),
     "kll_agg" -> (a => KllAgg(a.head, litInt(a, 1, 200))),
-    "kll_merge_agg" -> (a => KllMergeAgg(a.head)),
     // probes
     "cqf_count" -> (a => CqfCount(a(0), a(1))),
     "cqf_contains" -> (a => CqfContains(a(0), a(1))),
@@ -102,31 +104,24 @@ object GraftFunctions {
     "cqf_items" -> (a => CqfItems(a.head)),
     "cqf_zip_items" -> (a => CqfZipItems(a(0), a(1))),
     "hll_estimate" -> (a => HllEstimate(a.head)),
-    "hll_union" -> (a => HllUnion(a(0), a(1))),
     "cms_estimate" -> (a => CmsEstimate(a(0), a(1))),
     "cms_total" -> (a => CmsTotal(a.head)),
-    "cms_union" -> (a => CmsUnion(a(0), a(1))),
     "kmv_distinct" -> (a => KmvDistinct(a.head)),
     "kmv_size" -> (a => KmvSize(a.head)),
     "kmv_is_exact" -> (a => KmvIsExact(a.head)),
     "kmv_sample" -> (a => KmvSample(a.head, litInt(a, 1, 10))),
-    "kmv_union" -> (a => KmvUnion(a(0), a(1))),
     "kmv_jaccard" -> (a => KmvJaccard(a(0), a(1))),
     "ss_topk" -> (a => SsTopk(a.head, litInt(a, 1, 10))),
     "ss_estimate" -> (a => SsEstimate(a(0), a(1))),
     "ss_total" -> (a => SsTotal(a.head)),
     "ss_offset" -> (a => SsOffset(a.head)),
-    "ss_union" -> (a => SsUnion(a(0), a(1))),
     "td_quantile" -> (a => TdQuantile(a(0), a(1))),
     "td_cdf" -> (a => TdCdf(a(0), a(1))),
-    "td_union" -> (a => TdUnion(a(0), a(1))),
     "kll_quantile" -> (a => KllQuantile(a(0), a(1))),
     "kll_rank" -> (a => KllRank(a(0), a(1))),
     "kll_n" -> (a => KllN(a.head)),
-    "kll_union" -> (a => KllUnion(a(0), a(1))),
     "bloom_might_contain" -> (a => BloomMightContain(a(0), a(1))),
     "bloom_fpp" -> (a => BloomFpp(a.head)),
-    "bloom_union" -> (a => BloomUnion(a(0), a(1))),
     "wang_hash" -> (a => WangHashExpr(a(0), if (a.length > 1) a(1) else Literal(64))),
     "wang_unhash" -> (a => WangUnhashExpr(a(0), if (a.length > 1) a(1) else Literal(64))),
     // vector / text pipeline expressions

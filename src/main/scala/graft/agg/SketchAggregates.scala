@@ -134,9 +134,9 @@ abstract class SketchAggBase[S >: Null <: AnyRef]
   }
 }
 
-/** Base for *_merge_agg: aggregates a BinaryType column of serialized
-  * sketches by kernel merge — the second stage of salted/two-level builds
-  * and of checkpoint resume.
+/** `<fn>_merge_agg` for every [[SketchKind]]: aggregates a BinaryType
+  * column of serialized sketches by kernel merge — the second stage of
+  * salted/two-level builds and of checkpoint resume.
   *
   * The aggregation buffer starts as `null` ("no sketch seen yet") and a
   * null buffer serializes as a ZERO-LENGTH byte array, which deserializes
@@ -144,43 +144,52 @@ abstract class SketchAggBase[S >: Null <: AnyRef]
   * therefore contributes nothing — it must NOT serialize a default-shaped
   * kernel, because that placeholder would crash the final merge whenever
   * the real sketches carry non-default parameters (precision, width, k,
-  * hash bits...). Only `eval` over a whole-null group materializes a
-  * default empty sketch, so the output column stays non-null. */
-abstract class SketchMergeAggBase[S >: Null <: AnyRef]
-    extends TypedImperativeAggregate[S] {
-  def child: Expression
+  * hash bits...). Only `eval` over a whole-null group materializes
+  * `kind.empty()`, so the output column stays non-null. */
+case class SketchMergeAgg[S >: Null <: AnyRef](
+    child: Expression,
+    kind: SketchKind[S],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0
+) extends TypedImperativeAggregate[S] {
+  override def prettyName: String = s"${kind.fn}_merge_agg"
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
-  protected def fromBytes(bytes: Array[Byte]): S
-  protected def toBytes(s: S): Array[Byte]
-  protected def mergeKernels(a: S, b: S): S
-  protected def emptyKernel(): S
+  // the name already says the kind, so plans print only the SQL arguments
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
 
-  final override def createAggregationBuffer(): S = null
-  final override def update(buffer: S, input: InternalRow): S = {
+  override def createAggregationBuffer(): S = null
+  override def update(buffer: S, input: InternalRow): S = {
     val v = child.eval(input)
     if (v == null) buffer
     else {
       val bytes = v.asInstanceOf[Array[Byte]]
       if (bytes.isEmpty) buffer
-      else if (buffer == null) fromBytes(bytes)
-      else mergeKernels(buffer, fromBytes(bytes))
+      else if (buffer == null) kind.read(bytes)
+      else kind.mergeInPlace(buffer, kind.read(bytes))
     }
   }
-  final override def merge(a: S, b: S): S =
-    if (a == null) b else if (b == null) a else mergeKernels(a, b)
-  final override def eval(buffer: S): Any =
-    toBytes(if (buffer == null) emptyKernel() else buffer)
-  final override def serialize(buffer: S): Array[Byte] =
-    if (buffer == null) Array.emptyByteArray else toBytes(buffer)
-  final override def deserialize(bytes: Array[Byte]): S =
-    if (bytes.isEmpty) null else fromBytes(bytes)
+  override def merge(a: S, b: S): S =
+    if (a == null) b else if (b == null) a else kind.mergeInPlace(a, b)
+  override def eval(buffer: S): Any =
+    kind.write(if (buffer == null) kind.empty() else buffer)
+  override def serialize(buffer: S): Array[Byte] =
+    if (buffer == null) Array.emptyByteArray else kind.write(buffer)
+  override def deserialize(bytes: Array[Byte]): S =
+    if (bytes.isEmpty) null else kind.read(bytes)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a binary sketch column, got $other")
   }
+  override def withNewMutableAggBufferOffset(o: Int): SketchMergeAgg[S] =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SketchMergeAgg[S] =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SketchMergeAgg[S] =
+    copy(child = c.head)
 }
 
 // ---------------------------------------------------------------- CQF
@@ -267,22 +276,6 @@ case class CqfPackedAgg(
     copy(child = c.head)
 }
 
-case class CqfMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[Cqf] {
-  override def prettyName: String = "cqf_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  protected def toBytes(s: Cqf): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: Cqf, b: Cqf): Cqf = a.mergeInPlace(b)
-  protected def emptyKernel(): Cqf = Cqf(4, 64)
-  override def withNewMutableAggBufferOffset(o: Int): CqfMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CqfMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CqfMergeAgg =
-    copy(child = c.head)
-}
-
 // ---------------------------------------------------------------- HLL
 
 case class HllAgg(
@@ -304,22 +297,6 @@ case class HllAgg(
   override def withNewMutableAggBufferOffset(o: Int): HllAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): HllAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllAgg =
-    copy(child = c.head)
-}
-
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[HllSketch] {
-  override def prettyName: String = "hll_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
-  protected def toBytes(s: HllSketch): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: HllSketch, b: HllSketch): HllSketch = a.mergeInPlace(b)
-  protected def emptyKernel(): HllSketch = HllSketch()
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllMergeAgg =
     copy(child = c.head)
 }
 
@@ -351,22 +328,6 @@ case class CmsAgg(
     copy(child = c.head)
 }
 
-case class CmsMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[CountMinSketch] {
-  override def prettyName: String = "cms_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(bytes)
-  protected def toBytes(s: CountMinSketch): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: CountMinSketch, b: CountMinSketch): CountMinSketch = a.mergeInPlace(b)
-  protected def emptyKernel(): CountMinSketch = CountMinSketch()
-  override def withNewMutableAggBufferOffset(o: Int): CmsMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsMergeAgg =
-    copy(child = c.head)
-}
-
 // ---------------------------------------------------------------- Bloom
 
 case class BloomAgg(
@@ -392,22 +353,6 @@ case class BloomAgg(
   override def withNewMutableAggBufferOffset(o: Int): BloomAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): BloomAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomAgg =
-    copy(child = c.head)
-}
-
-case class BloomMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[BloomSketch] {
-  override def prettyName: String = "bloom_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): BloomSketch = BloomSketch.deserialize(bytes)
-  protected def toBytes(s: BloomSketch): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: BloomSketch, b: BloomSketch): BloomSketch = a.mergeInPlace(b)
-  protected def emptyKernel(): BloomSketch = BloomSketch()
-  override def withNewMutableAggBufferOffset(o: Int): BloomMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomMergeAgg =
     copy(child = c.head)
 }
 
@@ -476,22 +421,6 @@ case class SsPackedAgg(
     copy(child = c.head)
 }
 
-case class SsMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[FrequentItems] {
-  override def prettyName: String = "ss_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  protected def toBytes(s: FrequentItems): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: FrequentItems, b: FrequentItems): FrequentItems = a.mergeInPlace(b)
-  protected def emptyKernel(): FrequentItems = FrequentItems()
-  override def withNewMutableAggBufferOffset(o: Int): SsMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SsMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SsMergeAgg =
-    copy(child = c.head)
-}
-
 // ---------------------------------------------------------------- KMV
 
 /** Bottom-k distinct sketch aggregate: exact distinct + full sample below
@@ -557,22 +486,6 @@ case class KmvPackedAgg(
     copy(child = c.head)
 }
 
-case class KmvMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[KmvSketch] {
-  override def prettyName: String = "kmv_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-  protected def toBytes(s: KmvSketch): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: KmvSketch, b: KmvSketch): KmvSketch = a.mergeInPlace(b)
-  protected def emptyKernel(): KmvSketch = KmvSketch()
-  override def withNewMutableAggBufferOffset(o: Int): KmvMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvMergeAgg =
-    copy(child = c.head)
-}
-
 // ---------------------------------------------------------------- t-digest
 
 case class TDigestAgg(
@@ -592,22 +505,6 @@ case class TDigestAgg(
   override def withNewMutableAggBufferOffset(o: Int): TDigestAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): TDigestAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TDigestAgg =
-    copy(child = c.head)
-}
-
-case class TDigestMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[TDigest] {
-  override def prettyName: String = "td_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-  protected def toBytes(s: TDigest): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: TDigest, b: TDigest): TDigest = a.mergeInPlace(b)
-  protected def emptyKernel(): TDigest = TDigest()
-  override def withNewMutableAggBufferOffset(o: Int): TDigestMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TDigestMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TDigestMergeAgg =
     copy(child = c.head)
 }
 
@@ -633,18 +530,3 @@ case class KllAgg(
     copy(child = c.head)
 }
 
-case class KllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends SketchMergeAggBase[KllSketch] {
-  override def prettyName: String = "kll_merge_agg"
-  protected def fromBytes(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  protected def toBytes(s: KllSketch): Array[Byte] = s.serialize()
-  protected def mergeKernels(a: KllSketch, b: KllSketch): KllSketch = a.mergeInPlace(b)
-  protected def emptyKernel(): KllSketch = KllSketch()
-  override def withNewMutableAggBufferOffset(o: Int): KllMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllMergeAgg =
-    copy(child = c.head)
-}

@@ -288,12 +288,24 @@ object SketchMetaExpr {
     .add("err_bound", DoubleType)
 }
 
-/** Union of two CQFs with a selectable per-hash combine — the SQL surface
-  * of the reference's parameterizable merge (CqfMergeClosure,
-  * /root/reference/src/cqf.rs:202-213, 336-474):
-  * 'sum' (default) adds counts, 'max' keeps the pointwise maximum
-  * (absent = 0), 'min' keeps the pointwise minimum (= multiset
-  * intersection). Arbitrary Scala closures go through Cqf.mergeBy. */
+/** `<fn>_union` for every [[SketchKind]] but cqf (whose [[CqfUnion]]
+  * takes a combiner mode): the union of two serialized sketches of one
+  * kind, by the kind's non-mutating `union`, so the cached operands
+  * stay valid for the next row. */
+case class SketchUnion[S >: Null <: AnyRef](left: Expression, right: Expression,
+    kind: SketchKind[S])
+    extends BinaryExpression with SketchCache2[S] with BinaryBytesCodegen {
+  override def prettyName: String = s"${kind.fn}_union"
+  override def dataType: DataType = BinaryType
+  // the name already says the kind, so plans print only the SQL arguments
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+  protected def parse(bytes: Array[Byte]): S = kind.read(bytes)
+  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    kind.write(kind.union(cachedLeft(a), cachedRight(b)))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchUnion[S] =
+    copy(left = l, right = r)
+}
+
 /** Per-key combine of two CQFs under a NAMED combiner — the SQL surface
   * of the reference's closure-taking merge_by
   * (/root/reference/src/cqf.rs:202-213). Built-in modes: 'sum' (kernel
@@ -509,17 +521,6 @@ case class HllEstimate(child: Expression)
   override protected def withNewChildInternal(c: Expression): HllEstimate = copy(child = c)
 }
 
-case class HllUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[HllSketch] with BinaryBytesCodegen {
-  override def prettyName: String = "hll_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HllUnion =
-    copy(left = l, right = r)
-}
-
 // ------------------------------------------------------------------ CMS
 
 case class CmsEstimate(left: Expression, right: Expression)
@@ -552,17 +553,6 @@ case class CmsTotal(child: Expression)
   override def nullSafeEval(sk: Any): Any =
     cached(sk.asInstanceOf[Array[Byte]]).total
   override protected def withNewChildInternal(c: Expression): CmsTotal = copy(child = c)
-}
-
-case class CmsUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[CountMinSketch] with BinaryBytesCodegen {
-  override def prettyName: String = "cms_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsUnion =
-    copy(left = l, right = r)
 }
 
 // ------------------------------------------------------------------ t-digest
@@ -619,19 +609,6 @@ case class TdCdf(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-case class TdUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[TDigest] with BinaryBytesCodegen {
-  override def prettyName: String = "td_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-  // mergeInPlace compresses `other` in place — an idempotent
-  // canonicalization, safe on the cached right operand
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TdUnion =
-    copy(left = l, right = r)
-}
-
 // ------------------------------------------------------------------ KLL
 
 case class KllQuantile(left: Expression, right: Expression)
@@ -668,17 +645,6 @@ case class KllN(child: Expression)
   override protected def withNewChildInternal(c: Expression): KllN = copy(child = c)
 }
 
-case class KllUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[KllSketch] with BinaryBytesCodegen {
-  override def prettyName: String = "kll_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllUnion =
-    copy(left = l, right = r)
-}
-
 // ------------------------------------------------------------------ Bloom
 
 case class BloomMightContain(left: Expression, right: Expression)
@@ -711,17 +677,6 @@ case class BloomFpp(child: Expression)
   override def nullSafeEval(sk: Any): Any =
     cached(sk.asInstanceOf[Array[Byte]]).expectedFpp
   override protected def withNewChildInternal(c: Expression): BloomFpp = copy(child = c)
-}
-
-case class BloomUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[BloomSketch] with BinaryBytesCodegen {
-  override def prettyName: String = "bloom_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): BloomSketch = BloomSketch.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomUnion =
-    copy(left = l, right = r)
 }
 
 // --------------------------------------------------- reference interop
@@ -923,28 +878,11 @@ case class SsOffset(child: Expression)
   override protected def withNewChildInternal(c: Expression): SsOffset = copy(child = c)
 }
 
-case class SsUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[FrequentItems] with BinaryBytesCodegen {
-  override def prettyName: String = "ss_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).copied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SsUnion =
-    copy(left = l, right = r)
-}
-
 // ------------------------------------------------------------------ KMV
 
-private[functions] trait KmvUnaryProbe extends SketchCache[KmvSketch] {
-  self: UnaryExpression =>
+private[functions] trait KmvUnaryProbe extends SketchCache[KmvSketch]
+    with SketchBytesInput { self: UnaryExpression =>
   protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (child.dataType != BinaryType)
-      TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${child.dataType}")
-    else TypeCheckSuccess
-  }
 }
 
 /** Distinct-count readout of a bottom-k sketch: exact below capacity,
@@ -1014,35 +952,14 @@ object KmvSample {
     .add("key_str", StringType, nullable = true)
 }
 
-case class KmvUnion(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[KmvSketch] with BinaryBytesCodegen {
-  override def prettyName: String = "kmv_union"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-  // shallowCopied, not copied: KMV merge only REASSIGNS the target's
-  // array fields (fresh outputs, inputs read-only), so the cached
-  // operand needs a fresh wrapper object, not clones of up to three
-  // k-length arrays that the merge would immediately discard
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).shallowCopied.mergeInPlace(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvUnion =
-    copy(left = l, right = r)
-}
-
 /** Bottom-k Jaccard resemblance between two kmv sketch columns: exact
   * while both sides are exact (never evicted), else within ~O(1/sqrt(k)). */
 case class KmvJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache2[KmvSketch] {
+    extends BinaryExpression with CodegenFallback with SketchCache2[KmvSketch]
+    with SketchBytesInput {
   override def prettyName: String = "kmv_jaccard"
   override def dataType: DataType = DoubleType
   protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (left.dataType != BinaryType || right.dataType != BinaryType)
-      TypeCheckFailure(
-        s"$prettyName requires two binary sketch columns, got ${left.dataType}, ${right.dataType}")
-    else TypeCheckSuccess
-  }
   override def nullSafeEval(a: Any, b: Any): Any =
     cachedLeft(a.asInstanceOf[Array[Byte]])
       .jaccard(cachedRight(b.asInstanceOf[Array[Byte]]))

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.api
+import graft.sketch.SketchKind
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -115,18 +116,6 @@ object BuildSketches {
       else partials.withColumn("build_params",
         concat(col("build_params"), lit(FlatTag))).write
     writer.mode(SaveMode.Append).parquet(checkpointDir)
-  }
-
-  private def mergeAgg(cfg: Config, sketch: Column): Column = cfg.kind match {
-    case "cqf" => api.cqf_merge_agg(sketch)
-    case "hll" => api.hll_merge_agg(sketch)
-    case "cms" => api.cms_merge_agg(sketch)
-    case "bloom" => api.bloom_merge_agg(sketch)
-    case "tdigest" => api.td_merge_agg(sketch)
-    case "kll" => api.kll_merge_agg(sketch)
-    case "ss" => api.ss_merge_agg(sketch)
-    case "kmv" => api.kmv_merge_agg(sketch)
-    case other => throw new IllegalArgumentException(s"unknown sketch kind $other")
   }
 
   /** Per-source shard counts: the total shard budget (cfg.salts x
@@ -348,7 +337,8 @@ object BuildSketches {
       "the merged counts would silently double; rebuild from a fresh dir")
     uniq.groupBy(col("source"))
       .agg(
-        mergeAgg(cfg, col("sketch_bytes")).as("sketch_bytes"),
+        call_function(s"${SketchKind.named(cfg.kind).fn}_merge_agg",
+          col("sketch_bytes")).as("sketch_bytes"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_tokens")).as("n_tokens"))
   }

@@ -397,12 +397,30 @@ object AnnOps {
       .write.mode(SaveMode.Append).parquet(metaPath(indexDir))
     }
 
+  /** Most probe rows (query rows x nProbe, each carrying its query
+    * vector) one [[ivfTopKFromIndex]] call collects to the driver: 2^18,
+    * e.g. 16,384 queries at nProbe = 16, about 0.8 GB of probe vectors at
+    * 384 dimensions. Serve larger query sets in batches. */
+  final val MaxServeProbes = 1 << 18
+
+  /** Collect the probe set through `limit(max + 1)`, so an oversized
+    * query batch fails after at most `max + 1` rows reach the driver
+    * instead of exhausting its memory. */
+  private[ops] def collectServeProbes(probePlan: DataFrame, max: Int): Array[Row] = {
+    val rows = probePlan.limit(max + 1).collect()
+    require(rows.length <= max,
+      s"ivfTopKFromIndex: the query batch needs more than $max probe rows " +
+        "(query rows x nProbe); serve it in smaller batches")
+    rows
+  }
+
   /** Serve top-k queries from a PERSISTED index ([[buildIvfIndex]]).
     * The stored codebook broadcasts into the probe ranking; the
     * assignment read carries an explicit cell filter, so parquet
     * partition pruning touches only the probed cells' files. With
     * nProbe = nCells the answer equals brute force exactly (the gate
-    * query pins this against the brute-force oracle). */
+    * query pins this against the brute-force oracle). A query batch that
+    * needs more than [[MaxServeProbes]] probe rows fails. */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, queryId: Column, queryVec: Column,
       k: Int, nProbe: Int = 4): DataFrame = {
@@ -430,8 +448,8 @@ object AnnOps {
       .toDF("cell", "centroid")
     val qw = Window.partitionBy(col("query_id"))
       .orderBy(col("qsim").desc, col("cell").asc)
-    // the probe set is query-batch-sized (queries x nProbe) by the serve
-    // contract, so materialize it ONCE on the driver and serve both
+    // the probe set is query-batch-sized (queries x nProbe, at most
+    // MaxServeProbes rows), so materialize it ONCE on the driver and serve both
     // consumers (the literal cell filter and the broadcast join side)
     // from the local rows — leaving it lazy would execute the query-side
     // scan + centroid ranking twice, once for the collect and once
@@ -447,7 +465,9 @@ object AnnOps {
     // control action: query-batch-sized by the serve contract — AQE off
     // saves its re-planning jobs; the serve join itself stays lazy and
     // runs under the caller's conf
-    val probeRows = graft.util.Adaptive.withoutAqe(spark) { probePlan.collect() }
+    val probeRows = graft.util.Adaptive.withoutAqe(spark) {
+      collectServeProbes(probePlan, MaxServeProbes)
+    }
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probePlan.schema)
     // literal cell filter for partition pruning — the join alone would

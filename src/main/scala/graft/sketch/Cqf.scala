@@ -618,11 +618,8 @@ final class Cqf private (
     var q = math.max(_quotientBits, other._quotientBits)
     val needed = _occupiedSlots + other._occupiedSlots
     while ((LoadFactor * (1L << q)).toLong < needed && q < hashBits) q += 1
-    var merged: Cqf = null
-    while (merged == null) {
-      try merged = Cqf.mergedFrom(this, other, q, hashBits, _invertible, outCompact)
-      catch { case FullException => q += 1; Cqf.qCapCheck(q, hashBits) }
-    }
+    val merged = Cqf.growing(q, hashBits)(
+      Cqf.mergedFrom(this, other, _, hashBits, _invertible, outCompact))
     _quotientBits = merged._quotientBits
     _compact = outCompact
     blocks = merged.blocks
@@ -635,11 +632,11 @@ final class Cqf private (
 
   /** Intersection: min count on hashes present in both. */
   def intersect(other: Cqf): Cqf =
-    Cqf.zipOp(this, other, (a, b) => if (a > 0 && b > 0) math.min(a, b) else 0L)
+    Cqf.mergeBy(this, other, (a, b) => if (a > 0 && b > 0) math.min(a, b) else 0L)
 
   /** Difference: saturating subtract other's counts from this's. */
   def diff(other: Cqf): Cqf =
-    Cqf.zipOp(this, other, (a, b) => math.max(a - b, 0L))
+    Cqf.mergeBy(this, other, (a, b) => math.max(a - b, 0L))
 
   // ---- serialization --------------------------------------------------
 
@@ -672,14 +669,28 @@ final class Cqf private (
 
 object Cqf {
 
-  /** Shared cap for the FullException q-escalation loops (mergeInPlace,
-    * mergedFrom, importRefLayout): past hashBits (or 62) another retry
-    * cannot help — fromSortedHashes would derive a negative remainder
-    * width / wrapped slot count — so fail with grow()'s clean error
-    * instead of looping or allocating garbage. */
-  private[sketch] def qCapCheck(q: Int, hashBits: Int): Unit =
-    if (q > hashBits || q > 62) throw new IllegalStateException(
-      s"CQF cannot fit content: quotientBits=$q exceeds hashBits=$hashBits (cap 62)")
+  /** The capacity-retry loop of every rebuild (mergeInPlace,
+    * fromSortedHashesGrowing, mergeBy, importRefLayout): `build` at
+    * `startQ`, and on a capacity miss (the private FullException) again
+    * one quotient bit larger. Any other failure is a real bug and
+    * escapes. Past hashBits (or 62) another retry cannot help —
+    * fromSortedHashes would derive a negative remainder width / wrapped
+    * slot count — so fail with a clean error instead of looping or
+    * allocating garbage. */
+  private def growing(startQ: Int, hashBits: Int)(build: Int => Cqf): Cqf = {
+    var q = startQ
+    var res: Cqf = null
+    while (res == null) {
+      try res = build(q)
+      catch {
+        case FullException =>
+          q += 1
+          if (q > hashBits || q > 62) throw new IllegalStateException(
+            s"CQF cannot fit content: quotientBits=$q exceeds hashBits=$hashBits (cap 62)")
+      }
+    }
+    res
+  }
   private final val HeaderLongs = 4
   private[sketch] final val Magic = 0x3146514354465247L // "GRFTCQF1"
   /** 95% load cap, as the reference (/root/reference/src/cqf.rs:81). */
@@ -774,10 +785,6 @@ object Cqf {
       new Array[Long](numBlocksFor(quotientBits) * strideOf(compact)), 0L)
   }
 
-  /** Build from an ascending (hash, count) stream — the sequential
-    * append path (no per-entry rank/select), public for batched builders
-    * that pre-sort their input. Throws when the content does not fit at
-    * `quotientBits` (callers retry with a larger q). */
   /** Counts must be POSITIVE: the append cursor skips zero-count entries,
     * so a zero-count item that happens to be the LAST of its quotient run
     * would leave the run's occupied bit set with no runend (silent
@@ -790,26 +797,17 @@ object Cqf {
       e
     }
 
-  def fromSortedHashesPublic(items: Iterator[(Long, Long)],
-      quotientBits: Int, hashBits: Int, invertible: Boolean,
-      compact: Boolean): Cqf =
-    fromSortedHashes(positiveCounts(items), quotientBits, hashBits, invertible, compact)
-
-  /** [[fromSortedHashesPublic]] with the bounded capacity-retry loop the
-    * kernel uses internally: ONLY a capacity miss (the private
-    * FullException) escalates q; any other failure is a real bug and
-    * escapes immediately. `mkItems` must restart the stream per attempt. */
+  /** Build from an ascending (hash, count) stream — the sequential
+    * append path (no per-entry rank/select), public for batched builders
+    * that pre-sort their input — starting at `startQuotientBits` and
+    * growing through [[growing]]: ONLY a capacity miss escalates q; any
+    * other failure is a real bug and escapes immediately. `mkItems` must
+    * restart the stream per attempt. */
   def fromSortedHashesGrowing(mkItems: () => Iterator[(Long, Long)],
       startQuotientBits: Int, hashBits: Int, invertible: Boolean,
-      compact: Boolean): Cqf = {
-    var q = startQuotientBits
-    var res: Cqf = null
-    while (res == null) {
-      try res = fromSortedHashes(positiveCounts(mkItems()), q, hashBits, invertible, compact)
-      catch { case FullException => q += 1; qCapCheck(q, hashBits) }
-    }
-    res
-  }
+      compact: Boolean): Cqf =
+    growing(startQuotientBits, hashBits)(
+      fromSortedHashes(positiveCounts(mkItems()), _, hashBits, invertible, compact))
 
   /** Build from an ascending (hash, count) stream. */
   private[sketch] def fromSortedHashes(items: Iterator[(Long, Long)],
@@ -966,16 +964,8 @@ object Cqf {
     val minQ = math.max(4, if (compact) a.hashBits - 32 else 4)
     var q = math.max(6, minQ)
     while ((LoadFactor * (1L << q)).toLong < 2L * m + 2 && q < a.hashBits) q += 1
-    var res: Cqf = null
-    while (res == null) {
-      try res = fromSortedHashes(src, q, a.hashBits, inv, compact)
-      catch { case FullException => q += 1; qCapCheck(q, a.hashBits) }
-    }
-    res
+    growing(q, a.hashBits)(fromSortedHashes(src, _, a.hashBits, inv, compact))
   }
-
-  /** Back-compat alias for [[mergeBy]]. */
-  def zipOp(a: Cqf, b: Cqf, op: (Long, Long) => Long): Cqf = mergeBy(a, b, op)
 
   // ---- reference byte-layout interop ---------------------------------
   //
@@ -1225,13 +1215,8 @@ object Cqf {
       def hasNext: Boolean = idx < mm
       def next(): (Long, Long) = { val t = (hs(idx), cs(idx)); idx += 1; t }
     }
-    var myQ = math.max(4, if (compact) hashBits - 32 else math.min(q, hashBits - 1))
-    var res: Cqf = null
-    while (res == null) {
-      try res = fromSortedHashes(src, myQ, hashBits, invertible, compact)
-      catch { case FullException => myQ += 1; qCapCheck(myQ, hashBits) }
-    }
-    res
+    growing(math.max(4, if (compact) hashBits - 32 else math.min(q, hashBits - 1)),
+      hashBits)(fromSortedHashes(src, _, hashBits, invertible, compact))
   }
 
   def deserialize(bytes: Array[Byte]): Cqf = {

@@ -1,7 +1,5 @@
 package graft.sketch
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Kind-agnostic sketch-state metrics, dispatched on the 8-byte magic
   * header every graft sketch serialization starts with. This is the
   * "sketch-state metrics" half of the build contract (BASELINE.json
@@ -33,23 +31,8 @@ final case class SketchMetaInfo(
 
 object SketchMeta {
 
-  /** Sniff the serialized kind without parsing ("cqf" | "hll" | "cms" |
-    * "bloom" | "tdigest" | "kll"), or None for anything else (including
-    * the reference's headerless mmap image — use cqf_from_ref for that). */
-  def kindOf(bytes: Array[Byte]): Option[String] = {
-    if (bytes == null || bytes.length < 8) return None
-    ByteBuffer.wrap(bytes, 0, 8).order(ByteOrder.LITTLE_ENDIAN).getLong() match {
-      case Cqf.Magic => Some("cqf")
-      case HllSketch.Magic => Some("hll")
-      case CountMinSketch.Magic => Some("cms")
-      case BloomSketch.Magic => Some("bloom")
-      case TDigest.Magic => Some("tdigest")
-      case KllSketch.Magic => Some("kll")
-      case FrequentItems.Magic => Some("ss")
-      case KmvSketch.Magic => Some("kmv")
-      case _ => None
-    }
-  }
+  /** The serialized kind's name, by [[SketchKind.of]]. */
+  def kindOf(bytes: Array[Byte]): Option[String] = SketchKind.of(bytes).map(_.name)
 
   /** Parse and measure. Throws IllegalArgumentException on an
     * unrecognized header (the SQL surface maps that to a clean error). */

@@ -265,6 +265,18 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e3.getMessage.contains("band"))
   }
 
+  test("serve bound: an oversized probe set fails before the driver pulls it") {
+    val ten = spark.range(10).toDF("cell")
+    assert(AnnOps.collectServeProbes(ten, 10).length == 10)
+    // 2^40 rows would never fit on the driver: only max + 1 are pulled
+    val e = intercept[IllegalArgumentException] {
+      AnnOps.collectServeProbes(spark.range(1L << 40).toDF("cell"), 9)
+    }
+    assert(e.getMessage.contains("more than 9 probe rows"), e.getMessage)
+    // the gate's serve batches (10 queries x 16 cells) sit far below it
+    assert(AnnOps.MaxServeProbes >= 10 * 16)
+  }
+
   test("empty / all-null corpus rejects loudly") {
     val idx = Files.createTempDirectory("ann_idx_empty").toString
     val e = intercept[IllegalArgumentException] {
