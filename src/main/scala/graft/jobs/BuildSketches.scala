@@ -5,6 +5,7 @@ import graft.sketch.SketchKind
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Checkpoint-resumable distributed sketch build (SURVEY.md §7.2 M3,
   * north_rule: "resumable from checkpoint with per-partition lineage +
@@ -28,6 +29,19 @@ import org.apache.spark.sql.functions._
   * Because sketches are merge-order-invariant, a resumed build yields
   * byte-identical per-source CQF contents to an uninterrupted one
   * (asserted in BuildSketchesSpec).
+  *
+  * Read-back: stage 2 reads the checkpoint under the declared
+  * [[Stage2Schema]] ([[graft.util.ParquetState.read]]: no inference job;
+  * a checkpoint lacking a declared column is rejected). One driver
+  * collect of the lineage `(source, salt, input_hash)` — one row per
+  * partial, at most the sum of the per-source shard counts per append —
+  * rejects shards whose appends diverge, and stage 2 runs the dedupe
+  * shuffle only when it shows a shard appended twice.
+  *
+  * Jobs: a fresh build plus one action on its result runs six — salt
+  * counts (one, no exchange), stage 1 (shuffle and write), the lineage
+  * collect, and stage 2 (shuffle and result). A resume adds the
+  * inferred checkpoint read and its kind, parameter and scheme checks.
   */
 object BuildSketches {
 
@@ -121,14 +135,23 @@ object BuildSketches {
   /** Per-source shard counts: the total shard budget (cfg.salts x
     * #sources) split proportionally to observed per-source row counts,
     * clamped to [1, 4096]. Deterministic for a given input, so the
-    * resume anti-join recomputes identical salts. */
+    * resume anti-join recomputes identical salts. One Spark job with no
+    * exchange: each input partition counts its sources and the driver
+    * merges one count map per partition. */
   def saltCounts(df: DataFrame, cfg: Config): Map[String, Int] = {
     // a NULL source is legal input: it cannot ride the scheme map (a null
     // map key breaks typedLit and the scheme sort) so it takes the default
     // shard count via the saltExprFor coalesce — same as any source first
     // seen after the scheme was derived
-    val counts = df.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      .collect().flatMap(r => Option(r.getString(0)).map(_ -> r.getLong(1))).toMap
+    val perPartition = df.select(col("source")).rdd.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashMap.empty[String, Long]
+      rows.foreach { r =>
+        val s = r.getString(0)
+        if (s != null) seen(s) = seen.getOrElse(s, 0L) + 1
+      }
+      Iterator.single(seen)
+    }.collect()
+    val counts = perPartition.flatten.groupMapReduce(_._1)(_._2)(_ + _)
     val total = math.max(1L, counts.values.sum)
     val budget = cfg.salts.toDouble * counts.size
     counts.map { case (s, n) =>
@@ -186,6 +209,17 @@ object BuildSketches {
   private[jobs] def deriveScheme(df: DataFrame, cfg: Config): (Map[String, Int], Int) =
     (saltCounts(df, cfg), cfg.salts)
 
+  /** The partial columns stage 2 reads back from the checkpoint — the
+    * declared schema of [[graft.util.ParquetState.read]], so the
+    * read-back runs no schema-inference job. */
+  private[jobs] val Stage2Schema: StructType = StructType(Seq(
+    StructField("source", StringType),
+    StructField("salt", IntegerType),
+    StructField("sketch_bytes", BinaryType),
+    StructField("n_rows", LongType),
+    StructField("n_tokens", LongType),
+    StructField("input_hash", LongType)))
+
   /** Stage 1: per-(source, salt) sketch partials with lineage columns
     * (F4 fixture schema). `scheme` overrides the salt scheme — the
     * resume path passes the CHECKPOINT's recorded scheme so a
@@ -213,29 +247,55 @@ object BuildSketches {
         // check for resume (same rows ⇒ same hash); xor cannot overflow
         // under ANSI mode, unlike sum
         expr("bit_xor(xxhash64(doc_id, n_tok))").as("input_hash"))
-      .withColumn("sketch_kind", lit(cfg.kind))
-      // the kind's build parameters — resume rejects config drift up front
-      .withColumn("build_params", lit(paramString(cfg)))
-      // the scheme every row was sharded under — resume validates/reuses it
-      .withColumn("salt_scheme", lit(schemeString(saltMap, saltDefault)))
-      // per-partial sketch-state metrics (load factor, counts, error
-      // bound at the current state) — the monitoring half of the
-      // north-rule lineage contract; resume reads never depend on it,
-      // so pre-metric checkpoints stay resumable
-      .withColumn("sketch_state", graft.api.sketch_meta(col("sketch_bytes")))
+      // the lineage columns in ONE projection (each withColumn re-analyzes
+      // the whole plan)
+      .select(Stage2Schema.fieldNames.map(col).toIndexedSeq ++ Seq(
+        lit(cfg.kind).as("sketch_kind"),
+        // the kind's build parameters — resume rejects config drift up front
+        lit(paramString(cfg)).as("build_params"),
+        // the scheme every row was sharded under — resume validates/reuses it
+        lit(schemeString(saltMap, saltDefault)).as("salt_scheme"),
+        // per-partial sketch-state metrics (load factor, counts, error
+        // bound at the current state) — the monitoring half of the
+        // north-rule lineage contract; resume reads never depend on it,
+        // so pre-metric checkpoints stay resumable
+        graft.api.sketch_meta(col("sketch_bytes")).as("sketch_state")): _*)
   }
 
   /** Run (or resume) the build. Returns the per-source final sketches:
-    * (source, sketch_bytes, n_rows, n_tokens). */
+    * (source, sketch_bytes, n_rows, n_tokens).
+    *
+    * `run` itself runs the salt-count, stage-1 and lineage jobs, each
+    * under a `build[<kind>] <stage>` job description, and restores the
+    * caller's description on every exit path; stage 2 runs at the
+    * caller's action under the caller's description. A fresh build plus
+    * one action on the result is six Spark jobs. */
   def run(spark: SparkSession, input: DataFrame, checkpointDir: String,
       cfg: Config = Config()): DataFrame = {
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try runImpl(spark, input, checkpointDir, cfg)
+    finally sc.setJobDescription(callerDescription)
+  }
+
+  private def runImpl(spark: SparkSession, input: DataFrame, checkpointDir: String,
+      cfg: Config): DataFrame = {
     graft.GraftFunctions.registerAll(spark)
+    def label(stage: String): Unit =
+      spark.sparkContext.setJobDescription(s"build[${cfg.kind}] $stage")
+    def derivedScheme(): (Map[String, Int], Int) = {
+      label("salt counts")
+      deriveScheme(input, cfg)
+    }
     // VISIBLE entries only (shared guard, graft.util.ParquetState): a
     // killed first run leaves _temporary/ (and a committed empty run
     // leaves _SUCCESS) — counting those as checkpoint data would send
     // the advertised killed-job resume into a parquet read with zero
     // data files (UNABLE_TO_INFER_SCHEMA) instead of a fresh start
     val entries = graft.util.ParquetState.visibleEntries(spark, checkpointDir)
+    // inferred, not declared: the legacy checks below branch on which
+    // columns the checkpoint has
+    label("resume checks")
     val existing: Option[DataFrame] =
       Option.when(entries.nonEmpty)(spark.read.parquet(checkpointDir))
 
@@ -287,13 +347,13 @@ object BuildSketches {
         val schemes = recorded.map(parseScheme).distinct
         require(schemes.length <= 1,
           s"checkpoint at $checkpointDir mixes salt schemes: ${recorded.mkString(" | ")}")
-        schemes.headOption.getOrElse(deriveScheme(input, cfg))
+        schemes.headOption.getOrElse(derivedScheme())
       case Some(_) =>
         throw new IllegalStateException(
           s"checkpoint at $checkpointDir predates salt-scheme tracking — " +
           "its shard assignment cannot be reproduced safely; rebuild it " +
           "from scratch (delete the checkpoint dir)")
-      case None => deriveScheme(input, cfg)
+      case None => derivedScheme()
     }
     val salt = saltExprFor(scheme._1, scheme._2)
     val remaining = existing match {
@@ -316,25 +376,38 @@ object BuildSketches {
     // costs a second full anti-join scan of the input; an empty append
     // writes no partial rows (at most a schema-only part file, which a
     // resume reads as a checkpoint of zero partials)
+    label("stage 1")
     appendPartials(buildPartials(remaining, cfg, Some(scheme)), checkpointDir, entries)
 
-    // the read-back always finds a schema, even after a zero-row build on
-    // a fresh dir: a flat append commits at least one (schema-only) part
-    // file, and a salt=N checkpoint holds data by construction
-    val partials = spark.read.parquet(checkpointDir)
+    // the read-back always finds a data file, even after a zero-row build
+    // on a fresh dir: a flat append commits at least one (schema-only)
+    // part file, and a salt=N checkpoint holds data by construction. The
+    // file list is fixed here, so the lineage check and stage 2 see the
+    // same partials even if another run appends in between.
+    label("lineage")
+    val partials = graft.util.ParquetState.read(spark, checkpointDir, Stage2Schema)
     // Concurrent resumes (operator retry, overlapping cron) can append
     // the same shard twice: identical re-appends (same input_hash over
     // the same rows) dedupe to one harmlessly; a shard appearing with
     // DIVERGING hashes means the input changed between appends and the
-    // merged counts would be silently wrong — reject loudly.
-    val uniq = partials.dropDuplicates("source", "salt", "input_hash")
-    val conflicted = uniq.groupBy(col("source"), col("salt"))
-      .agg(count(lit(1)).as("n")).where(col("n") > 1)
-      .select(col("source"), col("salt")).take(5)
+    // merged counts would be silently wrong — reject loudly. One driver
+    // collect of one row per partial: at most the sum of the per-source
+    // shard counts per append (25,600 rows at 100 sources x 256 salts).
+    val lineage = partials.select(col("source"), col("salt"), col("input_hash")).collect()
+    // null-safe shard key: the null source is a shard like any other
+    val hashesByShard = lineage.groupMap(r => (Option(r.getString(0)), r.get(1)))(_.get(2))
+    val conflicted = hashesByShard.collect {
+      case ((source, salt), hashes) if hashes.distinct.length > 1 =>
+        s"[${source.orNull},$salt]"
+    }.take(5)
     require(conflicted.isEmpty,
       s"checkpoint at $checkpointDir holds shards with DIVERGING input " +
       s"hashes (input changed between appends?): ${conflicted.mkString(", ")} — " +
       "the merged counts would silently double; rebuild from a fresh dir")
+    // the dedupe shuffle only when some shard was appended twice
+    val uniq =
+      if (hashesByShard.size == lineage.length) partials
+      else partials.dropDuplicates("source", "salt", "input_hash")
     uniq.groupBy(col("source"))
       .agg(
         call_function(s"${SketchKind.named(cfg.kind).fn}_merge_agg",

@@ -1,11 +1,23 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Shared filesystem guard for resumable parquet state directories
   * (BuildSketches checkpoints, IncrementalDedup stores). */
 object ParquetState {
+
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+
+  private def visible(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
 
   /** The VISIBLE entries directly under a state directory (none when it
     * does not exist): a killed first append leaves `_temporary/` and a
@@ -13,20 +25,53 @@ object ParquetState {
     * would send a resume into a parquet read with zero data files
     * (UNABLE_TO_INFER_SCHEMA) instead of a fresh start. */
   def visibleEntries(spark: SparkSession, dir: String): Seq[FileStatus] = {
-    val fs = FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, dir)
     val path = new Path(dir)
     if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq.filter { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    else fs.listStatus(path).toSeq.filter(visible)
   }
 
   /** Read a state table only if the directory holds visible data
     * entries ([[visibleEntries]]). */
   def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
     Option.when(visibleEntries(spark, dir).nonEmpty)(spark.read.parquet(dir))
+
+  /** Read a state table under its DECLARED schema: no schema-inference
+    * job. A declared schema alone reads a column the files lack as null
+    * without complaint, so an older or foreign store is checked first
+    * against one footer, read on the driver with no Spark job: the
+    * oldest visible data file, i.e. the schema the store was created
+    * with (later appends by the current writer carry every column). A
+    * column that exists only as `name=value` partition directories
+    * counts as present. Throws IllegalArgumentException naming the
+    * missing columns and the directory; the directory must hold data. */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
+    val fs = fsOf(spark, dir)
+    def oldest(dirPath: Path): Option[FileStatus] =
+      fs.listStatus(dirPath).toSeq.filter(visible)
+        .sortBy(e => (e.getModificationTime, e.getPath.getName)).headOption
+    // descend through partition directories to the first data file
+    @annotation.tailrec
+    def firstFile(dirPath: Path, partitionCols: Set[String]): (Option[FileStatus], Set[String]) =
+      oldest(dirPath) match {
+        case Some(d) if d.isDirectory =>
+          firstFile(d.getPath, partitionCols + d.getPath.getName.takeWhile(_ != '='))
+        case leaf => (leaf, partitionCols)
+      }
+    val (leaf, partitionCols) = firstFile(new Path(dir), Set.empty)
+    val file = leaf.getOrElse(throw new IllegalArgumentException(
+      s"parquet store at $dir holds no data file to read"))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val present = try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+    finally reader.close()
+    val missing = schema.fieldNames.filterNot(n => present(n) || partitionCols(n))
+    require(missing.isEmpty,
+      s"parquet store at $dir lacks declared column(s) ${missing.mkString(", ")} " +
+      s"(footer of ${file.getPath.getName}) — it was written by another " +
+      "version or another writer; rebuild it from a fresh dir")
+    spark.read.schema(schema).parquet(dir)
+  }
 
   /** Write `df` as ONE plain parquet FILE at `dest` (local paths) —
     * the driver-fixture layout that single-file readers (streaming

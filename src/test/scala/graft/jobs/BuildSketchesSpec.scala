@@ -471,14 +471,20 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val input = TokenGen.generate(spark, 300, vocab = 500).cache()
     val cfg = BuildSketches.Config(kind = "cqf", salts = 2, quotientBits = 10)
     val dir = Files.createTempDirectory("graft_ckpt_dupe").toString
-    val clean = BuildSketches.run(spark, input, dir, cfg)
-      .collect().map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+    val cleanRows = BuildSketches.run(spark, input, dir, cfg).collect()
+    val clean = cleanRows.map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     // concurrent-resume simulation: the same shards appended a second time
     val scheme = BuildSketches.deriveScheme(input, cfg)
     appendAsRun(BuildSketches.buildPartials(input, cfg, Some(scheme)), dir)
-    val deduped = BuildSketches.run(spark, input, dir, cfg)
-      .collect().map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+    val dedupedRows = BuildSketches.run(spark, input, dir, cfg).collect()
+    val deduped = dedupedRows.map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(deduped == clean, "identical duplicate shards must not double-count")
+    // the only spec that runs the dedupe branch: its sketches, too, are
+    // the clean build's, byte for byte
+    def bytesBySource(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    assert(bytesBySource(dedupedRows) == bytesBySource(cleanRows),
+      "deduped sketch bytes differ from the clean build's")
     // diverging duplicate (different rows -> different input_hash) rejects
     appendAsRun(BuildSketches.buildPartials(
       input.where(pmod(xxhash64(col("doc_id"), lit(7)), lit(2)) === 0), cfg, Some(scheme)), dir)
@@ -486,6 +492,87 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       BuildSketches.run(spark, input, dir, cfg).collect()
     }
     assert(e.getMessage.contains("DIVERGING"), e.getMessage)
+  }
+
+  /** Descriptions of the Spark jobs `body` starts, read once the
+    * listener bus has delivered them: a listener sees events in order,
+    * so once it sees a marker job run after `body` start, it has seen
+    * every job `body` started. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val marker = "graft-spec: listener bus drained"
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull)
+        if (d == marker) drained.countDown() else descriptions.add(d)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val caller = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(caller)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stuck")
+    } finally sc.removeSparkListener(listener)
+    descriptions.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a fresh build plus one action runs at most six jobs, each labelled") {
+    // the input exists before the counting window opens
+    val input = TokenGen.generate(spark, 600, vocab = 500)
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
+    val dir = Files.createTempDirectory("graft_ckpt_jobs").toString
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly build")
+    val jobs = try jobsOf {
+      assert(BuildSketches.run(spark, input, dir, cfg).collect().nonEmpty)
+    } finally sc.setJobDescription(null)
+    assert(jobs.length <= 6, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    // run labels its own jobs; stage 2 runs at the caller's action
+    assert(jobs.toSet == Set("build[cqf] salt counts", "build[cqf] stage 1",
+      "build[cqf] lineage", "caller: nightly build"), jobs.mkString(" | "))
+  }
+
+  test("the caller's job description survives run, also when run rejects") {
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
+    val dir = Files.createTempDirectory("graft_ckpt_desc").toString
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly build")
+    try {
+      BuildSketches.run(spark, input, dir,
+        BuildSketches.Config(kind = "cqf", salts = 2, quotientBits = 8)).collect()
+      assert(sc.getLocalProperty("spark.job.description") == "caller: nightly build")
+      intercept[IllegalArgumentException] {
+        BuildSketches.run(spark, input, dir, BuildSketches.Config(kind = "hll", salts = 2))
+      }
+      assert(sc.getLocalProperty("spark.job.description") == "caller: nightly build")
+    } finally sc.setJobDescription(null)
+    input.unpersist()
+  }
+
+  test("a checkpoint lacking a declared column rejects before stage 2; salt=N dirs pass") {
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 2, quotientBits = 10)
+    // a complete checkpoint whose partials lack input_hash: the declared
+    // read would see the column as null and merge every shard unchecked
+    val dir = Files.createTempDirectory("graft_ckpt_nohash").toString
+    appendAsRun(BuildSketches.buildPartials(input, cfg).drop("input_hash"), dir)
+    // run itself throws: the stage-2 DataFrame is never handed out
+    val e = intercept[IllegalArgumentException] {
+      BuildSketches.run(spark, input, dir, cfg)
+    }
+    assert(e.getMessage.contains("input_hash") && e.getMessage.contains(dir), e.getMessage)
+    // a partition column present only as salt=N directories counts
+    val legacy = Files.createTempDirectory("graft_ckpt_saltdirs").toString
+    BuildSketches.buildPartials(input, cfg).write.partitionBy("salt").parquet(legacy + "/ck")
+    val read = graft.util.ParquetState.read(spark, legacy + "/ck", BuildSketches.Stage2Schema)
+    assert(read.select(col("salt")).distinct().count() > 1)
+    assert(read.where(col("input_hash").isNull).count() == 0)
+    input.unpersist()
   }
 
   test("TokenGen nTok=0 rows carry genuinely empty token arrays") {
