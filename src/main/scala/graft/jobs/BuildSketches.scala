@@ -3,7 +3,7 @@ package graft.jobs
 import graft.api
 import graft.sketch.SketchKind
 import org.apache.hadoop.fs.FileStatus
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,9 +23,11 @@ import org.apache.spark.sql.types._
   * graft versions that record build parameters but predate the flat
   * layout reject a flat checkpoint before appending to it ([[FlatTag]]).
   *
-  * Resume: shards already present in the checkpoint are anti-joined away
-  * from the input, so a killed stage-1 job re-processes only missing
-  * shards; stage 2 always recomputes from the (cheap, tiny) partials.
+  * Resume: one driver collect of the checkpoint's lineage under the
+  * declared [[ResumeSchema]] serves the kind, parameter and scheme checks
+  * and the done-set. Done shards are filtered out of the input without a
+  * join, so a killed stage-1 job re-processes only missing shards;
+  * stage 2 always recomputes from the (cheap, tiny) partials.
   * Because sketches are merge-order-invariant, a resumed build yields
   * byte-identical per-source CQF contents to an uninterrupted one
   * (asserted in BuildSketchesSpec).
@@ -40,8 +42,9 @@ import org.apache.spark.sql.types._
   *
   * Jobs: a fresh build plus one action on its result runs six — salt
   * counts (one, no exchange), stage 1 (shuffle and write), the lineage
-  * collect, and stage 2 (shuffle and result). A resume adds the
-  * inferred checkpoint read and its kind, parameter and scheme checks.
+  * collect, and stage 2 (shuffle and result). A resume runs six too:
+  * the resume-checks collect replaces the salt counts, since the
+  * checkpoint records its scheme.
   */
 object BuildSketches {
 
@@ -135,7 +138,7 @@ object BuildSketches {
   /** Per-source shard counts: the total shard budget (cfg.salts x
     * #sources) split proportionally to observed per-source row counts,
     * clamped to [1, 4096]. Deterministic for a given input, so the
-    * resume anti-join recomputes identical salts. One Spark job with no
+    * resume's done-set filter recomputes identical salts. One Spark job with no
     * exchange: each input partition counts its sources and the driver
     * merges one count map per partition. */
   def saltCounts(df: DataFrame, cfg: Config): Map[String, Int] = {
@@ -220,6 +223,16 @@ object BuildSketches {
     StructField("n_tokens", LongType),
     StructField("input_hash", LongType)))
 
+  /** The per-partial lineage a resume checks before it appends. A column
+    * an older checkpoint lacks reads as null, and `run` judges each null
+    * per partial, not per sampled file. */
+  private[jobs] val ResumeSchema: StructType = StructType(Seq(
+    StructField("source", StringType),
+    StructField("salt", IntegerType),
+    StructField("sketch_kind", StringType),
+    StructField("build_params", StringType),
+    StructField("salt_scheme", StringType)))
+
   /** Stage 1: per-(source, salt) sketch partials with lineage columns
     * (F4 fixture schema). `scheme` overrides the salt scheme — the
     * resume path passes the CHECKPOINT's recorded scheme so a
@@ -268,8 +281,8 @@ object BuildSketches {
     * `run` itself runs the salt-count, stage-1 and lineage jobs, each
     * under a `build[<kind>] <stage>` job description, and restores the
     * caller's description on every exit path; stage 2 runs at the
-    * caller's action under the caller's description. A fresh build plus
-    * one action on the result is six Spark jobs. */
+    * caller's action under the caller's description. A fresh build or a
+    * resume plus one action on the result is six Spark jobs. */
   def run(spark: SparkSession, input: DataFrame, checkpointDir: String,
       cfg: Config = Config()): DataFrame = {
     val sc = spark.sparkContext
@@ -291,13 +304,14 @@ object BuildSketches {
     // killed first run leaves _temporary/ (and a committed empty run
     // leaves _SUCCESS) — counting those as checkpoint data would send
     // the advertised killed-job resume into a parquet read with zero
-    // data files (UNABLE_TO_INFER_SCHEMA) instead of a fresh start
+    // data files instead of a fresh start
     val entries = graft.util.ParquetState.visibleEntries(spark, checkpointDir)
-    // inferred, not declared: the legacy checks below branch on which
-    // columns the checkpoint has
+    // ONE driver collect of the checkpoint's lineage serves every resume
+    // check and the done-set; the columns are read by name, because a
+    // salt=N checkpoint lists its partition column last
     label("resume checks")
-    val existing: Option[DataFrame] =
-      Option.when(entries.nonEmpty)(spark.read.parquet(checkpointDir))
+    val priorLineage: Option[Array[Row]] = Option.when(entries.nonEmpty)(
+      spark.read.schema(ResumeSchema).parquet(checkpointDir).collect())
 
     // observe() metrics on the input actually consumed this run
     val observed = input.observe("graft_build",
@@ -308,72 +322,64 @@ object BuildSketches {
     // recomputing salts from this run's input (salt counts can drift,
     // config can change) would silently drop/double-count rows against
     // the recorded (source, salt) done-set. The scheme travels inside the
-    // checkpoint itself; a checkpoint without it is rejected loudly. A
+    // checkpoint itself; a partial without it is rejected loudly. A
     // checkpoint of zero partials (a flat append of an empty input leaves
     // one schema-only part file) constrains nothing.
-    val scheme: (Map[String, Int], Int) = existing match {
-      case Some(ck) if ck.columns.contains("salt_scheme") =>
+    val scheme: (Map[String, Int], Int) = priorLineage match {
+      case None => derivedScheme()
+      case Some(rows) =>
+        def recorded(column: String): Array[String] =
+          rows.map(_.getAs[String](column)).distinct
+        if (rows.exists(_.getAs[String]("salt_scheme") == null))
+          throw new IllegalStateException(
+            s"checkpoint at $checkpointDir predates salt-scheme tracking — " +
+            "its shard assignment cannot be reproduced safely; rebuild it " +
+            "from scratch (delete the checkpoint dir)")
         // the checkpoint's KIND must match too: resuming a cqf build as
         // hll would append incompatible partials beside the old ones and
         // stage 2 would feed cqf bytes into hll_merge_agg
-        if (ck.columns.contains("sketch_kind")) {
-          val kinds = ck.select(col("sketch_kind")).distinct()
-            .collect().map(_.getString(0))
-          require(kinds.isEmpty || kinds.sameElements(Array(cfg.kind)),
-            s"checkpoint at $checkpointDir holds sketch kind " +
-            s"'${kinds.mkString(",")}' but this run builds '${cfg.kind}' — " +
-            "use a fresh checkpoint dir per kind")
-        }
+        val kinds = recorded("sketch_kind")
+        require(kinds.isEmpty || kinds.sameElements(Array(cfg.kind)),
+          s"checkpoint at $checkpointDir holds sketch kind " +
+          s"'${kinds.mkString(",")}' but this run builds '${cfg.kind}' — " +
+          "use a fresh checkpoint dir per kind")
         // same-kind resumes with drifted parameters are rejected BEFORE
-        // any append. Pre-param-tracking partials read the column as
-        // NULL — a legacy checkpoint (or one already resumed once by
-        // newer code, mixing tagged and untagged partials) stays
+        // any append. A partial written before parameter tracking has a
+        // NULL build_params — a legacy checkpoint (or one already resumed
+        // once by newer code, mixing tagged and untagged partials) stays
         // resumable as long as every TAGGED partial matches this run.
-        if (ck.columns.contains("build_params")) {
-          val params = ck.select(col("build_params")).distinct()
-            .collect().map(_.getString(0)).filter(_ != null)
-            .map(_.stripSuffix(FlatTag)).distinct
-          require(params.isEmpty || params.sameElements(Array(paramString(cfg))),
-            s"checkpoint at $checkpointDir was built with parameters " +
-            s"'${params.mkString(",")}' but this run uses " +
-            s"'${paramString(cfg)}' — appending would poison the " +
-            "checkpoint with unmergeable partials; resume with the " +
-            "original config or rebuild from a fresh dir")
-        }
+        val params = recorded("build_params").filter(_ != null)
+          .map(_.stripSuffix(FlatTag)).distinct
+        require(params.isEmpty || params.sameElements(Array(paramString(cfg))),
+          s"checkpoint at $checkpointDir was built with parameters " +
+          s"'${params.mkString(",")}' but this run uses " +
+          s"'${paramString(cfg)}' — appending would poison the " +
+          "checkpoint with unmergeable partials; resume with the " +
+          "original config or rebuild from a fresh dir")
         // compared parsed, not as strings: a resume of a pre-v2 checkpoint
         // appends the v2 encoding of the same scheme beside the untagged one
-        val recorded = ck.select(col("salt_scheme")).distinct()
-          .collect().map(_.getString(0))
-        val schemes = recorded.map(parseScheme).distinct
+        val schemeStrings = recorded("salt_scheme")
+        val schemes = schemeStrings.map(parseScheme).distinct
         require(schemes.length <= 1,
-          s"checkpoint at $checkpointDir mixes salt schemes: ${recorded.mkString(" | ")}")
+          s"checkpoint at $checkpointDir mixes salt schemes: ${schemeStrings.mkString(" | ")}")
         schemes.headOption.getOrElse(derivedScheme())
-      case Some(_) =>
-        throw new IllegalStateException(
-          s"checkpoint at $checkpointDir predates salt-scheme tracking — " +
-          "its shard assignment cannot be reproduced safely; rebuild it " +
-          "from scratch (delete the checkpoint dir)")
-      case None => derivedScheme()
     }
     val salt = saltExprFor(scheme._1, scheme._2)
-    val remaining = existing match {
+    val remaining = priorLineage match {
       case None => observed
-      case Some(ck) =>
-        // null-safe keys: a NULL source forms a legitimate shard, but an
-        // equi anti-join never matches null == null, so its partial would
-        // be re-appended (and double-counted) on EVERY resume
-        val done = ck.select(col("source").as("done_source"),
-          col("salt").as("done_salt")).distinct()
-        observed
-          .withColumn("salt", salt)
-          .join(broadcast(done),
-            col("source") <=> col("done_source") &&
-              col("salt") <=> col("done_salt"), "left_anti")
-          .drop("salt")
+      case Some(rows) =>
+        // the done-set filters on the driver's collected keys: no join
+        // and no broadcast job. Keys are null-safe: a NULL source forms a
+        // legitimate shard, and a key that never matched it would
+        // re-append (and double-count) its partial on EVERY resume
+        val done = rows.map(r =>
+          (Option(r.getAs[String]("source")), r.getAs[Int]("salt"))).toSet
+        val pending = udf((source: String, salt: Int) => !done((Option(source), salt)))
+        observed.where(pending(col("source"), salt))
     }
 
     // unconditional append: probing emptiness first (remaining.take(1))
-    // costs a second full anti-join scan of the input; an empty append
+    // costs a second full filtered scan of the input; an empty append
     // writes no partial rows (at most a schema-only part file, which a
     // resume reads as a checkpoint of zero partials)
     label("stage 1")

@@ -100,40 +100,15 @@ object DedupOps {
     * Output: id_a, id_b, est_jaccard (ids ordered, distinct pairs). */
   def minhashCandidates(df: DataFrame, tokens: Column, id: Column,
       bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.5,
-      bucketCap: Int = 5000): DataFrame =
-    minhashCandidatesFromSig(
-      df.select(id.as("id"), minhashSig(tokens, bands * rowsPerBand).as("sig")),
-      bands, rowsPerBand, threshold, bucketCap)
-
-  /** Like [[minhashCandidates]] but fused over word k-shingles without
-    * materializing shingle strings. */
-  def minhashShingleCandidates(df: DataFrame, tokens: Column, id: Column,
-      k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.5, bucketCap: Int = 5000): DataFrame =
-    minhashCandidatesFromSig(
-      df.select(id.as("id"),
-        shingleMinhashSig(tokens, k, bands * rowsPerBand).as("sig")),
-      bands, rowsPerBand, threshold, bucketCap)
-
-  /** Band the signature table: one row per (id, band, bucket). */
-  private[ops] def bandSignatures(sigged: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sigged.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat(lit("band"), b.cast("string"),
-          concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
-        .as(Seq("band", "bucket")))
-
-  private def minhashCandidatesFromSig(sigged: DataFrame,
-      bands: Int, rowsPerBand: Int, threshold: Double, bucketCap: Int): DataFrame = {
+      bucketCap: Int = 5000): DataFrame = {
     val nHashes = bands * rowsPerBand
     // NOTE: the signature projection is deliberately recomputed per
     // subplan reference (banding; the two payload re-joins) instead of
     // persisted — Catalyst prunes each branch to the columns it needs and
     // AQE reuses the banding exchange, while a .persist() would pin
     // O(corpus x nHashes x 8B) in executor memory for the whole query.
-    // Callers that iterate can persist `sigged` themselves.
-    val sigs = sigged.select(col("id"), col("sig"))
+    // Callers that iterate can persist their input themselves.
+    val sigs = df.select(id.as("id"), minhashSig(tokens, nHashes).as("sig"))
     val pairs = bucketPairs(bandSignatures(sigs, bands, rowsPerBand),
       Seq("band", "bucket"), bucketCap)
     joinPairPayload(pairs, sigs, Seq("sig"))
@@ -145,6 +120,15 @@ object DedupOps {
       .where(col("est_jaccard") >= threshold)
       .distinct() // duplicated input ids fan pairs out through the sig re-joins
   }
+
+  /** Band the signature table: one row per (id, band, bucket). */
+  private[ops] def bandSignatures(sigged: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sigged.select(
+      col("id"),
+      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => xxhash64(concat(lit("band"), b.cast("string"),
+          concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
+        .as(Seq("band", "bucket")))
 
   /** MinHash-LSH prefilter + EXACT word-k-shingle Jaccard recheck — the
     * production near-dup shape (cf. the cms_heavy_hitters exact-recheck
@@ -211,25 +195,6 @@ object DedupOps {
       posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
   }
 
-  /** SimHash prefilter + EXACT word-k-shingle Jaccard recheck (same
-    * propose/dispose shape as [[minhashVerifiedPairs]], different
-    * proposer). The default 4 bands of 16 bits guarantee every pair
-    * within Hamming distance 3 is proposed AND keep bucket counts
-    * proportional to the corpus (2^16 per band). More bands widen the
-    * guaranteed radius but shrink the key space (8 bands = 8-bit keys =
-    * 256 buckets -> O(n²/256) pairs at corpus scale — use only on small
-    * inputs or behind a tight bucketCap).
-    * Output: id_a, id_b, inter, uni. */
-  def simhashVerifiedPairs(df: DataFrame, text: Column, id: Column,
-      k: Int = 3, threshold: Double = 0.9, nBands: Int = 4,
-      bucketCap: Int = 5000): DataFrame = {
-    val toks = TextOps.tokens(text)
-    val base = df.select(id.as("id"), simhash(toks).as("sh"),
-      shingleHashSet(toks, k).as("grams"))
-    val pairs = bucketPairs(simhashBanded(base, nBands), Seq("band", "bucket"), bucketCap)
-    verifyByJaccard(pairs, base.select(col("id"), col("grams")), threshold)
-  }
-
   /** Ensemble near-dup pairs: simhash banding (guaranteed Hamming<=nBands-1
     * radius, fine buckets) UNIONed with minhash-LSH (proper Jaccard-LSH
     * recall), both disposed by the same exact shingle-Jaccard recheck.
@@ -249,7 +214,7 @@ object DedupOps {
     // case for true near-dups) pays the shingle-set join once, not
     // twice, and one shared base projection feeds both banders (Catalyst
     // prunes each branch to its columns; deliberately not persisted —
-    // see the note in minhashCandidatesFromSig).
+    // see the note in minhashCandidates).
     val toks = TextOps.tokens(text)
     val base = df.select(id.as("id"), simhash(toks).as("sh"),
       shingleMinhashSig(toks, k, bands * rowsPerBand).as("sig"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.ParquetState
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,6 +37,12 @@ import org.apache.spark.sql.types._
   *    doc count, input hash, params), appended AFTER the batch's pairs:
   *    a batch is done iff its marker exists, so a kill at any point
   *    leaves a state a re-run completes to the identical answer.
+  *
+  * Every store is read under its declared schema (`sigSchema`,
+  * `bucketSchema`, `pairStoreSchema`, `markerSchema`) through
+  * [[graft.util.ParquetState.read]]: no schema-inference job, and a store
+  * whose oldest part file lacks a declared column is rejected, naming the
+  * column and the directory, before anything is appended.
   *
   * Per delta the work is: sign the NEW docs (one pass over the delta),
   * persist their bucket triples, and bucket-join NEW × ALL over the
@@ -105,19 +112,32 @@ object IncrementalDedup {
   private def batchPath(stateDir: String) = s"$stateDir/batches"
   private[ops] def bucketPath(stateDir: String) = s"$stateDir/buckets"
 
-  /** Read a state table if the directory holds VISIBLE data entries —
-    * the shared resumable-state guard ([[graft.util.ParquetState]]). */
-  private def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
-    graft.util.ParquetState.readIfAny(spark, dir)
-
+  // the declared store schemas (see the scaladoc above); batch_id is the
+  // partition column of the signature, bucket and pair stores
+  private val batchIdField = StructField("batch_id", StringType)
+  private val sigSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("sig", ArrayType(LongType)),
+    StructField("grams", ArrayType(LongType)),
+    StructField("dedup_params", StringType),
+    batchIdField))
+  private val bucketSchema = StructType(Seq(
+    StructField("id", LongType), StructField("band", IntegerType),
+    StructField("bucket", LongType), batchIdField))
   private val pairSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
     StructField("inter", LongType), StructField("uni", LongType)))
+  private val pairStoreSchema = pairSchema.add(batchIdField)
+  private val markerSchema = StructType(Seq(
+    batchIdField,
+    StructField("n_docs", LongType),
+    StructField("input_hash", LongType),
+    StructField("dedup_params", StringType)))
 
   /** All exact-verified near-dup pairs accumulated in `stateDir`:
     * (id_a, id_b, inter, uni), id_a < id_b, distinct. */
   def allPairs(spark: SparkSession, stateDir: String): DataFrame =
-    readIfAny(spark, pairPath(stateDir))
+    ParquetState.readIfAny(spark, pairPath(stateDir), pairStoreSchema)
       // a kill between the pair append and the commit marker re-appends
       // the batch's identical rows on resume — collapse by pair key
       .map(_.dropDuplicates("id_a", "id_b")
@@ -131,7 +151,7 @@ object IncrementalDedup {
     * edge set, so re-deriving clusters after a delta costs O(edges), not
     * a corpus re-scan. */
   def clusters(spark: SparkSession, stateDir: String): DataFrame = {
-    val nodes = readIfAny(spark, sigPath(stateDir))
+    val nodes = ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema)
       .map(_.select(col("id")).distinct())
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(Seq(StructField("id", LongType)))))
@@ -148,9 +168,10 @@ object IncrementalDedup {
     *                a no-op, with different input an error. Must start
     *                with a letter: the signature store partitions by
     *                batch_id, and a numeric-looking name ("20260818")
-    *                would be partition-TYPE-INFERRED as an integer on
-    *                read-back, silently breaking the resume matching
-    *                (and leading-zero names would not even round-trip)
+    *                would be partition-TYPE-INFERRED as an integer by any
+    *                reader that infers the store's schema (graft's own
+    *                reads declare it a string), and leading-zero names
+    *                would not even round-trip there
     */
   def run(spark: SparkSession, df: DataFrame, tokens: Column, id: Column,
       stateDir: String, batchId: String, cfg: Config = Config()): DataFrame = {
@@ -183,7 +204,7 @@ object IncrementalDedup {
     def label(stage: String): Unit =
       spark.sparkContext.setJobDescription(s"incdedup[$batchId] $stage")
     label("control: signature stats")
-    val existingSigs = readIfAny(spark, sigPath(stateDir))
+    val existingSigs = ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema)
     val sigStats: Seq[(String, String, Long)] = existingSigs.map { st =>
       graft.util.Adaptive.withoutAqe(spark) {
         st.groupBy(col("batch_id"), col("dedup_params"))
@@ -201,7 +222,7 @@ object IncrementalDedup {
     }
     label("control: commit markers")
     val committed: Map[String, (Long, Long)] =
-      readIfAny(spark, batchPath(stateDir)).map { m =>
+      ParquetState.readIfAny(spark, batchPath(stateDir), markerSchema).map { m =>
         graft.util.Adaptive.withoutAqe(spark) {
           m.select(col("batch_id"), col("input_hash"), col("n_docs"))
             .collect()
@@ -258,21 +279,15 @@ object IncrementalDedup {
 
     def writeMarker(): Unit = {
       val marker = spark.createDataFrame(
-        java.util.Arrays.asList(Row(batchId, inCount, inHash, params)),
-        StructType(Seq(
-          StructField("batch_id", StringType),
-          StructField("n_docs", LongType),
-          StructField("input_hash", LongType),
-          StructField("dedup_params", StringType))))
+        java.util.Arrays.asList(Row(batchId, inCount, inHash, params)), markerSchema)
       marker.write.mode(SaveMode.Append).parquet(batchPath(stateDir))
     }
 
     // an empty delta (a zero-row day) is a legitimate no-op, not an
     // error: stage 1 would append NO data files, and on a first batch the
-    // unconditional store read below would then fail with
-    // UNABLE_TO_INFER_SCHEMA — commit the marker (burning the batch id
-    // with hash 0 / count 0 so a later NON-empty reuse of the id rejects)
-    // and skip the pipeline
+    // unconditional store read below would then find no data file —
+    // commit the marker (burning the batch id with hash 0 / count 0 so a
+    // later NON-empty reuse of the id rejects) and skip the pipeline
     if (inCount == 0L) {
       writeMarker()
       return allPairs(spark, stateDir)
@@ -298,7 +313,8 @@ object IncrementalDedup {
         count(lit(1))).head()
       val ok = r.getLong(0) == inHash && r.getLong(1) == inCount
       if (!ok) {
-        val pairsForBatch = readIfAny(spark, pairPath(stateDir)).exists(
+        val pairsForBatch = ParquetState.readIfAny(spark, pairPath(stateDir),
+          pairStoreSchema).exists(
           _.where(col("batch_id") === batchId).take(1).nonEmpty)
         require(!pairsForBatch,
           s"resuming batch '$batchId' in $stateDir: the signed state " +
@@ -323,7 +339,7 @@ object IncrementalDedup {
       label("sign: id-clash check")
       // ids-only semi-join probe — static plan is fine at any scale
       // (column-pruned id scan, no skew decision AQE could improve)
-      readIfAny(spark, sigPath(stateDir)).foreach { st =>
+      ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema).foreach { st =>
         graft.util.Adaptive.withoutAqe(spark) {
         val clash = st.where(col("batch_id") =!= batchId).select(col("id"))
           .join(newBase.select(col("id")), Seq("id"), "left_semi").take(1)
@@ -357,7 +373,7 @@ object IncrementalDedup {
     // bucket appends leaves this batch signed but unbucketed) and
     // migration (a store written before bucket tracking backfills every
     // batch once, from its own signature partition, then never again).
-    val store = spark.read.parquet(sigPath(stateDir))
+    val store = ParquetState.read(spark, sigPath(stateDir), sigSchema)
     // presence alone is NOT completeness: a kill mid-commit of a bucket
     // append can leave a PARTIAL batch partition whose files are visible
     // — treating it as done would silently drop its docs from every
@@ -376,7 +392,7 @@ object IncrementalDedup {
         Map(batchId -> inCount)
     label("buckets: counts")
     val bucketCounts: Map[String, Long] =
-      readIfAny(spark, bucketPath(stateDir)).map { b =>
+      ParquetState.readIfAny(spark, bucketPath(stateDir), bucketSchema).map { b =>
         graft.util.Adaptive.withoutAqe(spark) {
           b.groupBy(col("batch_id")).agg(count(lit(1)).as("n")).collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -407,7 +423,7 @@ object IncrementalDedup {
     // ---- stage 2: NEW × ALL candidate pairs from the bucket store ----
     // everything reads back through the persisted state so a resume and
     // a straight-through run join the exact same rows
-    val buckets = spark.read.parquet(bucketPath(stateDir))
+    val buckets = ParquetState.read(spark, bucketPath(stateDir), bucketSchema)
     val keys = Seq("band", "bucket")
     // only buckets the DELTA touches matter: old×old pairs were settled
     // by earlier batches, so buckets without a new member cannot produce

@@ -32,9 +32,15 @@ object ParquetState {
   }
 
   /** Read a state table only if the directory holds visible data
-    * entries ([[visibleEntries]]). */
+    * entries ([[visibleEntries]]), inferring its schema: only for stores
+    * whose readers branch on which columns an older layout has. */
   def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
     Option.when(visibleEntries(spark, dir).nonEmpty)(spark.read.parquet(dir))
+
+  /** [[read]] a state table under its declared schema only if the
+    * directory holds visible data entries ([[visibleEntries]]). */
+  def readIfAny(spark: SparkSession, dir: String, schema: StructType): Option[DataFrame] =
+    Option.when(visibleEntries(spark, dir).nonEmpty)(read(spark, dir, schema))
 
   /** Read a state table under its DECLARED schema: no schema-inference
     * job. A declared schema alone reads a column the files lack as null

@@ -447,6 +447,64 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again.nonEmpty)
   }
 
+  /** `(salt, build_params)` of every partial, read under a declared
+    * schema: an inferred read of a mixed legacy checkpoint may sample a
+    * file without `build_params` and drop the column. */
+  private def saltParams(dir: String): Seq[(Int, Option[String])] =
+    spark.read.schema("salt INT, build_params STRING").parquet(dir)
+      .select(col("salt"), col("build_params")).collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq.sorted
+
+  /** Every file under a checkpoint dir, as paths relative to it. */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.filter(Files.isRegularFile(_)).toArray.map(p =>
+      root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+    finally walk.close()
+  }
+
+  test("drifted parameters reject on a checkpoint whose oldest partial predates build_params") {
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
+    val cfg = BuildSketches.Config(kind = "hll", salts = 2, hllP = 12)
+    val dir = Files.createTempDirectory("graft_ckpt_legacy_params").toString
+    val scheme = BuildSketches.deriveScheme(input, cfg)
+    val salted = input.withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
+    def shard(s: Int) =
+      BuildSketches.buildPartials(salted.where(col("salt") === s).drop("salt"), cfg, Some(scheme))
+    // salt 0 as a version predating build_params wrote it, then salt 1
+    // as a legacy-layout resume appends it: untagged `hll;p=12`
+    shard(0).drop("build_params").write.mode("append").partitionBy("salt").parquet(dir)
+    appendAsRun(shard(1), dir)
+    val params = saltParams(dir)
+    assert(params.map(_._2).toSet == Set(None, Some(BuildSketches.paramString(cfg))), params)
+    val files = filesUnder(dir)
+    val e = intercept[IllegalArgumentException] {
+      BuildSketches.run(spark, input, dir, cfg.copy(hllP = 14))
+    }
+    assert(e.getMessage.contains("parameters"), e.getMessage)
+    assert(filesUnder(dir) == files, "the rejected resume appended to the checkpoint")
+    assert(saltParams(dir) == params)
+    input.unpersist()
+  }
+
+  test("a checkpoint whose partials all predate build_params resumes to the same answer") {
+    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
+    val full = perSource(BuildSketches.run(spark, input,
+      Files.createTempDirectory("graft_ckpt_noparams_ref").toString, cfg))
+    // salts 0-2 of a build by a version that recorded no build parameters
+    val dir = Files.createTempDirectory("graft_ckpt_noparams").toString
+    val scheme = BuildSketches.deriveScheme(input, cfg)
+    BuildSketches.buildPartials(input
+        .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
+        .where(col("salt") < 3).drop("salt"), cfg, Some(scheme))
+      .drop("build_params")
+      .write.mode("append").partitionBy("salt").parquet(dir)
+    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+    input.unpersist()
+  }
+
   test("null-source rows shard, build, and stay resume-idempotent") {
     import spark.implicits._
     val base = TokenGen.generate(spark, 300, vocab = 500)
@@ -534,6 +592,24 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs.length <= 6, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
     // run labels its own jobs; stage 2 runs at the caller's action
     assert(jobs.toSet == Set("build[cqf] salt counts", "build[cqf] stage 1",
+      "build[cqf] lineage", "caller: nightly build"), jobs.mkString(" | "))
+  }
+
+  test("a resume of a complete checkpoint plus one action runs at most six jobs") {
+    val input = TokenGen.generate(spark, 600, vocab = 500)
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
+    val dir = Files.createTempDirectory("graft_ckpt_resume_jobs").toString
+    // the first build runs before the counting window opens
+    BuildSketches.run(spark, input, dir, cfg).collect()
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly build")
+    val jobs = try jobsOf {
+      assert(BuildSketches.run(spark, input, dir, cfg).collect().nonEmpty)
+    } finally sc.setJobDescription(null)
+    assert(jobs.length <= 6, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    // one lineage collect serves every resume check and the done-set;
+    // the recorded scheme makes the salt counts unnecessary
+    assert(jobs.toSet == Set("build[cqf] resume checks", "build[cqf] stage 1",
       "build[cqf] lineage", "caller: nightly build"), jobs.mkString(" | "))
   }
 

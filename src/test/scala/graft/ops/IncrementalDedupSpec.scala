@@ -405,4 +405,32 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e2.getMessage.contains("globally unique"))
   }
+
+  test("a signature store lacking a declared column rejects before any append") {
+    // a store written by another version or writer: its part files carry
+    // no gram sets, which an inferred read would only miss at the recheck,
+    // after the delta's signatures and buckets were appended
+    val state = Files.createTempDirectory("inc_dedup_nograms").toString
+    val toks = TextOps.tokens(col("text"))
+    batch(0).select(col("doc_id").as("id"),
+        DedupOps.shingleMinhashSig(toks, cfg.k, cfg.bands * cfg.rowsPerBand).as("sig"))
+      .withColumn("batch_id", lit("b0"))
+      .withColumn("dedup_params", lit(IncrementalDedup.paramString(cfg)))
+      .write.mode(SaveMode.Append).partitionBy("batch_id")
+      .parquet(s"$state/signatures")
+    def files(): Set[String] = {
+      val root = java.nio.file.Paths.get(state)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.map(p =>
+        root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+      finally walk.close()
+    }
+    val before = files()
+    val e = intercept[IllegalArgumentException] {
+      IncrementalDedup.run(spark, batch(1), toks, col("doc_id"), state, "b1", cfg)
+    }
+    assert(e.getMessage.contains("grams") && e.getMessage.contains(s"$state/signatures"),
+      e.getMessage)
+    assert(files() == before, "the rejected run changed the state dir")
+  }
 }
