@@ -1,6 +1,7 @@
 package graft
 
 import graft.agg._
+import graft.agg.SketchBuild._
 import graft.functions._
 import graft.sketch.SketchKind
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
@@ -76,18 +77,20 @@ object GraftFunctions {
   val builders: Seq[(String, Seq[Expression] => Expression)] =
     SketchKind.all.flatMap(kindBuilders(_)) ++ Seq(
     // aggregates (sketch builders)
-    "cqf_agg" -> (a => CqfAgg(a.head, litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1)),
-    "cqf_agg_packed" -> (a => CqfPackedAgg(a.head, litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1)),
+    "cqf_agg" -> (a => SketchBuildAgg(a.head,
+      CqfBuild(litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1))),
+    "cqf_agg_packed" -> (a => SketchBuildAgg(a.head,
+      CqfBuild(litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1), packed = true)),
     "pack_ints" -> (a => PackIntsLE(a.head)),
-    "hll_agg" -> (a => HllAgg(a.head, litInt(a, 1, 12))),
-    "cms_agg" -> (a => CmsAgg(a.head, litInt(a, 1, 5), litInt(a, 2, 2048))),
-    "bloom_agg" -> (a => BloomAgg(a.head, litLong(a, 1, 1L << 16), litInt(a, 2, 5))),
-    "kmv_agg" -> (a => KmvAgg(a.head, litInt(a, 1, 1024))),
-    "kmv_agg_packed" -> (a => KmvPackedAgg(a.head, litInt(a, 1, 1024))),
-    "ss_agg" -> (a => SsAgg(a.head, litInt(a, 1, 256))),
-    "ss_agg_packed" -> (a => SsPackedAgg(a.head, litInt(a, 1, 256))),
-    "td_agg" -> (a => TDigestAgg(a.head, litDouble(a, 1, 100.0))),
-    "kll_agg" -> (a => KllAgg(a.head, litInt(a, 1, 200))),
+    "hll_agg" -> (a => SketchBuildAgg(a.head, HllBuild(litInt(a, 1, 12)))),
+    "cms_agg" -> (a => SketchBuildAgg(a.head, CmsBuild(litInt(a, 1, 5), litInt(a, 2, 2048)))),
+    "bloom_agg" -> (a => SketchBuildAgg(a.head, BloomBuild(litLong(a, 1, 1L << 16), litInt(a, 2, 5)))),
+    "kmv_agg" -> (a => SketchBuildAgg(a.head, KmvBuild(litInt(a, 1, 1024)))),
+    "kmv_agg_packed" -> (a => SketchBuildAgg(a.head, KmvBuild(litInt(a, 1, 1024)), packed = true)),
+    "ss_agg" -> (a => SketchBuildAgg(a.head, SsBuild(litInt(a, 1, 256)))),
+    "ss_agg_packed" -> (a => SketchBuildAgg(a.head, SsBuild(litInt(a, 1, 256)), packed = true)),
+    "td_agg" -> (a => SketchBuildAgg(a.head, TDigestBuild(litDouble(a, 1, 100.0)))),
+    "kll_agg" -> (a => SketchBuildAgg(a.head, KllBuild(litInt(a, 1, 200)))),
     // probes
     "cqf_count" -> (a => CqfCount(a(0), a(1))),
     "cqf_contains" -> (a => CqfContains(a(0), a(1))),

@@ -19,7 +19,7 @@ object TypedAggregators {
   // Boxed input types + nullable encoders: the scalaLong/scalaDouble
   // primitive encoders made a NULL input row fail the whole query at
   // deserialization ("Null value appeared in non-nullable field"),
-  // where the expression-API counterparts (SketchAggBase.update) skip
+  // where the expression-API counterparts (SketchBuildAgg.update) skip
   // nulls — the two surfaces must agree, so reduce skips nulls too.
 
   /** CQF over long keys (quotientBits/hashBits fixed at construction).

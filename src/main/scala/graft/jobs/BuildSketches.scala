@@ -1,10 +1,12 @@
 package graft.jobs
 
 import graft.api
-import graft.sketch.SketchKind
+import graft.agg.{SketchBuild, SketchBuildAgg}
+import graft.agg.SketchBuild._
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Checkpoint-resumable distributed sketch build (SURVEY.md §7.2 M3,
@@ -17,6 +19,13 @@ import org.apache.spark.sql.types._
   * per write task, with `salt` an ordinary column beside the full lineage
   * (rows, tokens, order-insensitive input hash). Stage 2 kernel-merges
   * partials per source with *_merge_agg.
+  *
+  * Kinds: [[buildFor]] maps the config to one [[graft.agg.SketchBuild]]
+  * entry before anything else runs, so an unknown kind is rejected before
+  * any Spark job and leaves no checkpoint. Both stages take what they
+  * need from that entry — the build aggregate and its packed form, the
+  * `build_params` string, the kind name and its `*_merge_agg` — and name
+  * no kind themselves.
   *
   * Layout: checkpoints written before the flat layout hold one `salt=N`
   * directory per shard and resume in that layout ([[appendPartials]]).
@@ -75,33 +84,24 @@ object BuildSketches {
       ssK: Int = 4096,
       kmvK: Int = 1024)
 
-  private def buildAgg(cfg: Config, tokens: Column): Column = cfg.kind match {
-    case "cqf" => api.cqf_agg(tokens, cfg.quotientBits, cfg.hashBits, cfg.compact)
-    case "hll" => api.hll_agg(tokens, cfg.hllP)
-    case "cms" => api.cms_agg(tokens, cfg.cmsDepth, cfg.cmsWidth)
-    case "bloom" => api.bloom_agg(tokens, cfg.bloomBits, cfg.bloomHashes)
-    case "tdigest" => api.td_agg(tokens, cfg.tdCompression)
-    case "kll" => api.kll_agg(tokens, cfg.kllK)
-    case "ss" => api.ss_agg(tokens, cfg.ssK)
-    case "kmv" => api.kmv_agg(tokens, cfg.kmvK)
-    case other => throw new IllegalArgumentException(s"unknown sketch kind $other")
-  }
-
-  /** Canonical encoding of the kind's BUILD PARAMETERS — written into
-    * every checkpoint partial so a resume with drifted config (hllP
-    * bumped, cms resized...) is rejected BEFORE appending incompatible
-    * partials beside the old ones. Without it the kind check passes, the
+  /** The build entry for `cfg`: the kind's aggregate, parameters, merge
+    * and the canonical `build_params` string written into every
+    * checkpoint partial, so a resume with drifted config (hllP bumped,
+    * cms resized...) is rejected BEFORE appending incompatible partials
+    * beside the old ones. Without it the kind check passes, the
     * mixed-geometry shards land in the done-set, and stage 2 crashes on
-    * a merge mismatch that no re-run with any single config can clear. */
-  private[jobs] def paramString(cfg: Config): String = cfg.kind match {
-    case "cqf" => s"cqf;q=${cfg.quotientBits};hb=${cfg.hashBits};compact=${cfg.compact}"
-    case "hll" => s"hll;p=${cfg.hllP}"
-    case "cms" => s"cms;d=${cfg.cmsDepth};w=${cfg.cmsWidth}"
-    case "bloom" => s"bloom;bits=${cfg.bloomBits};h=${cfg.bloomHashes}"
-    case "tdigest" => s"tdigest;c=${cfg.tdCompression}"
-    case "kll" => s"kll;k=${cfg.kllK}"
-    case "ss" => s"ss;k=${cfg.ssK}"
-    case "kmv" => s"kmv;k=${cfg.kmvK}"
+    * a merge mismatch that no re-run with any single config can clear.
+    * The one place this job names kinds; an unknown kind throws
+    * IllegalArgumentException. */
+  private[jobs] def buildFor(cfg: Config): SketchBuild[_ >: Null <: AnyRef] = cfg.kind match {
+    case "cqf" => CqfBuild(cfg.quotientBits, cfg.hashBits, cfg.compact)
+    case "hll" => HllBuild(cfg.hllP)
+    case "cms" => CmsBuild(cfg.cmsDepth, cfg.cmsWidth)
+    case "bloom" => BloomBuild(cfg.bloomBits, cfg.bloomHashes)
+    case "tdigest" => TDigestBuild(cfg.tdCompression)
+    case "kll" => KllBuild(cfg.kllK)
+    case "ss" => SsBuild(cfg.ssK)
+    case "kmv" => KmvBuild(cfg.kmvK)
     case other => throw new IllegalArgumentException(s"unknown sketch kind $other")
   }
 
@@ -240,20 +240,21 @@ object BuildSketches {
     * shard even if per-source row proportions drifted in between. */
   def buildPartials(df: DataFrame, cfg: Config,
       scheme: Option[(Map[String, Int], Int)] = None): DataFrame = {
+    val build = buildFor(cfg)
     val (saltMap, saltDefault) = scheme.getOrElse(deriveScheme(df, cfg))
     val distributed = df.withColumn("salt", saltExprFor(saltMap, saltDefault))
       .repartition(col("source"), col("salt"))
     // DEFAULT fast path: a `packed` BINARY column (pack_ints layout) keeps
     // the scan on parquet's vectorized primitive path — used automatically
-    // for CQF builds when the input table carries it
-    val agg0 =
-      if (cfg.kind == "cqf" && df.columns.contains("packed"))
-        api.cqf_agg_packed(col("packed"), cfg.quotientBits, cfg.hashBits, cfg.compact)
-      else buildAgg(cfg, col("tokens"))
+    // for every kind with a packed form when the input table carries it
+    val packed = build.packable && df.columns.contains("packed")
+    val sketch = GraftBridge.column(SketchBuildAgg(
+      GraftBridge.expression(col(if (packed) "packed" else "tokens")), build, packed)
+      .toAggregateExpression())
     distributed
       .groupBy(col("source"), col("salt"))
       .agg(
-        agg0.as("sketch_bytes"),
+        sketch.as("sketch_bytes"),
         count(lit(1)).as("n_rows"),
         sum(col("n_tok").cast("long")).as("n_tokens"),
         // order-insensitive input hash (xor of row hashes) — idempotence
@@ -263,9 +264,9 @@ object BuildSketches {
       // the lineage columns in ONE projection (each withColumn re-analyzes
       // the whole plan)
       .select(Stage2Schema.fieldNames.map(col).toIndexedSeq ++ Seq(
-        lit(cfg.kind).as("sketch_kind"),
+        lit(build.kind.name).as("sketch_kind"),
         // the kind's build parameters — resume rejects config drift up front
-        lit(paramString(cfg)).as("build_params"),
+        lit(build.paramString).as("build_params"),
         // the scheme every row was sharded under — resume validates/reuses it
         lit(schemeString(saltMap, saltDefault)).as("salt_scheme"),
         // per-partial sketch-state metrics (load factor, counts, error
@@ -282,7 +283,8 @@ object BuildSketches {
     * under a `build[<kind>] <stage>` job description, and restores the
     * caller's description on every exit path; stage 2 runs at the
     * caller's action under the caller's description. A fresh build or a
-    * resume plus one action on the result is six Spark jobs. */
+    * resume plus one action on the result is six Spark jobs; an unknown
+    * kind throws IllegalArgumentException before the first. */
   def run(spark: SparkSession, input: DataFrame, checkpointDir: String,
       cfg: Config = Config()): DataFrame = {
     val sc = spark.sparkContext
@@ -293,6 +295,8 @@ object BuildSketches {
 
   private def runImpl(spark: SparkSession, input: DataFrame, checkpointDir: String,
       cfg: Config): DataFrame = {
+    // an unknown kind fails here, before any Spark job
+    val build = buildFor(cfg)
     graft.GraftFunctions.registerAll(spark)
     def label(stage: String): Unit =
       spark.sparkContext.setJobDescription(s"build[${cfg.kind}] $stage")
@@ -350,10 +354,10 @@ object BuildSketches {
         // resumable as long as every TAGGED partial matches this run.
         val params = recorded("build_params").filter(_ != null)
           .map(_.stripSuffix(FlatTag)).distinct
-        require(params.isEmpty || params.sameElements(Array(paramString(cfg))),
+        require(params.isEmpty || params.sameElements(Array(build.paramString)),
           s"checkpoint at $checkpointDir was built with parameters " +
           s"'${params.mkString(",")}' but this run uses " +
-          s"'${paramString(cfg)}' — appending would poison the " +
+          s"'${build.paramString}' — appending would poison the " +
           "checkpoint with unmergeable partials; resume with the " +
           "original config or rebuild from a fresh dir")
         // compared parsed, not as strings: a resume of a pre-v2 checkpoint
@@ -416,7 +420,7 @@ object BuildSketches {
       else partials.dropDuplicates("source", "salt", "input_hash")
     uniq.groupBy(col("source"))
       .agg(
-        call_function(s"${SketchKind.named(cfg.kind).fn}_merge_agg",
+        call_function(s"${build.kind.fn}_merge_agg",
           col("sketch_bytes")).as("sketch_bytes"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_tokens")).as("n_tokens"))

@@ -338,13 +338,17 @@ object IncrementalDedup {
       // partial-partition wipe above) and exclude this batch's own rows
       label("sign: id-clash check")
       // ids-only semi-join probe — static plan is fine at any scale
-      // (column-pruned id scan, no skew decision AQE could improve)
+      // (column-pruned id scan, no skew decision AQE could improve). A
+      // global min is one result job whether or not an id clashes, where
+      // a take(1) that finds nothing in its first partition re-runs over
+      // the rest
       ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema).foreach { st =>
         graft.util.Adaptive.withoutAqe(spark) {
         val clash = st.where(col("batch_id") =!= batchId).select(col("id"))
-          .join(newBase.select(col("id")), Seq("id"), "left_semi").take(1)
-        require(clash.isEmpty,
-          s"batch '$batchId' carries document id ${clash.headOption.map(_.get(0)).getOrElse("?")} " +
+          .join(newBase.select(col("id")), Seq("id"), "left_semi")
+          .agg(min(col("id"))).head().get(0)
+        require(clash == null,
+          s"batch '$batchId' carries document id $clash " +
             s"already present in $stateDir — ids must be globally unique " +
             "across batches")
         }

@@ -350,7 +350,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ck = spark.read.parquet(dir)
     assert(ck.select(col("salt")).distinct().count() > 1)
     assert(ck.select(col("build_params")).distinct().collect().map(_.getString(0))
-      .sameElements(Array(BuildSketches.paramString(cfg) + BuildSketches.FlatTag)))
+      .sameElements(Array(BuildSketches.buildFor(cfg).paramString + BuildSketches.FlatTag)))
   }
 
   test("a legacy salt=N checkpoint resumes to the same answer and keeps its layout") {
@@ -373,7 +373,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"legacy checkpoint lost its layout: $names")
     // its partials keep the untagged parameters older versions expect
     assert(spark.read.parquet(dir).select(col("build_params")).distinct()
-      .collect().map(_.getString(0)).sameElements(Array(BuildSketches.paramString(cfg))))
+      .collect().map(_.getString(0)).sameElements(Array(BuildSketches.buildFor(cfg).paramString)))
     assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
   }
 
@@ -477,7 +477,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     shard(0).drop("build_params").write.mode("append").partitionBy("salt").parquet(dir)
     appendAsRun(shard(1), dir)
     val params = saltParams(dir)
-    assert(params.map(_._2).toSet == Set(None, Some(BuildSketches.paramString(cfg))), params)
+    assert(params.map(_._2).toSet == Set(None, Some(BuildSketches.buildFor(cfg).paramString)), params)
     val files = filesUnder(dir)
     val e = intercept[IllegalArgumentException] {
       BuildSketches.run(spark, input, dir, cfg.copy(hllP = 14))
@@ -611,6 +611,54 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the recorded scheme makes the salt counts unnecessary
     assert(jobs.toSet == Set("build[cqf] resume checks", "build[cqf] stage 1",
       "build[cqf] lineage", "caller: nightly build"), jobs.mkString(" | "))
+  }
+
+  test("build_params at Config defaults are the strings existing checkpoints hold") {
+    val expected = Seq(
+      "cqf" -> "cqf;q=12;hb=64;compact=false", "hll" -> "hll;p=12",
+      "cms" -> "cms;d=5;w=8192", "bloom" -> "bloom;bits=1048576;h=5",
+      "tdigest" -> "tdigest;c=100.0", "kll" -> "kll;k=200", "ss" -> "ss;k=4096",
+      "kmv" -> "kmv;k=1024")
+    for ((kind, params) <- expected) {
+      val build = BuildSketches.buildFor(BuildSketches.Config(kind = kind))
+      assert(build.paramString == params, kind)
+      assert(build.kind.name == kind)
+    }
+  }
+
+  test("an unknown kind is rejected before any Spark job and leaves no checkpoint") {
+    val input = TokenGen.generate(spark, 300, vocab = 500)
+    val dir = Files.createTempDirectory("graft_ckpt_theta").toString
+    val jobs = jobsOf {
+      val e = intercept[IllegalArgumentException] {
+        BuildSketches.run(spark, input, dir, BuildSketches.Config(kind = "theta"))
+      }
+      assert(e.getMessage.contains("unknown sketch kind theta"), e.getMessage)
+    }
+    assert(jobs.isEmpty, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    assert(visibleNames(dir).isEmpty)
+  }
+
+  test("kmv and ss builds take the packed path and match the array path byte for byte") {
+    val input = TokenGen.generate(spark, 600, vocab = 2000).cache()
+    def bytesBySource(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sketch_bytes").toSeq).toMap
+    // the default ssK (4096) exceeds the vocabulary, so the ss sketches
+    // are exact and their canonical bytes do not depend on merge order
+    for (kind <- Seq("kmv", "ss")) {
+      val cfg = BuildSketches.Config(kind = kind, salts = 4)
+      val plan = BuildSketches.buildPartials(input, cfg).queryExecution.analyzed.toString
+      assert(plan.contains(s"${kind}_agg_packed("), plan)
+      val viaPacked = bytesBySource(BuildSketches.run(spark, input,
+        Files.createTempDirectory(s"graft_ckpt_${kind}_p").toString, cfg))
+      val viaArray = bytesBySource(BuildSketches.run(spark, input.drop("packed"),
+        Files.createTempDirectory(s"graft_ckpt_${kind}_a").toString, cfg))
+      assert(viaPacked.nonEmpty && viaPacked.keySet == viaArray.keySet)
+      viaPacked.foreach { case (source, bytes) =>
+        assert(bytes == viaArray(source), s"$kind packed/array bytes diverged for $source")
+      }
+    }
+    input.unpersist()
   }
 
   test("the caller's job description survives run, also when run rejects") {
