@@ -65,17 +65,13 @@ object GraftFunctions {
         s"argument ${i + 1} must be a numeric literal, got $other")
     }
 
-  /** `<fn>_merge_agg` for every sketch kind, `<fn>_union` for every kind
-    * but cqf (its union takes a combiner mode, so it is listed below). */
-  private def kindBuilders[S >: Null <: AnyRef](k: SketchKind[S])
-      : Seq[(String, Seq[Expression] => Expression)] =
-    (s"${k.fn}_merge_agg" -> ((a: Seq[Expression]) => SketchMergeAgg(a.head, k))) +:
-      (if (k == SketchKind.CqfKind) Nil
-       else Seq(s"${k.fn}_union" -> ((a: Seq[Expression]) => SketchUnion(a(0), a(1), k))))
+  /** `<fn>_merge_agg` for every sketch kind. */
+  private def mergeAgg[S >: Null <: AnyRef](k: SketchKind[S]): (String, Seq[Expression] => Expression) =
+    s"${k.fn}_merge_agg" -> (a => SketchMergeAgg(a.head, k))
 
   /** name -> builder for every function this library provides. */
   val builders: Seq[(String, Seq[Expression] => Expression)] =
-    SketchKind.all.flatMap(kindBuilders(_)) ++ Seq(
+    SketchKind.all.map(mergeAgg(_)) ++ SketchProbe.all.map(p => p.name -> p.expression _) ++ Seq(
     // aggregates (sketch builders)
     "cqf_agg" -> (a => SketchBuildAgg(a.head,
       CqfBuild(litInt(a, 1, 10), litInt(a, 2, 64), litInt(a, 3, 0) == 1))),
@@ -91,40 +87,17 @@ object GraftFunctions {
     "ss_agg_packed" -> (a => SketchBuildAgg(a.head, SsBuild(litInt(a, 1, 256)), packed = true)),
     "td_agg" -> (a => SketchBuildAgg(a.head, TDigestBuild(litDouble(a, 1, 100.0)))),
     "kll_agg" -> (a => SketchBuildAgg(a.head, KllBuild(litInt(a, 1, 200)))),
-    // probes
-    "cqf_count" -> (a => CqfCount(a(0), a(1))),
-    "cqf_contains" -> (a => CqfContains(a(0), a(1))),
-    "cqf_distinct" -> (a => CqfDistinct(a.head)),
-    "cqf_total" -> (a => CqfTotal(a.head)),
-    "cqf_stats" -> (a => CqfStats(a.head)),
+    // probes outside the probe table
     "sketch_meta" -> (a => SketchMetaExpr(a.head)),
     "cqf_union" -> (a => CqfUnion(a(0), a(1), litStr(a, 2, "sum"))),
-    "cqf_intersect" -> (a => CqfIntersect(a(0), a(1))),
-    "cqf_diff" -> (a => CqfDiff(a(0), a(1))),
     "cqf_set_count" -> (a => CqfSetCount(a(0), a(1), a(2))),
     "cqf_to_ref" -> (a => CqfToRef(a.head)),
     "cqf_from_ref" -> (a => CqfFromRef(a.head)),
     "cqf_items" -> (a => CqfItems(a.head)),
     "cqf_zip_items" -> (a => CqfZipItems(a(0), a(1))),
-    "hll_estimate" -> (a => HllEstimate(a.head)),
-    "cms_estimate" -> (a => CmsEstimate(a(0), a(1))),
-    "cms_total" -> (a => CmsTotal(a.head)),
-    "kmv_distinct" -> (a => KmvDistinct(a.head)),
-    "kmv_size" -> (a => KmvSize(a.head)),
-    "kmv_is_exact" -> (a => KmvIsExact(a.head)),
     "kmv_sample" -> (a => KmvSample(a.head, litInt(a, 1, 10))),
     "kmv_jaccard" -> (a => KmvJaccard(a(0), a(1))),
     "ss_topk" -> (a => SsTopk(a.head, litInt(a, 1, 10))),
-    "ss_estimate" -> (a => SsEstimate(a(0), a(1))),
-    "ss_total" -> (a => SsTotal(a.head)),
-    "ss_offset" -> (a => SsOffset(a.head)),
-    "td_quantile" -> (a => TdQuantile(a(0), a(1))),
-    "td_cdf" -> (a => TdCdf(a(0), a(1))),
-    "kll_quantile" -> (a => KllQuantile(a(0), a(1))),
-    "kll_rank" -> (a => KllRank(a(0), a(1))),
-    "kll_n" -> (a => KllN(a.head)),
-    "bloom_might_contain" -> (a => BloomMightContain(a(0), a(1))),
-    "bloom_fpp" -> (a => BloomFpp(a.head)),
     "wang_hash" -> (a => WangHashExpr(a(0), if (a.length > 1) a(1) else Literal(64))),
     "wang_unhash" -> (a => WangUnhashExpr(a(0), if (a.length > 1) a(1) else Literal(64))),
     // vector / text pipeline expressions

@@ -27,6 +27,16 @@ object PlanAudit {
     * PlanGuardSpec. */
   def all: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
 
+  private val rddId = """(\w+RDD)\[(\d+)\]""".r
+
+  /** RDD ids count every RDD the session made before, so they shift with
+    * the queries that ran earlier: number them per plan instead, `[r1]`,
+    * `[r2]`, … in order of first appearance. */
+  private def stableRddIds(plan: String): String = {
+    val ordinal = rddId.findAllMatchIn(plan).map(_.group(2)).distinct.zipWithIndex.toMap
+    rddId.replaceAllIn(plan, m => s"${m.group(1)}[r${ordinal(m.group(2)) + 1}]")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "EXPLAIN.md"
@@ -50,11 +60,12 @@ object PlanAudit {
     sb.append("localCheckpoint a 1-row summary (heavy hitters, kmv, ")
     sb.append("table_profile) or build state eagerly (dedup_incremental) ")
     sb.append("record the post-materialization plan — their ")
-    sb.append("pre-materialization shapes are asserted in PlanGuardSpec.\n")
+    sb.append("pre-materialization shapes are asserted in PlanGuardSpec. ")
+    sb.append("RDD ids are numbered per plan ([r1], [r2], ...).\n")
     all.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = stableRddIds(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       // compact audit summary so a reviewer can check shuffle/broadcast
       // discipline without reading the whole tree. FormattedMode prints
       // each operator twice (tree + numbered details), so count only the

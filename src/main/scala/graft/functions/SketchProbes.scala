@@ -1,92 +1,208 @@
 package graft.functions
 
 import graft.sketch._
+import graft.sketch.SketchKind._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Scalar probe expressions over serialized sketch bytes — the Spark
-  * counterparts of the reference's query/stat entry points
-  * (query: /root/reference/src/cqf/u64_cqf.rs:263-293, stats getters
-  * :330-359, set ops over the zipped iterator /root/reference/src/cqf.rs:499-549).
+/** Scalar probe expressions over serialized sketch bytes — the query
+  * surface of every family: counts, membership, stats, quantiles and set
+  * ops (for CQF the reference's query/stat entry points,
+  * `src/cqf/u64_cqf.rs:263-359`, and set ops over the zipped iterator,
+  * `src/cqf.rs:499-549`).
   *
-  * Each expression memoizes the last deserialized sketch by byte-array
-  * identity: the dominant pattern probes one (or a few) sketch rows with
-  * many keys, so the parse cost amortizes to zero.
+  * Most probes are rows of one table, [[SketchProbe.all]]. An entry holds
+  * the SQL name, the [[SketchKind]] whose `read` parses the bytes, the
+  * result type and the function itself, in one of four shapes, each
+  * served by one generic expression:
+  *  - [[Readout]] → [[SketchReadout]]`(sketch)`: the 12 stats readouts,
+  *    cqf_distinct … kmv_is_exact;
+  *  - [[KeyedProbe]] → [[SketchKeyedProbe]]`(sketch, key)`: cqf_count,
+  *    cqf_contains, cms_estimate, ss_estimate, bloom_might_contain, over
+  *    integral, string or binary keys, with direct whole-stage codegen;
+  *  - [[NumericProbe]] → [[SketchNumericProbe]]`(sketch, x)`: td_quantile,
+  *    td_cdf, kll_quantile, kll_rank, over any numeric argument;
+  *  - [[SetOp]] → [[SketchSetOp]]`(a, b)`: two sketches of one kind in,
+  *    sketch bytes out — `<fn>_union` for every kind but cqf, cqf_intersect
+  *    and cqf_diff.
+  * `GraftFunctions.builders` registers every entry under its name. Plans
+  * and column names print the SQL arguments only, never the entry.
+  *
+  * The rest are expressions of their own, because they take a literal
+  * parameter or return rows, arrays or generator output (cqf_union's
+  * combiner mode, cqf_set_count, cqf_items, cqf_zip_items, ss_topk,
+  * kmv_sample, kmv_jaccard), read any kind (sketch_meta), convert the
+  * reference layout, or hash keys (wang_hash, wang_unhash).
+  *
+  * Every parse goes through a [[ParseSlot]], which memoizes the last
+  * parsed sketch: the dominant pattern probes one (or a few) sketch rows
+  * with many keys, so the parse cost amortizes to zero.
   */
-private[functions] trait SketchCache[S <: AnyRef] {
-  @transient private var lastBytes: Array[Byte] = _
-  @transient private var lastSketch: S = _
-  protected def parse(bytes: Array[Byte]): S
 
-  /** Identity fast path, then exact full-content equality. Row accessors
-    * (UnsafeRow.getBinary) copy the array per row, so identity alone never
-    * hits under joins and every probe row would re-deserialize the sketch.
-    * The memcmp is the same cost class as that unavoidable per-row copy;
-    * sampled fingerprints are NOT safe here — sparse sketches are mostly
-    * zero bytes and collide across groups (caught at sf0.001). For
-    * row-heavy prefilters prefer the scalar-subquery pattern (sketch as a
-    * plan-level literal), which takes the `eq` fast path. */
-  protected final def cached(bytes: Array[Byte]): S = {
-    if (bytes eq lastBytes) return lastSketch
-    if (lastSketch == null || !java.util.Arrays.equals(lastBytes, bytes)) {
-      lastSketch = parse(bytes)
+/** One operand's parse cache: the last bytes seen and the sketch `kind`
+  * parsed from them. Identity fast path, then exact full-content
+  * equality. Row accessors (UnsafeRow.getBinary) copy the array per row,
+  * so identity alone never hits under joins and every probe row would
+  * re-deserialize the sketch. The memcmp is the same cost class as that
+  * unavoidable per-row copy; sampled fingerprints are NOT safe here —
+  * sparse sketches are mostly zero bytes and collide across groups
+  * (caught at sf0.001). For row-heavy prefilters prefer the
+  * scalar-subquery pattern (sketch as a plan-level literal), which takes
+  * the `eq` fast path.
+  *
+  * Two-sketch expressions keep one slot per operand, so a varying
+  * per-group sketch combined with a broadcast reference sketch parses each
+  * distinct image once. Callers must NOT mutate the cached sketch: combine
+  * through non-mutating surfaces (`SketchKind.union`, Cqf.merge / mergeBy
+  * / intersect / diff). */
+private[functions] final class ParseSlot[S >: Null <: AnyRef](kind: SketchKind[S]) {
+  private var lastBytes: Array[Byte] = _
+  private var last: S = _
+  /** Test hook: distinct deserializations observed by this slot. */
+  var parses: Long = 0L
+
+  def apply(bytes: Array[Byte]): S = {
+    if (bytes eq lastBytes) return last
+    if (last == null || !java.util.Arrays.equals(lastBytes, bytes)) {
+      last = kind.read(bytes)
+      parses += 1L
     }
     lastBytes = bytes
-    lastSketch
+    last
   }
 }
 
-/** Two-slot variant of [[SketchCache]] for binary (sketch, sketch)
-  * expressions: each operand memoizes independently, so the common shapes —
-  * a varying per-group sketch column combined with a broadcast reference
-  * sketch, or a singleton pair probed repeatedly — deserialize each
-  * distinct byte image once instead of twice per row. Combines must NOT
-  * mutate the cached instances: use the non-mutating kernel surfaces
-  * (Cqf.merge / mergeBy / intersect / diff) or `copied` clones. */
-private[functions] trait SketchCache2[S <: AnyRef] {
-  protected def parse(bytes: Array[Byte]): S
-  @transient private var lBytes: Array[Byte] = _
-  @transient private var lSketch: S = _
-  @transient private var rBytes: Array[Byte] = _
-  @transient private var rSketch: S = _
-  /** Test hook: distinct deserializations observed by this instance. */
-  @transient private[graft] var parses: Long = 0L
+/** One probe function: its SQL name, the kind it reads, its result type,
+  * and how it builds its expression from the SQL arguments. */
+sealed abstract class SketchProbe[S >: Null <: AnyRef](
+    val name: String, val kind: SketchKind[S], val dataType: DataType) extends Serializable {
+  def expression(args: Seq[Expression]): Expression
+  // expressions carry their entry to executors; it comes back as the
+  // table's own instance, so plans compare equal on executors too
+  protected def readResolve(): AnyRef = SketchProbe.named(name)
+  override def toString: String = name
+}
 
-  protected final def cachedLeft(bytes: Array[Byte]): S = {
-    if (bytes eq lBytes) return lSketch
-    if (lSketch == null || !java.util.Arrays.equals(lBytes, bytes)) {
-      lSketch = parse(bytes); parses += 1L
-    }
-    lBytes = bytes
-    lSketch
-  }
-  protected final def cachedRight(bytes: Array[Byte]): S = {
-    if (bytes eq rBytes) return rSketch
-    if (rSketch == null || !java.util.Arrays.equals(rBytes, bytes)) {
-      rSketch = parse(bytes); parses += 1L
-    }
-    rBytes = bytes
-    rSketch
-  }
+/** A stats readout of one sketch. */
+final class Readout[S >: Null <: AnyRef](name: String, kind: SketchKind[S], dataType: DataType)(
+    val f: S => Any) extends SketchProbe[S](name, kind, dataType) {
+  def expression(args: Seq[Expression]): Expression = SketchReadout(args.head, this)
+}
+
+/** A (sketch, key) probe. Long keys and byte keys (string or binary) each
+  * have their method; both return a long, which a BooleanType probe
+  * returns as 0 or 1. */
+sealed abstract class KeyedProbe[S >: Null <: AnyRef](name: String, kind: SketchKind[S],
+    dataType: DataType) extends SketchProbe[S](name, kind, dataType) {
+  def long(s: S, key: Long): Long
+  def bytes(s: S, key: Array[Byte]): Long
+  def expression(args: Seq[Expression]): Expression = SketchKeyedProbe(args(0), args(1), this)
+}
+
+/** A (sketch, numeric argument) probe; the argument arrives as a Double. */
+final class NumericProbe[S >: Null <: AnyRef](name: String, kind: SketchKind[S], dataType: DataType)(
+    val f: (S, Double) => Any) extends SketchProbe[S](name, kind, dataType) {
+  def expression(args: Seq[Expression]): Expression = SketchNumericProbe(args(0), args(1), this)
+}
+
+/** A combine of two sketches of one kind into a fresh one; `f` must leave
+  * both operands unchanged (they are cached parses). */
+final class SetOp[S >: Null <: AnyRef](name: String, kind: SketchKind[S])(val f: (S, S) => S)
+    extends SketchProbe[S](name, kind, BinaryType) {
+  def expression(args: Seq[Expression]): Expression = SketchSetOp(args(0), args(1), this)
+}
+
+object SketchProbe {
+  private val cqfStatsSchema: StructType = new StructType()
+    .add("quotient_bits", IntegerType).add("hash_bits", IntegerType)
+    .add("occupied_slots", LongType).add("num_slots", LongType)
+    .add("max_occupied_slots", LongType).add("size_bytes", LongType)
+    .add("distinct_keys", LongType).add("total_count", LongType)
+    .add("invertible", BooleanType)
+
+  private def union[S >: Null <: AnyRef](k: SketchKind[S]): SetOp[S] =
+    new SetOp(s"${k.fn}_union", k)(k.union)
+
+  val all: Seq[SketchProbe[_ >: Null <: AnyRef]] = Seq[SketchProbe[_ >: Null <: AnyRef]](
+    new Readout("cqf_distinct", CqfKind, LongType)(_.distinctCount),
+    new Readout("cqf_total", CqfKind, LongType)(_.totalCount),
+    new Readout("cqf_stats", CqfKind, cqfStatsSchema)(c => InternalRow(c.quotientBits,
+      c.hashBits, c.occupiedSlots, c.numSlots, c.maxOccupiedSlots, c.sizeBytes,
+      c.distinctCount, c.totalCount, c.invertible)),
+    new Readout("hll_estimate", HllKind, LongType)(_.cardinality),
+    new Readout("cms_total", CmsKind, LongType)(_.total),
+    new Readout("kll_n", KllKind, LongType)(_.n),
+    new Readout("bloom_fpp", BloomKind, DoubleType)(_.expectedFpp),
+    new Readout("ss_total", SsKind, LongType)(_.total),
+    // the global error offset: max undercount of any counter, max true
+    // count of any absent key; bounded by 2*total/k. In-query bound checks
+    // assert `ss_offset(sk) < threshold` to prove candidate completeness
+    new Readout("ss_offset", SsKind, LongType)(_.offset),
+    // exact below capacity, the (k-1)/u_k estimator at capacity
+    new Readout("kmv_distinct", KmvKind, LongType)(_.estimateLong),
+    // retained entries: the exact distinct count while kmv_is_exact
+    new Readout("kmv_size", KmvKind, LongType)(_.size.toLong),
+    // true while the sketch never evicted, so its answers are exact
+    new Readout("kmv_is_exact", KmvKind, BooleanType)(_.isExact),
+
+    new KeyedProbe[Cqf]("cqf_count", CqfKind, LongType) {
+      def long(c: Cqf, key: Long): Long = c.count(key)
+      def bytes(c: Cqf, key: Array[Byte]): Long = c.countBytes(key)
+    },
+    new KeyedProbe[Cqf]("cqf_contains", CqfKind, BooleanType) {
+      def long(c: Cqf, key: Long): Long = c.count(key)
+      def bytes(c: Cqf, key: Array[Byte]): Long = c.countBytes(key)
+    },
+    new KeyedProbe[CountMinSketch]("cms_estimate", CmsKind, LongType) {
+      def long(c: CountMinSketch, key: Long): Long = c.estimate(key)
+      def bytes(c: CountMinSketch, key: Array[Byte]): Long = c.estimateHash(
+        WangHash.mixBytes(key, CountMinSketch.Seed1), WangHash.mixBytes(key, CountMinSketch.Seed2))
+    },
+    // the SpaceSaving upper bound: count+offset when the key is monitored,
+    // offset when not — never an underestimate
+    new KeyedProbe[FrequentItems]("ss_estimate", SsKind, LongType) {
+      def long(f: FrequentItems, key: Long): Long = f.estimate(key)
+      def bytes(f: FrequentItems, key: Array[Byte]): Long = f.estimateBytes(key)
+    },
+    new KeyedProbe[BloomSketch]("bloom_might_contain", BloomKind, BooleanType) {
+      def long(b: BloomSketch, key: Long): Long = if (b.mightContain(key)) 1L else 0L
+      def bytes(b: BloomSketch, key: Array[Byte]): Long =
+        if (b.mightContainHash(WangHash.mixBytes(key, BloomSketch.Seed1),
+          WangHash.mixBytes(key, BloomSketch.Seed2))) 1L else 0L
+    },
+
+    new NumericProbe("td_quantile", TDigestKind, DoubleType)(_.quantile(_)),
+    new NumericProbe("td_cdf", TDigestKind, DoubleType)(_.cdf(_)),
+    new NumericProbe("kll_quantile", KllKind, DoubleType)(_.quantile(_)),
+    new NumericProbe("kll_rank", KllKind, LongType)(_.rank(_)),
+
+    new SetOp("cqf_intersect", CqfKind)(_.intersect(_)),
+    new SetOp("cqf_diff", CqfKind)(_.diff(_))
+  ) ++ SketchKind.all.filterNot(_ == CqfKind).map(union(_))
+
+  private lazy val byName: Map[String, SketchProbe[_ >: Null <: AnyRef]] =
+    all.map(p => p.name -> p).toMap
+
+  def named(name: String): SketchProbe[_ >: Null <: AnyRef] = byName(name)
 }
 
 /** Analysis-time guard for probes whose every child is a serialized
   * sketch column: non-binary input must fail the query at analysis, not
-  * as a per-row ClassCastException (same rule KeyedProbeCodegen states
-  * for keyed probes). */
+  * as a per-row ClassCastException (the same rule the keyed and numeric
+  * probes state for their sketch argument). */
 private[functions] trait SketchBytesInput { self: Expression =>
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     self.children.find(_.dataType != BinaryType) match {
       case Some(c) => TypeCheckFailure(
         s"$prettyName requires a binary sketch column, got ${c.dataType}")
       case None => TypeCheckSuccess
     }
-  }
 }
 
 /** Whole-stage codegen for (sketch, sketch) binary ops: the generated code
@@ -95,13 +211,11 @@ private[functions] trait SketchBytesInput { self: Expression =>
   * operands must be binary AT ANALYSIS — unchecked, a non-binary column
   * breaks janino compilation (an int slot into compute(byte[], byte[])). */
 private[functions] trait BinaryBytesCodegen { self: BinaryExpression =>
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType || right.dataType != BinaryType)
       TypeCheckFailure(s"$prettyName requires two binary sketch columns, " +
         s"got (${left.dataType}, ${right.dataType})")
     else TypeCheckSuccess
-  }
   def compute(a: Array[Byte], b: Array[Byte]): Array[Byte]
   // NOTE: a zero-length image deliberately fails at the kernel parse
   // (truncated-image validation), with no "empty is identity" shortcut:
@@ -112,10 +226,7 @@ private[functions] trait BinaryBytesCodegen { self: BinaryExpression =>
   // which the stateless-adopt merge rule composes safely).
   override def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("expr", this, getClass.getName)
     nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
   }
@@ -139,16 +250,30 @@ private[functions] object KeyConv {
   }
 }
 
+// ------------------------------------------------- the four probe shapes
+
+case class SketchReadout[S >: Null <: AnyRef](child: Expression, probe: Readout[S])
+    extends UnaryExpression with CodegenFallback with SketchBytesInput {
+  override def prettyName: String = probe.name
+  override def dataType: DataType = probe.dataType
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  @transient private lazy val sketch = new ParseSlot(probe.kind)
+  override def nullSafeEval(sk: Any): Any = probe.f(sketch(sk.asInstanceOf[Array[Byte]]))
+  override protected def withNewChildInternal(c: Expression): SketchReadout[S] = copy(child = c)
+}
+
 /** Whole-stage codegen for (sketchBytes, key) probes: the generated code
-  * calls the expression's typed evalLong/evalUtf8 helper directly — no
+  * calls the typed evalLong/evalUtf8/evalBytes helper directly — no
   * InternalRow boxing per row, which matters when the probe is a row-level
   * prefilter over a large scan (e.g. WHERE bloom_might_contain(...)). */
-private[functions] trait KeyedProbeCodegen { self: BinaryExpression =>
-  protected def withStringKey: Boolean = KeyConv.isBytesKey(right.dataType)
+case class SketchKeyedProbe[S >: Null <: AnyRef](left: Expression, right: Expression,
+    probe: KeyedProbe[S]) extends BinaryExpression {
+  override def prettyName: String = probe.name
+  override def dataType: DataType = probe.dataType
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
   // bad key types must fail the query at analysis — unchecked they break
   // janino compilation (double arg into a long helper) or throw per-row
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
       TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${left.dataType}")
     else right.dataType match {
@@ -157,109 +282,88 @@ private[functions] trait KeyedProbeCodegen { self: BinaryExpression =>
       case other =>
         TypeCheckFailure(s"$prettyName: key must be integral or string, got $other")
     }
-  }
+  @transient private lazy val sketch = new ParseSlot(probe.kind)
   /** Converter resolved once, not re-pattern-matched per interpreted row. */
-  @transient protected lazy val longKey: Any => Long = KeyConv.toLong(right.dataType)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+  @transient private lazy val longKey: Any => Long = KeyConv.toLong(right.dataType)
+
+  def evalLong(sk: Array[Byte], key: Long): Long = probe.long(sketch(sk), key)
+  def evalUtf8(sk: Array[Byte], key: UTF8String): Long = probe.bytes(sketch(sk), key.getBytes)
+  def evalBytes(sk: Array[Byte], key: Array[Byte]): Long = probe.bytes(sketch(sk), key)
+
+  override def nullSafeEval(sk: Any, key: Any): Any = {
+    val bytes = sk.asInstanceOf[Array[Byte]]
+    val v = right.dataType match {
+      case BinaryType => evalBytes(bytes, key.asInstanceOf[Array[Byte]])
+      case StringType => evalUtf8(bytes, key.asInstanceOf[UTF8String])
+      case _ => evalLong(bytes, longKey(key))
+    }
+    if (dataType == BooleanType) v != 0L else v
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("probe", this, getClass.getName)
     val helper = right.dataType match {
       case BinaryType => "evalBytes"
       case StringType => "evalUtf8"
       case _ => "evalLong"
     }
+    val asBoolean = if (dataType == BooleanType) " != 0L" else ""
     nullSafeCodeGen(ctx, ev, (sk, key) =>
-      s"${ev.value} = $ref.$helper($sk, $key);")
+      s"${ev.value} = $ref.$helper($sk, $key)$asBoolean;")
   }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchKeyedProbe[S] =
+    copy(left = l, right = r)
+}
+
+/** (sketchBytes, numeric) probes: the numeric argument accepts ANY
+  * numeric type and converts once to Double — SQL literals do NOT arrive
+  * as DoubleType (`td_quantile(td, 0.5)` parses 0.5 as DECIMAL(1,1),
+  * `kll_rank(sk, 100)` as INT), so a bare asInstanceOf[Double] would pass
+  * analysis and then ClassCastException on every row. */
+case class SketchNumericProbe[S >: Null <: AnyRef](left: Expression, right: Expression,
+    probe: NumericProbe[S]) extends BinaryExpression with CodegenFallback {
+  override def prettyName: String = probe.name
+  override def dataType: DataType = probe.dataType
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType != BinaryType)
+      TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${left.dataType}")
+    else right.dataType match {
+      case _: NumericType => TypeCheckSuccess
+      case other => TypeCheckFailure(s"$prettyName: argument must be numeric, got $other")
+    }
+  @transient private lazy val sketch = new ParseSlot(probe.kind)
+  /** Converter resolved once, not re-pattern-matched per row. */
+  @transient private lazy val argToDouble: Any => Double = right.dataType match {
+    case DoubleType => v => v.asInstanceOf[Double]
+    case FloatType => v => v.asInstanceOf[Float].toDouble
+    case _: DecimalType => v => v.asInstanceOf[Decimal].toDouble
+    case ByteType => v => v.asInstanceOf[Byte].toDouble
+    case ShortType => v => v.asInstanceOf[Short].toDouble
+    case IntegerType => v => v.asInstanceOf[Int].toDouble
+    case LongType => v => v.asInstanceOf[Long].toDouble
+    case other => throw new IllegalArgumentException(s"unsupported numeric type $other")
+  }
+  override def nullSafeEval(sk: Any, x: Any): Any =
+    probe.f(sketch(sk.asInstanceOf[Array[Byte]]), argToDouble(x))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchNumericProbe[S] =
+    copy(left = l, right = r)
+}
+
+case class SketchSetOp[S >: Null <: AnyRef](left: Expression, right: Expression, op: SetOp[S])
+    extends BinaryExpression with BinaryBytesCodegen {
+  override def prettyName: String = op.name
+  override def dataType: DataType = BinaryType
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+  @transient private lazy val lhs = new ParseSlot(op.kind)
+  @transient private lazy val rhs = new ParseSlot(op.kind)
+  /** Test hook: distinct deserializations observed by both operands. */
+  private[graft] def parses: Long = lhs.parses + rhs.parses
+  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] = op.kind.write(op.f(lhs(a), rhs(b)))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchSetOp[S] =
+    copy(left = l, right = r)
 }
 
 // ------------------------------------------------------------------ CQF
-
-case class CqfCount(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache[Cqf] with KeyedProbeCodegen {
-  override def prettyName: String = "cqf_count"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  def evalLong(sk: Array[Byte], key: Long): Long = cached(sk).count(key)
-  def evalUtf8(sk: Array[Byte], key: UTF8String): Long =
-    cached(sk).countBytes(key.getBytes)
-  def evalBytes(sk: Array[Byte], key: Array[Byte]): Long =
-    cached(sk).countBytes(key)
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (KeyConv.isBytesKey(right.dataType))
-      cached(bytes).countBytes(KeyConv.toBytes(key, right.dataType))
-    else evalLong(bytes, longKey(key))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CqfCount =
-    copy(left = l, right = r)
-}
-
-case class CqfContains(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache[Cqf] with KeyedProbeCodegen {
-  override def prettyName: String = "cqf_contains"
-  override def dataType: DataType = BooleanType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  def evalLong(sk: Array[Byte], key: Long): Boolean = cached(sk).count(key) > 0
-  def evalUtf8(sk: Array[Byte], key: UTF8String): Boolean =
-    cached(sk).countBytes(key.getBytes) > 0
-  def evalBytes(sk: Array[Byte], key: Array[Byte]): Boolean =
-    cached(sk).countBytes(key) > 0
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (KeyConv.isBytesKey(right.dataType))
-      cached(bytes).countBytes(KeyConv.toBytes(key, right.dataType)) > 0
-    else evalLong(bytes, longKey(key))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CqfContains =
-    copy(left = l, right = r)
-}
-
-case class CqfDistinct(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[Cqf]
-    with SketchBytesInput {
-  override def prettyName: String = "cqf_distinct"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).distinctCount
-  override protected def withNewChildInternal(c: Expression): CqfDistinct = copy(child = c)
-}
-
-case class CqfTotal(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[Cqf]
-    with SketchBytesInput {
-  override def prettyName: String = "cqf_total"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).totalCount
-  override protected def withNewChildInternal(c: Expression): CqfTotal = copy(child = c)
-}
-
-case class CqfStats(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[Cqf]
-    with SketchBytesInput {
-  override def prettyName: String = "cqf_stats"
-  override def dataType: DataType = CqfStats.schema
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any = {
-    val c = cached(sk.asInstanceOf[Array[Byte]])
-    InternalRow(c.quotientBits, c.hashBits, c.occupiedSlots, c.numSlots,
-      c.maxOccupiedSlots, c.sizeBytes, c.distinctCount, c.totalCount, c.invertible)
-  }
-  override protected def withNewChildInternal(c: Expression): CqfStats = copy(child = c)
-}
-object CqfStats {
-  val schema: StructType = new StructType()
-    .add("quotient_bits", IntegerType).add("hash_bits", IntegerType)
-    .add("occupied_slots", LongType).add("num_slots", LongType)
-    .add("max_occupied_slots", LongType).add("size_bytes", LongType)
-    .add("distinct_keys", LongType).add("total_count", LongType)
-    .add("invertible", BooleanType)
-}
 
 /** Kind-agnostic sketch-state metrics over ANY graft sketch column —
   * dispatches on the serialized magic header (see [[SketchMeta]] for
@@ -288,24 +392,6 @@ object SketchMetaExpr {
     .add("err_bound", DoubleType)
 }
 
-/** `<fn>_union` for every [[SketchKind]] but cqf (whose [[CqfUnion]]
-  * takes a combiner mode): the union of two serialized sketches of one
-  * kind, by the kind's non-mutating `union`, so the cached operands
-  * stay valid for the next row. */
-case class SketchUnion[S >: Null <: AnyRef](left: Expression, right: Expression,
-    kind: SketchKind[S])
-    extends BinaryExpression with SketchCache2[S] with BinaryBytesCodegen {
-  override def prettyName: String = s"${kind.fn}_union"
-  override def dataType: DataType = BinaryType
-  // the name already says the kind, so plans print only the SQL arguments
-  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
-  protected def parse(bytes: Array[Byte]): S = kind.read(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    kind.write(kind.union(cachedLeft(a), cachedRight(b)))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchUnion[S] =
-    copy(left = l, right = r)
-}
-
 /** Per-key combine of two CQFs under a NAMED combiner — the SQL surface
   * of the reference's closure-taking merge_by
   * (/root/reference/src/cqf.rs:202-213). Built-in modes: 'sum' (kernel
@@ -318,24 +404,25 @@ case class SketchUnion[S >: Null <: AnyRef](left: Expression, right: Expression,
   * key (mergeBy contract). The Scala `Cqf.mergeBy(op)` remains the
   * arbitrary-closure parity surface. */
 case class CqfUnion(left: Expression, right: Expression, mode: String = "sum")
-    extends BinaryExpression with SketchCache2[Cqf] with BinaryBytesCodegen {
+    extends BinaryExpression with BinaryBytesCodegen {
   override def prettyName: String = "cqf_union"
   override def dataType: DataType = BinaryType
   // invalid mode literals fail the query at analysis, not on the first row
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     if (!CqfUnion.knownMode(mode))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      TypeCheckFailure(
         s"cqf_union mode must be 'sum', a built-in combiner " +
         s"(${CqfUnion.builtinNames.mkString("'", "', '", "'")}), or a " +
         s"registered combiner name, got '$mode'")
     else super.checkInputDataTypes()
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
+  @transient private lazy val lhs = new ParseSlot(CqfKind)
+  @transient private lazy val rhs = new ParseSlot(CqfKind)
   @transient private lazy val op: (Long, Long) => Long =
     if (mode == "sum") null // fast path: kernel merge
     else CqfUnion.combiner(mode)
   def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val x = cachedLeft(a)
-    val y = cachedRight(b)
+    val x = lhs(a)
+    val y = rhs(b)
     // Cqf.merge / mergeBy build a fresh result — cached operands untouched
     (if (op == null) Cqf.merge(x, y) else Cqf.mergeBy(x, y, op)).serialize()
   }
@@ -372,28 +459,6 @@ object CqfUnion {
   }
 }
 
-case class CqfIntersect(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[Cqf] with BinaryBytesCodegen {
-  override def prettyName: String = "cqf_intersect"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).intersect(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CqfIntersect =
-    copy(left = l, right = r)
-}
-
-case class CqfDiff(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache2[Cqf] with BinaryBytesCodegen {
-  override def prettyName: String = "cqf_diff"
-  override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    cachedLeft(a).diff(cachedRight(b)).serialize()
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CqfDiff =
-    copy(left = l, right = r)
-}
-
 /** Returns a copy of the sketch with the key's multiplicity overwritten to
   * `count` (inserted when absent) — the reference's set_count
   * (/root/reference/src/cqf.rs:129-139) as a pure expression. */
@@ -401,8 +466,7 @@ case class CqfSetCount(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
   override def prettyName: String = "cqf_set_count"
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     if (first.dataType != BinaryType)
       TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${first.dataType}")
     else second.dataType match {
@@ -414,7 +478,6 @@ case class CqfSetCount(first: Expression, second: Expression, third: Expression)
       case other =>
         TypeCheckFailure(s"$prettyName: key must be integral or string, got $other")
     }
-  }
   /** Converter resolved once, not re-pattern-matched per row. */
   @transient private lazy val longKey: Any => Long = KeyConv.toLong(second.dataType)
   override def nullSafeEval(sk: Any, key: Any, count: Any): Any = {
@@ -508,177 +571,6 @@ case class CqfZipItems(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-// ------------------------------------------------------------------ HLL
-
-case class HllEstimate(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[HllSketch]
-    with SketchBytesInput {
-  override def prettyName: String = "hll_estimate"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).cardinality
-  override protected def withNewChildInternal(c: Expression): HllEstimate = copy(child = c)
-}
-
-// ------------------------------------------------------------------ CMS
-
-case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache[CountMinSketch] with KeyedProbeCodegen {
-  override def prettyName: String = "cms_estimate"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(bytes)
-  def evalLong(sk: Array[Byte], key: Long): Long = cached(sk).estimate(key)
-  def evalUtf8(sk: Array[Byte], key: UTF8String): Long =
-    evalBytes(sk, key.getBytes)
-  def evalBytes(sk: Array[Byte], b: Array[Byte]): Long =
-    cached(sk).estimateHash(WangHash.mixBytes(b, CountMinSketch.Seed1),
-      WangHash.mixBytes(b, CountMinSketch.Seed2))
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (KeyConv.isBytesKey(right.dataType))
-      evalBytes(bytes, KeyConv.toBytes(key, right.dataType))
-    else evalLong(bytes, longKey(key))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEstimate =
-    copy(left = l, right = r)
-}
-
-case class CmsTotal(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[CountMinSketch]
-    with SketchBytesInput {
-  override def prettyName: String = "cms_total"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).total
-  override protected def withNewChildInternal(c: Expression): CmsTotal = copy(child = c)
-}
-
-// ------------------------------------------------------------------ t-digest
-
-/** (sketchBytes, numeric) probes: the numeric argument accepts ANY
-  * numeric type and converts once to Double — SQL literals do NOT arrive
-  * as DoubleType (`td_quantile(td, 0.5)` parses 0.5 as DECIMAL(1,1),
-  * `kll_rank(sk, 100)` as INT), so a bare asInstanceOf[Double] would pass
-  * analysis and then ClassCastException on every row. */
-private[functions] trait SketchDoubleArg { self: BinaryExpression =>
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    if (left.dataType != BinaryType)
-      TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${left.dataType}")
-    else right.dataType match {
-      case _: NumericType => TypeCheckSuccess
-      case other => TypeCheckFailure(s"$prettyName: argument must be numeric, got $other")
-    }
-  }
-  /** Converter resolved once, not re-pattern-matched per row. */
-  @transient protected lazy val argToDouble: Any => Double = right.dataType match {
-    case DoubleType => v => v.asInstanceOf[Double]
-    case FloatType => v => v.asInstanceOf[Float].toDouble
-    case _: DecimalType => v => v.asInstanceOf[Decimal].toDouble
-    case ByteType => v => v.asInstanceOf[Byte].toDouble
-    case ShortType => v => v.asInstanceOf[Short].toDouble
-    case IntegerType => v => v.asInstanceOf[Int].toDouble
-    case LongType => v => v.asInstanceOf[Long].toDouble
-    case other => throw new IllegalArgumentException(s"unsupported numeric type $other")
-  }
-}
-
-case class TdQuantile(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache[TDigest]
-    with SketchDoubleArg {
-  override def prettyName: String = "td_quantile"
-  override def dataType: DataType = DoubleType
-  protected def parse(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-  override def nullSafeEval(sk: Any, q: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).quantile(argToDouble(q))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TdQuantile =
-    copy(left = l, right = r)
-}
-
-case class TdCdf(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache[TDigest]
-    with SketchDoubleArg {
-  override def prettyName: String = "td_cdf"
-  override def dataType: DataType = DoubleType
-  protected def parse(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-  override def nullSafeEval(sk: Any, x: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).cdf(argToDouble(x))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TdCdf =
-    copy(left = l, right = r)
-}
-
-// ------------------------------------------------------------------ KLL
-
-case class KllQuantile(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache[KllSketch]
-    with SketchDoubleArg {
-  override def prettyName: String = "kll_quantile"
-  override def dataType: DataType = DoubleType
-  protected def parse(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any, q: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).quantile(argToDouble(q))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantile =
-    copy(left = l, right = r)
-}
-
-case class KllRank(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache[KllSketch]
-    with SketchDoubleArg {
-  override def prettyName: String = "kll_rank"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any, x: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).rank(argToDouble(x))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllRank =
-    copy(left = l, right = r)
-}
-
-case class KllN(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[KllSketch]
-    with SketchBytesInput {
-  override def prettyName: String = "kll_n"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any = cached(sk.asInstanceOf[Array[Byte]]).n
-  override protected def withNewChildInternal(c: Expression): KllN = copy(child = c)
-}
-
-// ------------------------------------------------------------------ Bloom
-
-case class BloomMightContain(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache[BloomSketch] with KeyedProbeCodegen {
-  override def prettyName: String = "bloom_might_contain"
-  override def dataType: DataType = BooleanType
-  protected def parse(bytes: Array[Byte]): BloomSketch = BloomSketch.deserialize(bytes)
-  def evalLong(sk: Array[Byte], key: Long): Boolean = cached(sk).mightContain(key)
-  def evalUtf8(sk: Array[Byte], key: UTF8String): Boolean =
-    evalBytes(sk, key.getBytes)
-  def evalBytes(sk: Array[Byte], b: Array[Byte]): Boolean =
-    cached(sk).mightContainHash(WangHash.mixBytes(b, BloomSketch.Seed1),
-      WangHash.mixBytes(b, BloomSketch.Seed2))
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (KeyConv.isBytesKey(right.dataType))
-      evalBytes(bytes, KeyConv.toBytes(key, right.dataType))
-    else evalLong(bytes, longKey(key))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(left = l, right = r)
-}
-
-case class BloomFpp(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[BloomSketch]
-    with SketchBytesInput {
-  override def prettyName: String = "bloom_fpp"
-  override def dataType: DataType = DoubleType
-  protected def parse(bytes: Array[Byte]): BloomSketch = BloomSketch.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).expectedFpp
-  override protected def withNewChildInternal(c: Expression): BloomFpp = copy(child = c)
-}
-
 // --------------------------------------------------- reference interop
 
 /** Re-serialize a graft CQF into the reference engine's exact byte image
@@ -686,17 +578,13 @@ case class BloomFpp(child: Expression)
   * bytes a `new_file` checkpoint holds, so reference users can hand
   * sketches back and forth without re-building. */
 case class CqfToRef(child: Expression)
-    extends UnaryExpression with SketchCache[Cqf] with SketchBytesInput {
+    extends UnaryExpression with SketchBytesInput {
   override def prettyName: String = "cqf_to_ref"
   override def dataType: DataType = BinaryType
-  protected def parse(bytes: Array[Byte]): Cqf = Cqf.deserialize(bytes)
-  def compute(a: Array[Byte]): Array[Byte] =
-    Cqf.exportRefLayout(cached(a))
+  @transient private lazy val sketch = new ParseSlot(CqfKind)
+  def compute(a: Array[Byte]): Array[Byte] = Cqf.exportRefLayout(sketch(a))
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("expr", this, getClass.getName)
     nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
@@ -712,10 +600,7 @@ case class CqfFromRef(child: Expression)
   def compute(a: Array[Byte]): Array[Byte] =
     Cqf.importRefLayout(a).serialize()
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("expr", this, getClass.getName)
     nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
@@ -728,15 +613,12 @@ case class CqfFromRef(child: Expression)
   * wang_unhash: a LONG bits argument would ClassCastException per row,
   * and bits outside [1, 64] degenerates (mask(0) maps every key to 0). */
 private[functions] trait WangBitsChecked { self: BinaryExpression =>
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    left.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => right.dataType match {
-        case IntegerType => TypeCheckSuccess
-        case other => TypeCheckFailure(s"$prettyName: bits must be INT, got $other")
-      }
-      case other => TypeCheckFailure(s"$prettyName: key must be integral, got $other")
+  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
+    case ByteType | ShortType | IntegerType | LongType => right.dataType match {
+      case IntegerType => TypeCheckSuccess
+      case other => TypeCheckFailure(s"$prettyName: bits must be INT, got $other")
     }
+    case other => TypeCheckFailure(s"$prettyName: key must be integral, got $other")
   }
   @transient protected lazy val keyConv: Any => Long = KeyConv.toLong(left.dataType)
   protected final def bitsOf(bits: Any): Int = {
@@ -759,10 +641,7 @@ case class WangHashExpr(left: Expression, right: Expression)
   // generated call is one static invoke of ~15 ALU ops; (long) casts
   // cover all four integral child types (sign-extending, matching
   // KeyConv.toLong on the interpreted path).
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (k, b) =>
       s"""${ev.value} = graft.sketch.WangHash.hashChecked((long)$k, $b, "$prettyName");""")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): WangHashExpr =
@@ -775,10 +654,7 @@ case class WangUnhashExpr(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullSafeEval(h: Any, bits: Any): Any =
     WangHash.unhash(keyConv(h), bitsOf(bits))
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (k, b) =>
       s"""${ev.value} = graft.sketch.WangHash.unhashChecked((long)$k, $b, "$prettyName");""")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): WangUnhashExpr =
@@ -797,19 +673,17 @@ case class WangUnhashExpr(left: Expression, right: Expression)
   * entry, so candidate filters use ub (complete: no true heavy hitter
   * can fall below its ub). */
 case class SsTopk(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback with SketchCache[FrequentItems] {
+    extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "ss_topk"
   override def dataType: DataType = ArrayType(SsTopk.entrySchema, containsNull = false)
-  protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != BinaryType)
       TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${child.dataType}")
     else if (n < 1) TypeCheckFailure(s"$prettyName: n must be >= 1, got $n")
     else TypeCheckSuccess
-  }
+  @transient private lazy val sketch = new ParseSlot(SsKind)
   override def nullSafeEval(sk: Any): Any = {
-    val f = cached(sk.asInstanceOf[Array[Byte]])
+    val f = sketch(sk.asInstanceOf[Array[Byte]])
     val off = f.offset
     // key_str renders only KNOWN-text keys; raw binary keys
     // (fingerprints etc.) must not surface as mojibake strings
@@ -832,110 +706,23 @@ object SsTopk {
     .add("ub", LongType, nullable = false)
 }
 
-/** Upper-bound frequency estimate (the SpaceSaving count): count+offset
-  * when the key is monitored, offset when not — never an underestimate. */
-case class SsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression with SketchCache[FrequentItems] with KeyedProbeCodegen {
-  override def prettyName: String = "ss_estimate"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  def evalLong(sk: Array[Byte], key: Long): Long = cached(sk).estimate(key)
-  def evalUtf8(sk: Array[Byte], key: UTF8String): Long = evalBytes(sk, key.getBytes)
-  def evalBytes(sk: Array[Byte], b: Array[Byte]): Long = cached(sk).estimateBytes(b)
-  override def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (KeyConv.isBytesKey(right.dataType))
-      evalBytes(bytes, KeyConv.toBytes(key, right.dataType))
-    else evalLong(bytes, longKey(key))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SsEstimate =
-    copy(left = l, right = r)
-}
-
-case class SsTotal(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[FrequentItems]
-    with SketchBytesInput {
-  override def prettyName: String = "ss_total"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).total
-  override protected def withNewChildInternal(c: Expression): SsTotal = copy(child = c)
-}
-
-/** The sketch's global error offset: max undercount of any counter, max
-  * true count of any absent key; bounded by 2*total/k. In-query bound
-  * checks assert `ss_offset(sk) < threshold` to prove candidate
-  * completeness in the same pass that uses the candidates. */
-case class SsOffset(child: Expression)
-    extends UnaryExpression with CodegenFallback with SketchCache[FrequentItems]
-    with SketchBytesInput {
-  override def prettyName: String = "ss_offset"
-  override def dataType: DataType = LongType
-  protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).offset
-  override protected def withNewChildInternal(c: Expression): SsOffset = copy(child = c)
-}
-
 // ------------------------------------------------------------------ KMV
-
-private[functions] trait KmvUnaryProbe extends SketchCache[KmvSketch]
-    with SketchBytesInput { self: UnaryExpression =>
-  protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-}
-
-/** Distinct-count readout of a bottom-k sketch: exact below capacity,
-  * the (k-1)/u_k estimator at capacity. */
-case class KmvDistinct(child: Expression)
-    extends UnaryExpression with CodegenFallback with KmvUnaryProbe {
-  override def prettyName: String = "kmv_distinct"
-  override def dataType: DataType = LongType
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).estimateLong
-  override protected def withNewChildInternal(c: Expression): KmvDistinct = copy(child = c)
-}
-
-/** Retained-entry count; equals the exact distinct count whenever it is
-  * below the sketch's k (see kmv_is_exact). */
-case class KmvSize(child: Expression)
-    extends UnaryExpression with CodegenFallback with KmvUnaryProbe {
-  override def prettyName: String = "kmv_size"
-  override def dataType: DataType = LongType
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).size.toLong
-  override protected def withNewChildInternal(c: Expression): KmvSize = copy(child = c)
-}
-
-/** True while the sketch never evicted — its answers are exact, not
-  * estimates. In-query assertions use this to prove a readout is exact
-  * in the same pass that consumes it. */
-case class KmvIsExact(child: Expression)
-    extends UnaryExpression with CodegenFallback with KmvUnaryProbe {
-  override def prettyName: String = "kmv_is_exact"
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(sk: Any): Any =
-    cached(sk.asInstanceOf[Array[Byte]]).isExact
-  override protected def withNewChildInternal(c: Expression): KmvIsExact = copy(child = c)
-}
 
 /** Up to n sampled distinct keys in hash order — a deterministic,
   * partitioning-invariant uniform sample. key_str renders only
   * KNOWN-text keys (same policy as ss_topk). */
 case class KmvSample(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback with SketchCache[KmvSketch] {
+    extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "kmv_sample"
   override def dataType: DataType = ArrayType(KmvSample.entrySchema, containsNull = false)
-  protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+  override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != BinaryType)
       TypeCheckFailure(s"$prettyName requires a binary sketch column, got ${child.dataType}")
     else if (n < 1) TypeCheckFailure(s"$prettyName: n must be >= 1, got $n")
     else TypeCheckSuccess
-  }
+  @transient private lazy val sketch = new ParseSlot(KmvKind)
   override def nullSafeEval(sk: Any): Any = {
-    val s = cached(sk.asInstanceOf[Array[Byte]])
+    val s = sketch(sk.asInstanceOf[Array[Byte]])
     val text = s.textKeys
     val rows: Array[Any] = s.sample(n).map { case (key, kb) =>
       InternalRow(key,
@@ -955,14 +742,13 @@ object KmvSample {
 /** Bottom-k Jaccard resemblance between two kmv sketch columns: exact
   * while both sides are exact (never evicted), else within ~O(1/sqrt(k)). */
 case class KmvJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with SketchCache2[KmvSketch]
-    with SketchBytesInput {
+    extends BinaryExpression with CodegenFallback with SketchBytesInput {
   override def prettyName: String = "kmv_jaccard"
   override def dataType: DataType = DoubleType
-  protected def parse(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
+  @transient private lazy val lhs = new ParseSlot(KmvKind)
+  @transient private lazy val rhs = new ParseSlot(KmvKind)
   override def nullSafeEval(a: Any, b: Any): Any =
-    cachedLeft(a.asInstanceOf[Array[Byte]])
-      .jaccard(cachedRight(b.asInstanceOf[Array[Byte]]))
+    lhs(a.asInstanceOf[Array[Byte]]).jaccard(rhs(b.asInstanceOf[Array[Byte]]))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvJaccard =
     copy(left = l, right = r)
 }

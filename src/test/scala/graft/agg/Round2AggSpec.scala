@@ -107,7 +107,7 @@ class Round2AggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val typed = ds.groupByKey(_._1)
       .mapValues(v => java.lang.Long.valueOf(v._2))(
         org.apache.spark.sql.Encoders.LONG)
-      .agg(new CqfLongAggregator(10, 64).toColumn.name("sk"))
+      .agg(new KeyedAggregator(SketchBuild.CqfBuild(10, 64, compact = false)).toColumn.name("sk"))
       .map { case (g, bytes) =>
         (g, graft.sketch.Cqf.deserialize(bytes).distinctCount)
       }

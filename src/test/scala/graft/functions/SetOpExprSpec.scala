@@ -50,8 +50,9 @@ class SetOpExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.BinaryType
     val ref = cqfBytes(1L to 50L)
-    val expr = CqfIntersect(Literal(Array.emptyByteArray, BinaryType),
-      Literal(Array.emptyByteArray, BinaryType))
+    val expr = SketchSetOp(Literal(Array.emptyByteArray, BinaryType),
+      Literal(Array.emptyByteArray, BinaryType),
+      SketchProbe.named("cqf_intersect").asInstanceOf[SetOp[Cqf]])
     // simulate 1000 rows: varying left operand, SAME-CONTENT right operand
     // delivered as fresh arrays (row accessors copy binary columns per row)
     var i = 0
