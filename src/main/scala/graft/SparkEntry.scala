@@ -49,6 +49,32 @@ object SparkEntry {
   private def tb(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.ops.TextOps.rebalanced(t(spark, dir, name))
 
+  /** Fixture table `name` opened as a stream: the file source wants a
+    * directory, so it streams the sf dir under the table's schema with a
+    * glob filter selecting just the table's file. */
+  private def streamOf(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.readStream.schema(t(spark, dir, name).schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
+  /** Run a streaming frame to the memory sink `name` under AvailableNow
+    * (one pass over the files present) and return the sink's table. */
+  private def toMemory(stream: DataFrame, name: String, outputMode: String): DataFrame = {
+    stream.writeStream.format("memory").queryName(name).outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    stream.sparkSession.table(name)
+  }
+
+  /** Materialize a state query's (small) result, then delete the
+    * throwaway state dir it read: bench reps and plan audits re-execute
+    * the query, and each run would otherwise leak a store under
+    * java.io.tmpdir. */
+  private def collectThenDelete(result: DataFrame, stateDir: String): DataFrame = {
+    val rows = result.collect()
+    graft.util.ParquetState.deleteRecursively(new java.io.File(stateDir))
+    result.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("cqf_count_by_flag")(spark, "/root/testdata/sf0.001")
@@ -410,41 +436,23 @@ object SparkEntry {
       // Structured Streaming surface: the same mergeable aggregate under
       // an incremental plan (AvailableNow over the file source, complete
       // mode) — results must equal the batch/DuckDB answer exactly
-      GraftFunctions.registerAll(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // the file source wants a directory: stream the sf dir with a glob
-      // filter selecting just the events table file(s)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      toMemory(streamOf(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(api.cqf_agg(col("user_id"), 12, 64).as("sk"))
-        .select(col("event_type"), api.cqf_distinct(col("sk")).as("distinct_users"))
-        .writeStream.format("memory").queryName("graft_stream_distinct")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_distinct")
+        .select(col("event_type"), api.cqf_distinct(col("sk")).as("distinct_users")),
+        "graft_stream_distinct", "complete")
     }),
 
     "streaming_windowed_distinct" -> ((s, dir) => {
       // event-time tumbling windows over the stream: exact distinct per
       // (day, event_type); complete mode so every window is emitted and
       // the result equals the batch/DuckDB date_trunc answer
-      GraftFunctions.registerAll(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      toMemory(streamOf(s, dir, "events")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(api.cqf_agg(col("user_id"), 10, 64).as("sk"))
         .select(col("window.start").as("window_start"), col("event_type"),
-          api.cqf_distinct(col("sk")).as("distinct_users"))
-        .writeStream.format("memory").queryName("graft_stream_windowed")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_windowed")
+          api.cqf_distinct(col("sk")).as("distinct_users")),
+        "graft_stream_windowed", "complete")
     }),
 
     "streaming_append_windowed" -> ((s, dir) => {
@@ -455,10 +463,7 @@ object SparkEntry {
       // no-data batch advances the watermark to max(ts) - delay and
       // flushes every closed window; the last (still-open) day stays in
       // state and is NOT emitted, which the oracle reproduces.
-      GraftFunctions.registerAll(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = streamOf(s, dir, "events")
         // watermarks require TIMESTAMP; the table stores TIMESTAMP_NTZ.
         // The session timezone is pinned to UTC (Verify/Bench builders),
         // so the cast out and back is wall-value identity
@@ -466,16 +471,11 @@ object SparkEntry {
       val agg = graft.streaming.StreamingSketch.windowedAgg(
         src, col("ts"), "1 hour", "1 day",
         Seq(col("event_type")), api.cqf_agg(col("user_id"), 10, 64))
-      val q = agg
+      toMemory(agg
         .select(col("window.start").cast("timestamp_ntz").as("window_start"),
           col("event_type"),
-          api.cqf_distinct(col("sketch")).as("distinct_users"))
-        .writeStream.format("memory").queryName("graft_stream_append")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_append")
+          api.cqf_distinct(col("sketch")).as("distinct_users")),
+        "graft_stream_append", "append")
     }),
 
     "streaming_stateful_distinct" -> ((s, dir) => {
@@ -484,25 +484,17 @@ object SparkEntry {
       // the state format), emitting (key, distinct, total) per update.
       // AvailableNow over the single events file = one batch, so update
       // mode emits exactly one final row per key — exactly oracle-able
-      GraftFunctions.registerAll(s)
       import s.implicits._
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = streamOf(s, dir, "events")
         .select(col("event_type"), col("user_id").cast("long"))
         .as[(String, Long)]
         .map { case (k, u) => (k, Array(u)) }
-      val q = src.groupByKey(_._1)
+      toMemory(src.groupByKey(_._1)
         .mapGroupsWithState(
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
           graft.streaming.StreamingSketch.cqfStateFn(10))
-        .toDF("event_type", "distinct_users", "n_events")
-        .writeStream.format("memory").queryName("graft_stream_state")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_state")
+        .toDF("event_type", "distinct_users", "n_events"),
+        "graft_stream_state", "update")
     }),
 
     // streaming heavy hitters (6th streaming shape, round 4): the
@@ -513,19 +505,11 @@ object SparkEntry {
     // final rows to the batch ss_heavy_hitters / its DuckDB oracle, so
     // incremental construction is gated end-to-end exact.
     "streaming_heavy_hitters" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+      val summary = toMemory(streamOf(s, dir, "lineitem")
         .groupBy()
-        .agg(api.ss_agg(col("l_suppkey"), 32768).as("ss"), count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName("graft_stream_hh")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      heavyHittersFromSummary(t(s, dir, "lineitem"),
-        s.table("graft_stream_hh"), "streaming_heavy_hitters")
+        .agg(api.ss_agg(col("l_suppkey"), 32768).as("ss"), count(lit(1)).as("n")),
+        "graft_stream_hh", "complete")
+      heavyHittersFromSummary(t(s, dir, "lineitem"), summary, "streaming_heavy_hitters")
     }),
 
     "streaming_dedup_first_seen" -> ((s, dir) => {
@@ -540,26 +524,18 @@ object SparkEntry {
       // AvailableNow over the single documents file = one batch, so
       // update mode emits exactly one final row per distinct content,
       // equal to the batch/DuckDB answer.
-      GraftFunctions.registerAll(s)
       import s.implicits._
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = streamOf(s, dir, "documents")
         .select(TextOps.fingerprint(col("text")).as("fp"), col("doc_id"))
         .as[(Long, Long)]
-      val q = src.groupByKey(_._1)
+      // the fp key rides the update-mode rows so multi-batch consumers
+      // can supersede by it; the oracle compares the value columns
+      toMemory(src.groupByKey(_._1)
         .mapGroupsWithState(
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
           graft.streaming.StreamingSketch.dedupStateFn())
-        .toDF("fp", "kept_id", "n_dups")
-        .writeStream.format("memory").queryName("graft_stream_dedup")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the fp key rides the update-mode rows so multi-batch consumers
-      // can supersede by it; the oracle compares the value columns
-      s.table("graft_stream_dedup").select(col("kept_id"), col("n_dups"))
+        .toDF("fp", "kept_id", "n_dups"),
+        "graft_stream_dedup", "update").select(col("kept_id"), col("n_dups"))
     }),
 
     "streaming_decontamination" -> ((s, dir) => {
@@ -574,20 +550,12 @@ object SparkEntry {
       // mode; state is one counter per CONTAMINATED doc, not per doc).
       // AvailableNow over the single file = one batch, so update mode
       // emits exactly the batch answer
-      GraftFunctions.registerAll(s)
-      val docs = t(s, dir, "documents")
-      val src = s.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = streamOf(s, dir, "documents")
         .where(pmod(col("doc_id"), lit(97)) =!= 0)
-      val bench = docs.where(pmod(col("doc_id"), lit(97)) === 0)
-      val q = graft.ops.DedupOps.contamination(
-          src, col("doc_id"), col("text"), bench, col("text"), k = 3)
-        .writeStream.format("memory").queryName("graft_stream_decontam")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_decontam")
+      val bench = t(s, dir, "documents").where(pmod(col("doc_id"), lit(97)) === 0)
+      toMemory(graft.ops.DedupOps.contamination(
+          src, col("doc_id"), col("text"), bench, col("text"), k = 3),
+        "graft_stream_decontam", "update")
     }),
 
     "streaming_sessionization" -> ((s, dir) => {
@@ -604,15 +572,12 @@ object SparkEntry {
       // operator: session_window merges on touch, so diff == gap stays
       // in-session and only diff > gap splits — the oracle replays
       // exactly the batch gap rule.
-      GraftFunctions.registerAll(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = streamOf(s, dir, "events")
         // watermarks require TIMESTAMP; session TZ is pinned UTC so the
         // cast out of NTZ and back is wall-value identity
         .where(col("ts").isNotNull)
         .withColumn("ts", col("ts").cast("timestamp"))
-      val q = graft.streaming.StreamingSketch.sessionWindowAgg(
+      toMemory(graft.streaming.StreamingSketch.sessionWindowAgg(
         src, col("ts"), "1 hour", "30 minutes", col("user_id"),
         Seq(api.cqf_agg(col("event_type"), 8, 64).as("sk"),
           count(lit(1)).as("n_events")))
@@ -620,13 +585,8 @@ object SparkEntry {
           col("session_window.start").cast("timestamp_ntz").as("session_start"),
           col("session_window.end").cast("timestamp_ntz").as("session_end"),
           api.cqf_distinct(col("sk")).as("distinct_event_types"),
-          col("n_events"))
-        .writeStream.format("memory").queryName("graft_stream_sessions")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_stream_sessions")
+          col("n_events")),
+        "graft_stream_sessions", "append")
     }),
 
     "streaming_dedup_incremental" -> ((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
@@ -668,10 +628,7 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val pairs = graft.ops.IncrementalDedup.allPairs(s, state)
-      val rows = pairs.collect()
-      graft.util.ParquetState.deleteRecursively(new java.io.File(work))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), pairs.schema)
+      collectThenDelete(graft.ops.IncrementalDedup.allPairs(s, state), work)
     }),
 
     "benchmark_decontamination" -> ((s, dir) => {
@@ -1498,14 +1455,7 @@ object SparkEntry {
           docs.where(pmod(col("doc_id"), lit(3)) === b),
           TextOps.tokens(col("text")), col("doc_id"), state, s"batch_$b", cfg)
       }
-      // materialize the (tiny, near-dup-edge-sized) result and delete the
-      // throwaway state dir: bench reps / plan audits re-execute this
-      // query, and each invocation would otherwise leak a full
-      // signature+pair store under java.io.tmpdir
-      val pairs = graft.ops.IncrementalDedup.allPairs(s, state)
-      val rows = pairs.collect()
-      graft.util.ParquetState.deleteRecursively(new java.io.File(state))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), pairs.schema)
+      collectThenDelete(graft.ops.IncrementalDedup.allPairs(s, state), state)
     }),
 
     "simhash_near_dups" -> ((s, dir) => {
@@ -1597,14 +1547,11 @@ object SparkEntry {
         .createTempDirectory("graft_ann_idx").toString
       AnnOps.buildIvfIndex(s, emb, col("vec_id"), col("embedding"), idx,
         nCells = 16, kmeansIters = 2)
-      val res = AnnOps.ivfTopKFromIndex(s, idx,
+      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
           emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
           k = 3, nProbe = 16)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id"))
-      val rows = res.collect()
-      graft.util.ParquetState.deleteRecursively(new java.io.File(idx))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+          col("neighbor_id")), idx)
     }),
 
     eager("ann_ivf_incremental")((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
@@ -1625,14 +1572,11 @@ object SparkEntry {
         nCells = 16, kmeansIters = 2)
       AnnOps.appendIvfBatch(s, part(1), col("vec_id"), col("embedding"), idx, "d1")
       AnnOps.appendIvfBatch(s, part(2), col("vec_id"), col("embedding"), idx, "d2")
-      val res = AnnOps.ivfTopKFromIndex(s, idx,
+      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
           emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
           k = 3, nProbe = 16)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id"))
-      val rows = res.collect()
-      graft.util.ParquetState.deleteRecursively(new java.io.File(idx))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+          col("neighbor_id")), idx)
     }),
 
     "streaming_ann_ingest" -> ((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
@@ -1669,14 +1613,11 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val res = AnnOps.ivfTopKFromIndex(s, idx,
+      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
           emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
           k = 3, nProbe = 16)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id"))
-      val rows = res.collect()
-      graft.util.ParquetState.deleteRecursively(new java.io.File(work))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+          col("neighbor_id")), work)
     }),
 
     "ann_lsh_topk" -> ((s, dir) => {

@@ -2,9 +2,11 @@ package graft.ops
 
 import graft.agg.VecMeanAgg
 import graft.functions.{CosineSim, NearestCentroid, VecLshBucket}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.util.ParquetState
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -12,7 +14,8 @@ import org.apache.spark.sql.functions._
   * — corpus-side is a single scan, no corpus shuffle. Scale path:
   * random-hyperplane LSH buckets (or an IVF-style coarse quantizer over
   * the same buckets) so each query only scans its bucket; recall traded
-  * via number of planes / probes.
+  * via number of planes / probes. The persisted IVF index reads its own
+  * stores under declared schemas ([[buildIvfIndex]] has the layout).
   */
 object AnnOps {
 
@@ -145,28 +148,36 @@ object AnnOps {
     // corpus assignment: single codegen'd pass, zero shuffle
     val assigned = c.select(nearestCell(col("cv"), codebook).as("cell"),
       col("cid"), col("cv"))
-    // queries probe their nProbe nearest cells (query set is small and
-    // broadcast; the tiny crossJoin+window here is queries x nCells rows)
-    val centroids = codebook.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
-      .toSeq
-    val centroidDf = queries.sparkSession.createDataFrame(centroids)
+    scoreProbed(assigned, probeCells(queries, queryId, queryVec, codebook, nProbe), k)
+  }
+
+  /** The `nProbe` nearest cells of every non-null query vector, as
+    * (cell, query_id, qv). The query set is small and broadcast, so this
+    * is a queries x nCells crossJoin and window. */
+  private def probeCells(queries: DataFrame, queryId: Column, queryVec: Column,
+      codebook: Array[Array[Double]], nProbe: Int): DataFrame = {
+    val centroidDf = queries.sparkSession.createDataFrame(
+      codebook.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq)
       .toDF("cell", "centroid")
     val qw = Window.partitionBy(col("query_id"))
       .orderBy(col("qsim").desc, col("cell").asc)
-    val probes = nonNullVecs(
-        queries.select(queryId.as("query_id"), queryVec.as("qv")), "qv")
+    nonNullVecs(queries.select(queryId.as("query_id"), queryVec.as("qv")), "qv")
       .crossJoin(broadcast(centroidDf))
       .select(col("query_id"), col("qv"), col("cell"),
         cosine(col("qv"), col("centroid")).as("qsim"))
       .withColumn("rn", row_number().over(qw))
       .where(col("rn") <= nProbe)
       .select(col("cell"), col("query_id"), col("qv"))
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
+  }
+
+  /** Score the corpus vectors of the probed cells against their queries
+    * and keep the top k: `assigned` holds (cell, cid, cv) and `probes`
+    * has the [[probeCells]] shape. */
+  private def scoreProbed(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    rankTopK(assigned.join(broadcast(probes), Seq("cell"))
       .where(col("cid") =!= col("query_id"))
       .select(col("query_id"), col("cid").as("neighbor_id"),
-        cosine(col("qv"), col("cv")).as("cos"))
-    rankTopK(scored, k)
-  }
+        cosine(col("qv"), col("cv")).as("cos")), k)
 
   // ------------------------------------------------------------ persisted IVF
 
@@ -179,19 +190,68 @@ object AnnOps {
   private[ops] def assignPath(indexDir: String) = s"$indexDir/assignments"
   private[ops] def metaPath(indexDir: String) = s"$indexDir/meta"
 
+  /** `meta/`: one commit-marker row per committed batch. */
+  private val metaSchema = StructType(Seq(
+    StructField("batch_id", StringType), StructField("ann_params", StringType),
+    StructField("input_hash", LongType), StructField("n_vecs", LongType)))
+  /** `codebook/`: one row per cell, stamped with the params and corpus
+    * fingerprint of the build that trained it. */
+  private val codebookSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType)),
+    StructField("ann_params", StringType), StructField("input_hash", LongType)))
+
+  /** One `meta/` row: the batch's params, input fingerprint and size. */
+  private case class Marker(params: String, inputHash: Long, nVecs: Long)
+
+  /** The committed batches, from ONE collect of the (tiny) meta log;
+    * None when `meta/` holds no marker (no committed index). */
+  private def committedMarkers(spark: SparkSession, indexDir: String): Option[Map[String, Marker]] =
+    ParquetState.readIfAny(spark, metaPath(indexDir), metaSchema).map { m =>
+      val committed = m.collect()
+        .map(r => r.getString(0) -> Marker(r.getString(1), r.getLong(2), r.getLong(3))).toMap
+      require(committed.contains(BaseBatch),
+        s"index at $indexDir has no committed base build")
+      committed
+    }
+
+  /** The stored codebook from ONE collect: its centroids in cell order
+    * and the distinct (ann_params, input_hash) stamps of its rows; None
+    * when `codebook/` holds no data. */
+  private def storedCodebook(spark: SparkSession,
+      indexDir: String): Option[(Array[Array[Double]], Seq[(String, Long)])] =
+    ParquetState.readIfAny(spark, codebookPath(indexDir), codebookSchema).map { cb =>
+      val rows = cb.collect().sortBy(_.getInt(0))
+      (rows.map(_.getSeq[Double](1).toArray),
+        rows.map(r => (r.getString(2), r.getLong(3))).distinct.toSeq)
+    }
+
+  /** The codebook of a committed index. */
+  private def committedCodebook(spark: SparkSession, indexDir: String): Array[Array[Double]] =
+    storedCodebook(spark, indexDir).map(_._1).getOrElse(throw new IllegalStateException(
+      s"index at $indexDir has a commit marker but no codebook"))
+
   /** Build (or resume) a PERSISTED IVF index — production similarity
     * search builds the index once and serves many query batches, instead
     * of re-paying the k-means + assignment inside every query the way
     * [[ivfTopK]] does.
     *
     * Layout (the BuildSketches checkpoint pattern, lineage-stamped):
-    *  - `codebook/`    — (cell, centroid), written after the k-means;
-    *  - `assignments/` — (cid, cv) PARTITIONED BY cell, so a serve
-    *    probing p of n cells reads only p/n of the corpus bytes
+    *  - `codebook/`    — (cell, centroid, ann_params, input_hash),
+    *    written after the k-means;
+    *  - `assignments/` — (cid, cv) PARTITIONED BY (batch_id, cell), so a
+    *    serve probing p of n cells reads only p/n of the corpus bytes
     *    (partition pruning — the scale win of IVF made physical);
-    *  - `meta/`        — one commit-marker row (params, order-insensitive
-    *    input hash, n_vecs), written LAST: the index is valid iff the
-    *    marker exists.
+    *  - `meta/`        — one commit-marker row per batch (batch_id,
+    *    params, order-insensitive input hash, n_vecs); the base row is
+    *    written LAST: the index is valid iff the marker exists.
+    *
+    * `codebook/` and `meta/` are read under their declared schemas
+    * (`codebookSchema`, `metaSchema`) through [[ParquetState.read]]: no
+    * schema-inference job, and a store that lacks a declared column —
+    * a `meta/` without `batch_id` or a `codebook/` without `input_hash`,
+    * as no released layout writes them — is rejected, naming the column
+    * and the directory. `assignments/` stays an inferred read: its `cid`
+    * and `cv` columns carry the caller's types.
     *
     * Resume/idempotence: a committed index re-builds as a no-op when the
     * input hash + params match, and REJECTS on drift (a stale index
@@ -200,7 +260,7 @@ object AnnOps {
     * a stored codebook when its params match — the k-means passes are
     * the expensive stage — and re-deriving assignments from it
     * (overwrite, so the retry is idempotent). */
-  def buildIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def buildIvfIndex(spark: SparkSession,
       corpus: DataFrame, corpusId: Column, corpusVec: Column,
       indexDir: String, nCells: Int = 16, kmeansIters: Int = 2): Unit =
     // AQE off for the whole build (guide §2.2/§1.2 job diet): every
@@ -210,7 +270,6 @@ object AnnOps {
     // strategy AQE could improve, so adaptive execution only adds a
     // re-planning job per exchange
     graft.util.Adaptive.withoutAqe(spark) {
-    import org.apache.spark.sql.SaveMode
     val params = ivfParamString(nCells, kmeansIters)
     val c = nonNullVecs(corpus.select(corpusId.as("cid"), corpusVec.as("cv")), "cv")
     val fp = c.agg(
@@ -220,18 +279,11 @@ object AnnOps {
     require(nVecs > 0, s"buildIvfIndex: nothing to index at $indexDir — " +
       "the corpus has no non-null embedding rows")
 
-    graft.util.ParquetState.readIfAny(spark, metaPath(indexDir)).foreach { m =>
-      // pre-batch-layout indexes carry a single unlabeled meta row; the
-      // base row IS that row (appendIvfBatch rejects the old layout, so
-      // no other batches can exist)
-      val base = if (m.columns.contains("batch_id"))
-        m.where(col("batch_id") === BaseBatch) else m
-      val r = base
-        .select(col("ann_params"), col("input_hash"), col("n_vecs")).head()
-      require(r.getString(0) == params && r.getLong(1) == inHash &&
-          r.getLong(2) == nVecs,
-        s"index at $indexDir is committed for params '${r.getString(0)}' / " +
-          s"input ${r.getLong(1)}/${r.getLong(2)} but this build uses " +
+    committedMarkers(spark, indexDir).foreach { committed =>
+      val base = committed(BaseBatch)
+      require(base == Marker(params, inHash, nVecs),
+        s"index at $indexDir is committed for params '${base.params}' / " +
+          s"input ${base.inputHash}/${base.nVecs} but this build uses " +
           s"'$params' / ${inHash}/${nVecs} — a drifted index must be " +
           "rebuilt in a fresh dir, never silently overwritten")
       return // committed + identical: no-op (appended batches preserved)
@@ -244,33 +296,24 @@ object AnnOps {
     // would commit an index whose marker claims the NEW corpus while
     // recall at nProbe < nCells degrades unboundedly (exactly the stale-
     // index failure mode the meta marker guards against)
-    val stored = graft.util.ParquetState.readIfAny(spark, codebookPath(indexDir))
-      .filter { cb =>
-        val p = cb.select(col("ann_params")).distinct().collect().map(_.getString(0))
-        require(p.sameElements(Array(params)),
-          s"uncommitted codebook at $indexDir was built with " +
-            s"'${p.mkString(",")}' but this build uses '$params' — " +
-            "rebuild in a fresh dir")
-        // a fingerprint-mismatched (or pre-fingerprint) codebook is
-        // stale, not an error: the kill happened, the corpus moved on —
-        // retrain from scratch
-        cb.columns.contains("input_hash") && {
-          val h = cb.select(col("input_hash")).distinct().collect().map(_.getLong(0))
-          h.sameElements(Array(inHash))
-        }
-      }
-    val codebook: Array[Array[Double]] = stored match {
-      case Some(cb) =>
-        cb.orderBy(col("cell")).collect()
-          .map(r => r.getSeq[Double](1).toArray)
-      case None =>
-        val fresh = ivfCodebook(corpus, corpusVec, corpusId, nCells, kmeansIters)
-        val rows = fresh.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        spark.createDataFrame(rows).toDF("cell", "centroid")
-          .withColumn("ann_params", lit(params))
-          .withColumn("input_hash", lit(inHash))
-          .write.mode(SaveMode.Overwrite).parquet(codebookPath(indexDir))
-        fresh
+    val stored = storedCodebook(spark, indexDir).flatMap { case (cb, stamps) =>
+      val p = stamps.map(_._1).distinct
+      require(p == Seq(params),
+        s"uncommitted codebook at $indexDir was built with " +
+          s"'${p.mkString(",")}' but this build uses '$params' — " +
+          "rebuild in a fresh dir")
+      // a fingerprint-mismatched codebook is stale, not an error: the
+      // kill happened, the corpus moved on — retrain from scratch
+      Option.when(stamps.map(_._2).distinct == Seq(inHash))(cb)
+    }
+    val codebook: Array[Array[Double]] = stored.getOrElse {
+      val fresh = ivfCodebook(corpus, corpusVec, corpusId, nCells, kmeansIters)
+      val rows = fresh.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+      spark.createDataFrame(rows).toDF("cell", "centroid")
+        .withColumn("ann_params", lit(params))
+        .withColumn("input_hash", lit(inHash))
+        .write.mode(SaveMode.Overwrite).parquet(codebookPath(indexDir))
+      fresh
     }
 
     c.select(nearestCell(col("cv"), codebook).as("cell"), col("cid"), col("cv"))
@@ -313,33 +356,19 @@ object AnnOps {
     *    there is nothing the caller could drift;
     *  - delta ids must be new: an id already assigned (any batch)
     *    rejects loudly (the pair-op/global-id contract). */
-  def appendIvfBatch(spark: org.apache.spark.sql.SparkSession,
+  def appendIvfBatch(spark: SparkSession,
       delta: DataFrame, deltaId: Column, deltaVec: Column,
       indexDir: String, batchId: String): Unit =
     // AQE off — same rationale as buildIvfIndex (the id-clash semi-join
     // is an ids-only column join whose static plan is fine at scale)
     graft.util.Adaptive.withoutAqe(spark) {
-    import org.apache.spark.sql.SaveMode
     require(batchId.matches("[A-Za-z][A-Za-z0-9_.-]*") && batchId != BaseBatch,
       s"batchId must match [A-Za-z][A-Za-z0-9_.-]* and not '$BaseBatch' " +
         s"(got '$batchId'): it becomes a partition directory name")
-    val meta = graft.util.ParquetState.readIfAny(spark, metaPath(indexDir))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed index at $indexDir — run buildIvfIndex before " +
-          "appending deltas"))
-    require(meta.columns.contains("batch_id"),
-      s"index at $indexDir was committed by the pre-batch layout (no " +
-        "batch lineage in meta/) — rebuild it in a fresh dir to enable " +
-        "incremental appends; mixing layouts would serve unlabeled rows")
-    // ONE driver read of the (tiny) meta log serves the committed map
-    // AND the stored params
-    val metaRows = meta.select(col("batch_id"), col("input_hash"),
-      col("n_vecs"), col("ann_params")).collect()
-    val committed = metaRows
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    require(committed.contains(BaseBatch),
-      s"index at $indexDir has no committed base build")
-    val params = metaRows.find(_.getString(0) == BaseBatch).get.getString(3)
+    val committed = committedMarkers(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"no committed index at $indexDir — " +
+        "run buildIvfIndex before appending deltas"))
+    val params = committed(BaseBatch).params
 
     val d = nonNullVecs(delta.select(deltaId.as("cid"), deltaVec.as("cv")), "cv")
     val fp = d.agg(
@@ -352,24 +381,24 @@ object AnnOps {
       s"delta '$batchId' carries duplicated vector id(s) — ids must be unique")
 
     committed.get(batchId) match {
-      case Some((h, n)) =>
-        require(h == inHash && n == nVecs,
+      case Some(m) =>
+        require(m.inputHash == inHash && m.nVecs == nVecs,
           s"batch '$batchId' is already committed in $indexDir with a " +
-            s"DIFFERENT input (hash/count ${h}/${n} vs ${inHash}/${nVecs}) " +
-            "— batch ids must be stable per input shard")
+            s"DIFFERENT input (hash/count ${m.inputHash}/${m.nVecs} vs " +
+            s"${inHash}/${nVecs}) — batch ids must be stable per input shard")
         return // idempotent re-run
       case None => ()
     }
-    // global id uniqueness across committed batches (column-pruned scan
-    // of the id column only; uncommitted partials excluded so a killed
-    // append does not block its own retry)
-    val assigned = spark.read.parquet(assignPath(indexDir))
+    // global id uniqueness across committed batches: one aggregate over
+    // a column-pruned semi-join of the id column only (uncommitted
+    // partials excluded so a killed append does not block its own retry)
+    val clash = spark.read.parquet(assignPath(indexDir))
       .where(col("batch_id").isin(committed.keys.toSeq: _*))
-    val clash = assigned.select(col("cid"))
-      .join(d.select(col("cid")), Seq("cid"), "left_semi").take(1)
-    require(clash.isEmpty,
-      s"delta '$batchId' carries vector id ${clash.headOption.map(_.get(0)).getOrElse("?")} " +
-        s"already indexed at $indexDir — ids must be globally unique")
+      .select(col("cid")).join(d.select(col("cid")), Seq("cid"), "left_semi")
+      .agg(min(col("cid"))).head().get(0)
+    require(clash == null,
+      s"delta '$batchId' carries vector id $clash already indexed at " +
+        s"$indexDir — ids must be globally unique")
 
     // a killed earlier attempt may have left visible files under this
     // (uncommitted) batch partition. If the shard was regenerated with
@@ -383,8 +412,7 @@ object AnnOps {
     fs.delete(new org.apache.hadoop.fs.Path(
       s"${assignPath(indexDir)}/batch_id=$batchId"), true)
 
-    val codebook = spark.read.parquet(codebookPath(indexDir))
-      .orderBy(col("cell")).collect().map(_.getSeq[Double](1).toArray)
+    val codebook = committedCodebook(spark, indexDir)
     d.select(nearestCell(col("cv"), codebook).as("cell"), col("cid"), col("cv"))
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
@@ -421,69 +449,40 @@ object AnnOps {
     * nProbe = nCells the answer equals brute force exactly (the gate
     * query pins this against the brute-force oracle). A query batch that
     * needs more than [[MaxServeProbes]] probe rows fails. */
-  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
+  def ivfTopKFromIndex(spark: SparkSession,
       indexDir: String, queries: DataFrame, queryId: Column, queryVec: Column,
       k: Int, nProbe: Int = 4): DataFrame = {
-    val meta = graft.util.ParquetState.readIfAny(spark, metaPath(indexDir))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed index at $indexDir (missing meta marker) — run " +
-          "buildIvfIndex first; a killed build leaves no marker by design"))
     // the index = the COMMITTED batches (base build + appended deltas):
     // a killed append leaves assignment files without a marker row, and
-    // reading them would serve uncommitted, possibly-partial data.
-    // Pre-batch-layout indexes (single unlabeled meta row, cell-only
-    // assignment partitioning) have no appends by construction — serve
-    // them whole (empty filter below).
-    val batchAware = meta.columns.contains("batch_id")
-    val committedBatches = if (batchAware)
-      meta.select(col("batch_id")).collect().map(_.getString(0)).toSeq
-    else Seq.empty
-    require(!batchAware || committedBatches.contains(BaseBatch),
-      s"index at $indexDir has no committed base build")
-    val cb = spark.read.parquet(codebookPath(indexDir))
-      .orderBy(col("cell")).collect()
-    val codebook = cb.map(r => r.getSeq[Double](1).toArray)
-    val centroidDf = spark.createDataFrame(
-      codebook.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq)
-      .toDF("cell", "centroid")
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("cell").asc)
+    // reading them would serve uncommitted, possibly-partial data
+    val committed = committedMarkers(spark, indexDir).getOrElse(
+      throw new IllegalStateException(
+        s"no committed index at $indexDir (missing meta marker) — run " +
+          "buildIvfIndex first; a killed build leaves no marker by design"))
+    val probePlan = probeCells(queries, queryId, queryVec,
+      committedCodebook(spark, indexDir), nProbe)
     // the probe set is query-batch-sized (queries x nProbe, at most
-    // MaxServeProbes rows), so materialize it ONCE on the driver and serve both
-    // consumers (the literal cell filter and the broadcast join side)
-    // from the local rows — leaving it lazy would execute the query-side
-    // scan + centroid ranking twice, once for the collect and once
-    // inside the join
-    val probePlan = nonNullVecs(
-        queries.select(queryId.as("query_id"), queryVec.as("qv")), "qv")
-      .crossJoin(broadcast(centroidDf))
-      .select(col("query_id"), col("qv"), col("cell"),
-        cosine(col("qv"), col("centroid")).as("qsim"))
-      .withColumn("rn", row_number().over(qw))
-      .where(col("rn") <= nProbe)
-      .select(col("cell"), col("query_id"), col("qv"))
-    // control action: query-batch-sized by the serve contract — AQE off
-    // saves its re-planning jobs; the serve join itself stays lazy and
-    // runs under the caller's conf
+    // MaxServeProbes rows), so materialize it ONCE on the driver and
+    // serve both consumers (the literal cell filter and the broadcast
+    // join side) from the local rows — leaving it lazy would execute the
+    // query-side scan + centroid ranking twice. A control action: AQE
+    // off saves its re-planning jobs; the serve join itself stays lazy
+    // and runs under the caller's conf
     val probeRows = graft.util.Adaptive.withoutAqe(spark) {
       collectServeProbes(probePlan, MaxServeProbes)
     }
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probePlan.schema)
     // literal cell filter for partition pruning — the join alone would
-    // filter ROWS but still list/scan every cell's files
+    // filter ROWS but still list/scan every cell's files. An empty probe
+    // set (empty/all-null query batch) leaves an always-false isin: the
+    // plan prunes every partition and the result is empty with the
+    // regular schema
     val probedCells = probeRows.map(_.getInt(0)).distinct.toSeq
-    // an empty probe set (empty/all-null query batch) leaves an
-    // always-false isin: the plan prunes every partition and the result
-    // is empty with the regular schema
     val assigned = spark.read.parquet(assignPath(indexDir))
-      .where((if (batchAware) col("batch_id").isin(committedBatches: _*)
-        else lit(true)) && col("cell").isin(probedCells: _*))
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
-      .where(col("cid") =!= col("query_id"))
-      .select(col("query_id"), col("cid").as("neighbor_id"),
-        cosine(col("qv"), col("cv")).as("cos"))
-    rankTopK(scored, k)
+      .where(col("batch_id").isin(committed.keys.toSeq: _*) &&
+        col("cell").isin(probedCells: _*))
+    scoreProbed(assigned, probes, k)
   }
 
   /** Size hyperplane-LSH parameters for a corpus: the sf1-class bench
@@ -546,15 +545,13 @@ object AnnOps {
     require(nTables >= 1, s"nTables must be >= 1, got $nTables")
     val c = nonNullVecs(corpus.select(corpusId.as("neighbor_id"), corpusVec.as("cv")), "cv")
     val q = nonNullVecs(queries.select(queryId.as("query_id"), queryVec.as("qv")), "qv")
-    def tableBuckets(vec: Column): Column = array((0 until nTables).map { t =>
-      // distinct plane sets per table: large odd stride keeps seeds apart
-      lshBucket(vec, nPlanes, seed + 0x9e3779b97f4a7c15L * (t + 1))
-    }: _*)
-    val cB = c.select(col("neighbor_id"),
-      posexplode(tableBuckets(col("cv"))).as(Seq("tbl", "bucket")))
-    val qB = q.select(col("query_id"),
-      posexplode(tableBuckets(col("qv"))).as(Seq("tbl", "bucket")))
-    val pairs = cB.join(broadcast(qB), Seq("tbl", "bucket"))
+    // one band per table; distinct plane sets per table: a large odd
+    // stride keeps the seeds apart
+    def tableBuckets(side: DataFrame, id: String, vec: String): DataFrame =
+      DedupOps.band(side, col(id), nTables)(t =>
+        lshBucket(col(vec), nPlanes, seed + 0x9e3779b97f4a7c15L * (t + 1)))
+    val pairs = tableBuckets(c, "neighbor_id", "cv")
+      .join(broadcast(tableBuckets(q, "query_id", "qv")), Seq("band", "bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")

@@ -121,14 +121,20 @@ object DedupOps {
       .distinct() // duplicated input ids fan pairs out through the sig re-joins
   }
 
-  /** Band the signature table: one row per (id, band, bucket). */
+  /** LSH banding, the one primitive every bander shares (minhash,
+    * simhash, hyperplane LSH): one (id, band, bucket) row per input row
+    * and band, where `bucket(b)` is band b's bucket column, through ONE
+    * posexplode over the array of all bands' buckets. `id` keeps its
+    * name. */
+  private[ops] def band(df: DataFrame, id: Column, nBands: Int)(bucket: Int => Column): DataFrame =
+    df.select(id, posexplode(array((0 until nBands).map(bucket): _*))
+      .as(Seq("band", "bucket")))
+
+  /** Band the signature table: one row per (id, band, bucket). The
+    * bucket values are persisted (IncrementalDedup's `buckets/`). */
   private[ops] def bandSignatures(sigged: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sigged.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat(lit("band"), b.cast("string"),
-          concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
-        .as(Seq("band", "bucket")))
+    band(sigged, col("id"), bands)(b => xxhash64(concat(lit(s"band$b"),
+      concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))))
 
   /** MinHash-LSH prefilter + EXACT word-k-shingle Jaccard recheck — the
     * production near-dup shape (cf. the cms_heavy_hitters exact-recheck
@@ -189,10 +195,8 @@ object DedupOps {
     require(64 % nBands == 0, s"nBands must divide 64, got $nBands")
     val width = 64 / nBands
     val mask = if (width >= 64) -1L else (1L << width) - 1L
-    val bandCols = (0 until nBands).map(i =>
+    band(printed, col("id"), nBands)(i =>
       shiftrightunsigned(col("sh"), width * i).bitwiseAND(lit(mask)))
-    printed.select(col("id"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
   }
 
   /** Ensemble near-dup pairs: simhash banding (guaranteed Hamming<=nBands-1
@@ -424,10 +428,8 @@ object DedupOps {
       else AnnOps.lshParamsFor(
         math.max(1L, df.select(id.as("id")).count()), minCos)
     val vecs = df.select(id.as("id"), vec.as("v"))
-    val banded = df.select(id.as("id"),
-      posexplode(array((0 until nBands).map(b =>
-        AnnOps.lshBucket(vec, nPlanes, seed + 1000L * b)): _*))
-        .as(Seq("band", "bucket")))
+    val banded = band(df, id.as("id"), nBands)(b =>
+      AnnOps.lshBucket(vec, nPlanes, seed + 1000L * b))
     val pairs = bucketPairs(banded, Seq("band", "bucket"), bucketCap)
     joinPairPayload(pairs, vecs, Seq("v"))
       .where(AnnOps.cosine(col("v_a"), col("v_b")) >= minCos)

@@ -558,18 +558,8 @@ final class Cqf private (
     * all entries in order — adopted from the reference's dead auto-resizing
     * merge (/root/reference/src/old/old_cqf.rs:1032-1062). */
   private def grow(): Unit = {
-    var nq = _quotientBits + 1
-    var bigger: Cqf = null
-    while (bigger == null) {
-      if (nq > hashBits || nq > 62)
-        throw new IllegalStateException(
-          s"CQF is full and cannot grow: quotientBits=${_quotientBits} has " +
-          s"reached hashBits=$hashBits, so the filter cannot hold more " +
-          s"distinct hashes plus count slots. Configure a larger hashBits " +
-          s"(64 is exact for long keys) or fewer distinct keys per group.")
-      try bigger = Cqf.fromSortedHashes(iterator, nq, hashBits, invertible, compact)
-      catch { case FullException => nq += 1 }
-    }
+    val bigger = Cqf.growing(_quotientBits + 1, hashBits)(
+      Cqf.fromSortedHashes(iterator, _, hashBits, invertible, compact))
     _quotientBits = bigger._quotientBits
     blocks = bigger.blocks
     _occupiedSlots = bigger._occupiedSlots
@@ -669,25 +659,26 @@ final class Cqf private (
 
 object Cqf {
 
-  /** The capacity-retry loop of every rebuild (mergeInPlace,
+  /** The capacity-retry loop of every rebuild (grow, mergeInPlace,
     * fromSortedHashesGrowing, mergeBy, importRefLayout): `build` at
     * `startQ`, and on a capacity miss (the private FullException) again
     * one quotient bit larger. Any other failure is a real bug and
-    * escapes. Past hashBits (or 62) another retry cannot help —
+    * escapes. Past hashBits (or 62) a build cannot help —
     * fromSortedHashes would derive a negative remainder width / wrapped
-    * slot count — so fail with a clean error instead of looping or
+    * slot count — so every attempt, the first included, is checked
+    * first and fails with a clean error instead of looping or
     * allocating garbage. */
   private def growing(startQ: Int, hashBits: Int)(build: Int => Cqf): Cqf = {
     var q = startQ
     var res: Cqf = null
     while (res == null) {
+      if (q > hashBits || q > 62) throw new IllegalStateException(
+        s"CQF is full and cannot grow: quotientBits=${q - 1} has " +
+        s"reached hashBits=$hashBits, so the filter cannot hold more " +
+        s"distinct hashes plus count slots. Configure a larger hashBits " +
+        s"(64 is exact for long keys) or fewer distinct keys per group.")
       try res = build(q)
-      catch {
-        case FullException =>
-          q += 1
-          if (q > hashBits || q > 62) throw new IllegalStateException(
-            s"CQF cannot fit content: quotientBits=$q exceeds hashBits=$hashBits (cap 62)")
-      }
+      catch { case FullException => q += 1 }
     }
     res
   }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Shared filesystem guard for resumable parquet state directories
-  * (BuildSketches checkpoints, IncrementalDedup stores). */
+  * (BuildSketches checkpoints, IncrementalDedup stores, the IVF index's
+  * `meta/` and `codebook/`): every graft-typed store is read under a
+  * declared schema through [[read]] or [[readIfAny]]. */
 object ParquetState {
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
@@ -30,12 +32,6 @@ object ParquetState {
     if (!fs.exists(path)) Nil
     else fs.listStatus(path).toSeq.filter(visible)
   }
-
-  /** Read a state table only if the directory holds visible data
-    * entries ([[visibleEntries]]), inferring its schema: only for stores
-    * whose readers branch on which columns an older layout has. */
-  def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
-    Option.when(visibleEntries(spark, dir).nonEmpty)(spark.read.parquet(dir))
 
   /** [[read]] a state table under its declared schema only if the
     * directory holds visible data entries ([[visibleEntries]]). */

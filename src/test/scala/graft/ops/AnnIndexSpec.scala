@@ -225,6 +225,76 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served == brute)
   }
 
+  /** Every file under the index with its modification time. */
+  private def indexFiles(idx: String): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(idx)).map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  /** Rewrite a store without `column`, as an older layout wrote it. */
+  private def dropColumn(dir: String, column: String): Unit = {
+    val old = spark.read.parquet(dir).drop(column)
+    val rows = old.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), old.schema)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
+  }
+
+  test("a pre-batch meta/ (no batch_id) is rejected by build, append and serve") {
+    val idx = Files.createTempDirectory("ann_idx_prebatch").toString
+    def part(b: Int) = emb.where(pmod(col("vec_id"), lit(3)) === b)
+    AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+      nCells = 8, kmeansIters = 2)
+    dropColumn(AnnOps.metaPath(idx), "batch_id")
+    val files = indexFiles(idx)
+    val calls: Seq[(String, () => Unit)] = Seq(
+      "build" -> (() => AnnOps.buildIvfIndex(spark, part(0), col("vec_id"),
+        col("embedding"), idx, nCells = 8, kmeansIters = 2)),
+      "append" -> (() => AnnOps.appendIvfBatch(spark, part(1), col("vec_id"),
+        col("embedding"), idx, "d1")),
+      "serve" -> (() => AnnOps.ivfTopKFromIndex(spark, idx, queries,
+        col("vec_id"), col("embedding"), k = 3, nProbe = 8).collect()))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("batch_id") && e.getMessage.contains(idx),
+        s"$name: ${e.getMessage}")
+    }
+    assert(indexFiles(idx) == files, "a rejected call wrote to the index")
+  }
+
+  test("a killed build's codebook without input_hash is rejected, not retrained") {
+    val idx = Files.createTempDirectory("ann_idx_prefp").toString
+    AnnOps.buildIvfIndex(spark, emb, col("vec_id"), col("embedding"), idx,
+      nCells = 8, kmeansIters = 2)
+    graft.util.ParquetState.deleteRecursively(new java.io.File(AnnOps.metaPath(idx)))
+    graft.util.ParquetState.deleteRecursively(new java.io.File(AnnOps.assignPath(idx)))
+    dropColumn(AnnOps.codebookPath(idx), "input_hash")
+    val before = codebookFiles(idx)
+    val e = intercept[IllegalArgumentException] {
+      AnnOps.buildIvfIndex(spark, emb, col("vec_id"), col("embedding"), idx,
+        nCells = 8, kmeansIters = 2)
+    }
+    assert(e.getMessage.contains("input_hash") && e.getMessage.contains("fresh dir"),
+      e.getMessage)
+    assert(codebookFiles(idx) == before, "the stale codebook was rewritten")
+  }
+
+  test("one append plus one served collect stays within its job budget") {
+    val idx = Files.createTempDirectory("ann_idx_jobs").toString
+    def part(b: Int) = emb.where(pmod(col("vec_id"), lit(3)) === b)
+    AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+      nCells = 8, kmeansIters = 2)
+    val jobs = graft.JobsOf(spark) {
+      AnnOps.appendIvfBatch(spark, part(1), col("vec_id"), col("embedding"), idx, "d1")
+      assert(AnnOps.ivfTopKFromIndex(spark, idx, queries,
+        col("vec_id"), col("embedding"), k = 3, nProbe = 8).collect().nonEmpty)
+    }
+    // 19 jobs (27 when meta/ and codebook/ were inferred reads and the
+    // id-clash check was a take(1)); the window includes the frames'
+    // own parquet schema inference
+    assert(jobs.length <= 19, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+  }
+
   test("lshParamsFor: occupancy bounded, recall reached, scales with corpus") {
     // closed-form recall of the returned params must clear the target
     def recallOf(b: Int, r: Int, cos: Double): Double = {

@@ -272,7 +272,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e.getMessage.contains("WITHIN the batch"))
     // nothing was appended before the rejection
-    assert(graft.util.ParquetState.readIfAny(spark, s"$state/signatures").isEmpty)
+    assert(graft.util.ParquetState.visibleEntries(spark, s"$state/signatures").isEmpty)
   }
 
   test("empty FIRST batch is a clean no-op that burns the batch id") {
