@@ -53,7 +53,12 @@ object SparkEntry {
     * directory, so it streams the sf dir under the table's schema with a
     * glob filter selecting just the table's file. */
   private def streamOf(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.readStream.schema(t(spark, dir, name).schema)
+    streamOf(t(spark, dir, name), dir, name)
+
+  /** [[streamOf]] under the schema of `static`, the table's batch read: a
+    * query that reads the table both ways infers its schema once. */
+  private def streamOf(static: DataFrame, dir: String, name: String): DataFrame =
+    static.sparkSession.readStream.schema(static.schema)
       .option("pathGlobFilter", s"$name.parquet").parquet(dir)
 
   /** Run a streaming frame to the memory sink `name` under AvailableNow
@@ -74,6 +79,13 @@ object SparkEntry {
     graft.util.ParquetState.deleteRecursively(new java.io.File(stateDir))
     result.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
+
+  /** The IVF gate queries' serve: top-3 of the first 10 embeddings from
+    * the index at `idx`, probing all of its 16 cells. */
+  private def servedTopK(s: SparkSession, idx: String, emb: DataFrame): DataFrame =
+    AnnOps.ivfTopKFromIndex(s, idx, emb.where(col("vec_id") < 10), col("vec_id"),
+        col("embedding"), k = 3, nProbe = 16)
+      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -550,9 +562,10 @@ object SparkEntry {
       // mode; state is one counter per CONTAMINATED doc, not per doc).
       // AvailableNow over the single file = one batch, so update mode
       // emits exactly the batch answer
-      val src = streamOf(s, dir, "documents")
+      val docs = t(s, dir, "documents")
+      val src = streamOf(docs, dir, "documents")
         .where(pmod(col("doc_id"), lit(97)) =!= 0)
-      val bench = t(s, dir, "documents").where(pmod(col("doc_id"), lit(97)) === 0)
+      val bench = docs.where(pmod(col("doc_id"), lit(97)) === 0)
       toMemory(graft.ops.DedupOps.contamination(
           src, col("doc_id"), col("text"), bench, col("text"), k = 3),
         "graft_stream_decontam", "update")
@@ -1547,11 +1560,7 @@ object SparkEntry {
         .createTempDirectory("graft_ann_idx").toString
       AnnOps.buildIvfIndex(s, emb, col("vec_id"), col("embedding"), idx,
         nCells = 16, kmeansIters = 2)
-      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
-          emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 3, nProbe = 16)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id")), idx)
+      collectThenDelete(servedTopK(s, idx, emb), idx)
     }),
 
     eager("ann_ivf_incremental")((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
@@ -1572,11 +1581,7 @@ object SparkEntry {
         nCells = 16, kmeansIters = 2)
       AnnOps.appendIvfBatch(s, part(1), col("vec_id"), col("embedding"), idx, "d1")
       AnnOps.appendIvfBatch(s, part(2), col("vec_id"), col("embedding"), idx, "d2")
-      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
-          emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 3, nProbe = 16)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id")), idx)
+      collectThenDelete(servedTopK(s, idx, emb), idx)
     }),
 
     "streaming_ann_ingest" -> ((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
@@ -1613,11 +1618,7 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      collectThenDelete(AnnOps.ivfTopKFromIndex(s, idx,
-          emb.where(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 3, nProbe = 16)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("neighbor_id")), work)
+      collectThenDelete(servedTopK(s, idx, emb), work)
     }),
 
     "ann_lsh_topk" -> ((s, dir) => {

@@ -3,6 +3,7 @@ package graft.jobs
 import graft.api
 import graft.agg.{SketchBuild, SketchBuildAgg}
 import graft.agg.SketchBuild._
+import graft.util.StagedRun
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,14 +33,14 @@ import org.apache.spark.sql.types._
   * graft versions that record build parameters but predate the flat
   * layout reject a flat checkpoint before appending to it ([[FlatTag]]).
   *
-  * Resume: one driver collect of the checkpoint's lineage under the
-  * declared [[ResumeSchema]] serves the kind, parameter and scheme checks
-  * and the done-set. Done shards are filtered out of the input without a
-  * join, so a killed stage-1 job re-processes only missing shards;
-  * stage 2 always recomputes from the (cheap, tiny) partials.
-  * Because sketches are merge-order-invariant, a resumed build yields
-  * byte-identical per-source CQF contents to an uninterrupted one
-  * (asserted in BuildSketchesSpec).
+  * Resume: `run` is the [[graft.util.StagedRun]] `build[<kind>]`, which
+  * labels its jobs; each shard records its input fingerprint. One driver
+  * collect of the checkpoint's lineage under the declared
+  * [[ResumeSchema]] serves the kind, parameter and scheme checks and the
+  * done-set. Done shards are filtered out of the input without a join,
+  * so a killed stage-1 job re-processes only missing shards; stage 2
+  * always recomputes from the (cheap, tiny) partials, so a resumed build
+  * yields the uninterrupted build's sketch bytes (StagedKillMatrixSpec).
   *
   * Read-back: stage 2 reads the checkpoint under the declared
   * [[Stage2Schema]] ([[graft.util.ParquetState.read]]: no inference job;
@@ -257,10 +258,9 @@ object BuildSketches {
         sketch.as("sketch_bytes"),
         count(lit(1)).as("n_rows"),
         sum(col("n_tok").cast("long")).as("n_tokens"),
-        // order-insensitive input hash (xor of row hashes) — idempotence
-        // check for resume (same rows ⇒ same hash); xor cannot overflow
-        // under ANSI mode, unlike sum
-        expr("bit_xor(xxhash64(doc_id, n_tok))").as("input_hash"))
+        // the shard's input fingerprint — idempotence check for resume
+        // (same rows ⇒ same hash)
+        StagedRun.fingerprint(col("doc_id"), col("n_tok")).as("input_hash"))
       // the lineage columns in ONE projection (each withColumn re-analyzes
       // the whole plan)
       .select(Stage2Schema.fieldNames.map(col).toIndexedSeq ++ Seq(
@@ -279,29 +279,24 @@ object BuildSketches {
   /** Run (or resume) the build. Returns the per-source final sketches:
     * (source, sketch_bytes, n_rows, n_tokens).
     *
-    * `run` itself runs the salt-count, stage-1 and lineage jobs, each
-    * under a `build[<kind>] <stage>` job description, and restores the
-    * caller's description on every exit path; stage 2 runs at the
-    * caller's action under the caller's description. A fresh build or a
-    * resume plus one action on the result is six Spark jobs; an unknown
-    * kind throws IllegalArgumentException before the first. */
+    * `run` itself runs the salt-count, stage-1 and lineage jobs as a
+    * [[graft.util.StagedRun]] `build[<kind>]`, so each carries a
+    * `build[<kind>] <stage>` job description and the caller's comes back
+    * on every exit path; stage 2 runs at the caller's action under the
+    * caller's description. A fresh build or a resume plus one action on
+    * the result is six Spark jobs; an unknown kind throws
+    * IllegalArgumentException before the first. */
   def run(spark: SparkSession, input: DataFrame, checkpointDir: String,
-      cfg: Config = Config()): DataFrame = {
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    try runImpl(spark, input, checkpointDir, cfg)
-    finally sc.setJobDescription(callerDescription)
-  }
+      cfg: Config = Config()): DataFrame =
+    StagedRun(spark, "build", cfg.kind)(runImpl(_, spark, input, checkpointDir, cfg))
 
-  private def runImpl(spark: SparkSession, input: DataFrame, checkpointDir: String,
-      cfg: Config): DataFrame = {
+  private def runImpl(run: StagedRun, spark: SparkSession, input: DataFrame,
+      checkpointDir: String, cfg: Config): DataFrame = {
     // an unknown kind fails here, before any Spark job
     val build = buildFor(cfg)
     graft.GraftFunctions.registerAll(spark)
-    def label(stage: String): Unit =
-      spark.sparkContext.setJobDescription(s"build[${cfg.kind}] $stage")
     def derivedScheme(): (Map[String, Int], Int) = {
-      label("salt counts")
+      run.stage("salt counts")
       deriveScheme(input, cfg)
     }
     // VISIBLE entries only (shared guard, graft.util.ParquetState): a
@@ -313,7 +308,7 @@ object BuildSketches {
     // ONE driver collect of the checkpoint's lineage serves every resume
     // check and the done-set; the columns are read by name, because a
     // salt=N checkpoint lists its partition column last
-    label("resume checks")
+    run.stage("resume checks")
     val priorLineage: Option[Array[Row]] = Option.when(entries.nonEmpty)(
       spark.read.schema(ResumeSchema).parquet(checkpointDir).collect())
 
@@ -386,7 +381,7 @@ object BuildSketches {
     // costs a second full filtered scan of the input; an empty append
     // writes no partial rows (at most a schema-only part file, which a
     // resume reads as a checkpoint of zero partials)
-    label("stage 1")
+    run.stage("stage 1")
     appendPartials(buildPartials(remaining, cfg, Some(scheme)), checkpointDir, entries)
 
     // the read-back always finds a data file, even after a zero-row build
@@ -394,7 +389,7 @@ object BuildSketches {
     // part file, and a salt=N checkpoint holds data by construction. The
     // file list is fixed here, so the lineage check and stage 2 see the
     // same partials even if another run appends in between.
-    label("lineage")
+    run.stage("lineage")
     val partials = graft.util.ParquetState.read(spark, checkpointDir, Stage2Schema)
     // Concurrent resumes (operator retry, overlapping cron) can append
     // the same shard twice: identical re-appends (same input_hash over

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.agg.VecMeanAgg
 import graft.functions.{CosineSim, NearestCentroid, VecLshBucket}
-import graft.util.ParquetState
+import graft.util.{ParquetState, StagedRun}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -200,34 +200,39 @@ object AnnOps {
     StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType)),
     StructField("ann_params", StringType), StructField("input_hash", LongType)))
 
-  /** One `meta/` row: the batch's params, input fingerprint and size. */
-  private case class Marker(params: String, inputHash: Long, nVecs: Long)
+  /** The committed batches' `meta/` rows by batch id, from ONE collect
+    * of the (tiny) meta log; empty when no index is committed. */
+  private def committedMarkers(spark: SparkSession, indexDir: String): Map[String, Row] = {
+    val committed = StagedRun.markers(spark, metaPath(indexDir), metaSchema)
+    require(committed.isEmpty || committed.contains(BaseBatch),
+      s"index at $indexDir has no committed base build")
+    committed
+  }
 
-  /** The committed batches, from ONE collect of the (tiny) meta log;
-    * None when `meta/` holds no marker (no committed index). */
-  private def committedMarkers(spark: SparkSession, indexDir: String): Option[Map[String, Marker]] =
-    ParquetState.readIfAny(spark, metaPath(indexDir), metaSchema).map { m =>
-      val committed = m.collect()
-        .map(r => r.getString(0) -> Marker(r.getString(1), r.getLong(2), r.getLong(3))).toMap
-      require(committed.contains(BaseBatch),
-        s"index at $indexDir has no committed base build")
-      committed
-    }
+  /** A marker's (input hash, vector count). */
+  private def inputOf(m: Row): (Long, Long) = (m.getAs[Long]("input_hash"), m.getAs[Long]("n_vecs"))
 
-  /** The stored codebook from ONE collect: its centroids in cell order
-    * and the distinct (ann_params, input_hash) stamps of its rows; None
-    * when `codebook/` holds no data. */
-  private def storedCodebook(spark: SparkSession,
-      indexDir: String): Option[(Array[Array[Double]], Seq[(String, Long)])] =
-    ParquetState.readIfAny(spark, codebookPath(indexDir), codebookSchema).map { cb =>
-      val rows = cb.collect().sortBy(_.getInt(0))
-      (rows.map(_.getSeq[Double](1).toArray),
-        rows.map(r => (r.getString(2), r.getLong(3))).distinct.toSeq)
-    }
+  /** [[committedMarkers]] of an index that must be committed. */
+  private def requireIndex(spark: SparkSession, indexDir: String): Map[String, Row] = {
+    val committed = committedMarkers(spark, indexDir)
+    if (committed.isEmpty) throw new IllegalStateException(s"no committed index at " +
+      s"$indexDir (missing meta marker) — run buildIvfIndex first; a killed " +
+      "build leaves no marker by design")
+    committed
+  }
+
+  /** The stored codebook rows (cell, centroid, ann_params, input_hash)
+    * in cell order, from ONE collect; None when `codebook/` holds no data. */
+  private def storedCodebook(spark: SparkSession, indexDir: String): Option[Array[Row]] =
+    ParquetState.readIfAny(spark, codebookPath(indexDir), codebookSchema)
+      .map(_.collect().sortBy(_.getInt(0)))
+
+  private def centroids(codebook: Array[Row]): Array[Array[Double]] =
+    codebook.map(_.getSeq[Double](1).toArray)
 
   /** The codebook of a committed index. */
   private def committedCodebook(spark: SparkSession, indexDir: String): Array[Array[Double]] =
-    storedCodebook(spark, indexDir).map(_._1).getOrElse(throw new IllegalStateException(
+    storedCodebook(spark, indexDir).map(centroids).getOrElse(throw new IllegalStateException(
       s"index at $indexDir has a commit marker but no codebook"))
 
   /** Build (or resume) a PERSISTED IVF index — production similarity
@@ -235,7 +240,7 @@ object AnnOps {
     * of re-paying the k-means + assignment inside every query the way
     * [[ivfTopK]] does.
     *
-    * Layout (the BuildSketches checkpoint pattern, lineage-stamped):
+    * Layout (lineage-stamped):
     *  - `codebook/`    — (cell, centroid, ann_params, input_hash),
     *    written after the k-means;
     *  - `assignments/` — (cid, cv) PARTITIONED BY (batch_id, cell), so a
@@ -253,13 +258,12 @@ object AnnOps {
     * and the directory. `assignments/` stays an inferred read: its `cid`
     * and `cv` columns carry the caller's types.
     *
-    * Resume/idempotence: a committed index re-builds as a no-op when the
-    * input hash + params match, and REJECTS on drift (a stale index
-    * silently serving a changed corpus is the production failure mode
-    * this guards). An uncommitted dir (killed build) resumes by reusing
-    * a stored codebook when its params match — the k-means passes are
-    * the expensive stage — and re-deriving assignments from it
-    * (overwrite, so the retry is idempotent). */
+    * Resume: the build is the [[graft.util.StagedRun]] `ivf[base]`, so a
+    * committed index re-builds as a no-op for the same input and params
+    * and rejects on drift (a stale index silently serving a changed
+    * corpus). An uncommitted dir (killed build) reuses a complete stored
+    * codebook of the same params and corpus — the k-means passes are the
+    * expensive stage — and re-derives the assignments by overwrite. */
   def buildIvfIndex(spark: SparkSession,
       corpus: DataFrame, corpusId: Column, corpusVec: Column,
       indexDir: String, nCells: Int = 16, kmeansIters: Int = 2): Unit =
@@ -269,62 +273,80 @@ object AnnOps {
     // doubles, commit-marker I/O — and none contains a join whose
     // strategy AQE could improve, so adaptive execution only adds a
     // re-planning job per exchange
-    graft.util.Adaptive.withoutAqe(spark) {
+    StagedRun(spark, "ivf", BaseBatch) { run => graft.util.Adaptive.withoutAqe(spark) {
     val params = ivfParamString(nCells, kmeansIters)
     val c = nonNullVecs(corpus.select(corpusId.as("cid"), corpusVec.as("cv")), "cv")
-    val fp = c.agg(
-      coalesce(expr("bit_xor(xxhash64(cid, cv))"), lit(0L)).as("h"),
+    run.stage("fingerprint")
+    val fp = c.agg(StagedRun.fingerprint(col("cid"), col("cv")).as("h"),
       count(lit(1)).as("n")).head()
     val (inHash, nVecs) = (fp.getLong(0), fp.getLong(1))
     require(nVecs > 0, s"buildIvfIndex: nothing to index at $indexDir — " +
       "the corpus has no non-null embedding rows")
 
-    committedMarkers(spark, indexDir).foreach { committed =>
-      val base = committed(BaseBatch)
-      require(base == Marker(params, inHash, nVecs),
-        s"index at $indexDir is committed for params '${base.params}' / " +
-          s"input ${base.inputHash}/${base.nVecs} but this build uses " +
-          s"'$params' / ${inHash}/${nVecs} — a drifted index must be " +
-          "rebuilt in a fresh dir, never silently overwritten")
-      return // committed + identical: no-op (appended batches preserved)
-    }
+    run.stage("control: commit markers")
+    committedMarkers(spark, indexDir).get(BaseBatch) match {
+      case Some(base) =>
+        // committed + identical: no-op (appended batches preserved)
+        val stamp = (base.getAs[String]("ann_params"), inputOf(base))
+        require(stamp == (params, (inHash, nVecs)),
+          s"index at $indexDir is committed for params '${stamp._1}' / " +
+            s"input ${stamp._2._1}/${stamp._2._2} but this build uses " +
+            s"'$params' / ${inHash}/${nVecs} — a drifted index must be " +
+            "rebuilt in a fresh dir, never silently overwritten")
+      case None =>
+        run.stage("codebook: resume check")
+        // reuse a stored codebook from a killed build iff its params,
+        // corpus fingerprint and cells all match this build's: reusing an
+        // old-corpus or partial quantizer would commit an index whose
+        // marker claims the NEW corpus while recall at nProbe < nCells
+        // degrades unboundedly
+        val stored = storedCodebook(spark, indexDir).flatMap { rows =>
+          val p = rows.map(_.getString(2)).distinct.toSeq
+          require(p == Seq(params),
+            s"uncommitted codebook at $indexDir was built with " +
+              s"'${p.mkString(",")}' but this build uses '$params' — " +
+              "rebuild in a fresh dir")
+          // a stale codebook (the corpus moved on after the kill) or a
+          // partial one (a kill mid-commit left only some of its files;
+          // a full one holds cells 0 until min(nCells, nVecs)) is not an
+          // error: retrain from scratch
+          val complete = rows.map(_.getInt(0)).toSeq == (0 until math.min(nCells.toLong, nVecs).toInt)
+          Option.when(complete && rows.map(_.getLong(3)).distinct.toSeq == Seq(inHash))(
+            centroids(rows))
+        }
+        val codebook: Array[Array[Double]] = stored.getOrElse {
+          run.stage("codebook: k-means")
+          val fresh = ivfCodebook(corpus, corpusVec, corpusId, nCells, kmeansIters)
+          val rows = fresh.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+          spark.createDataFrame(rows).toDF("cell", "centroid")
+            .withColumn("ann_params", lit(params))
+            .withColumn("input_hash", lit(inHash))
+            .write.mode(SaveMode.Overwrite).parquet(codebookPath(indexDir))
+          fresh
+        }
 
-    // reuse a stored codebook from a killed build iff BOTH its params
-    // and its corpus fingerprint match this build's: the codebook is the
-    // trained quantizer, so a corpus that drifted between the kill and
-    // the retry must retrain — silently reusing an old-corpus codebook
-    // would commit an index whose marker claims the NEW corpus while
-    // recall at nProbe < nCells degrades unboundedly (exactly the stale-
-    // index failure mode the meta marker guards against)
-    val stored = storedCodebook(spark, indexDir).flatMap { case (cb, stamps) =>
-      val p = stamps.map(_._1).distinct
-      require(p == Seq(params),
-        s"uncommitted codebook at $indexDir was built with " +
-          s"'${p.mkString(",")}' but this build uses '$params' — " +
-          "rebuild in a fresh dir")
-      // a fingerprint-mismatched codebook is stale, not an error: the
-      // kill happened, the corpus moved on — retrain from scratch
-      Option.when(stamps.map(_._2).distinct == Seq(inHash))(cb)
+        commitBatch(run, indexDir, c, codebook, BaseBatch, params, inHash, nVecs)
     }
-    val codebook: Array[Array[Double]] = stored.getOrElse {
-      val fresh = ivfCodebook(corpus, corpusVec, corpusId, nCells, kmeansIters)
-      val rows = fresh.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      spark.createDataFrame(rows).toDF("cell", "centroid")
-        .withColumn("ann_params", lit(params))
-        .withColumn("input_hash", lit(inHash))
-        .write.mode(SaveMode.Overwrite).parquet(codebookPath(indexDir))
-      fresh
-    }
+    } }
 
-    c.select(nearestCell(col("cv"), codebook).as("cell"), col("cid"), col("cv"))
-      .withColumn("batch_id", lit(BaseBatch))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch_id", "cell")
+  /** Write batch `batchId`'s assignments of `vecs` (cid, cv) against
+    * `codebook`, then its `meta/` marker. */
+  private def commitBatch(run: StagedRun, indexDir: String, vecs: DataFrame,
+      codebook: => Array[Array[Double]], batchId: String, params: String,
+      inHash: Long, nVecs: Long): Unit = {
+    // wipe what a killed attempt left under this uncommitted partition:
+    // for a shard regenerated since, the new rows would land beside the
+    // old attempt's, and all would be committed under this batch's marker
+    ParquetState.deletePartition(vecs.sparkSession, assignPath(indexDir), batchId)
+    run.stage("assignments")
+    vecs.select(nearestCell(col("cv"), codebook).as("cell"), col("cid"), col("cv"))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode(SaveMode.Append).partitionBy("batch_id", "cell")
       .parquet(assignPath(indexDir))
-
-    val marker = spark.createDataFrame(Seq((BaseBatch, params, inHash, nVecs)))
-      .toDF("batch_id", "ann_params", "input_hash", "n_vecs")
-    marker.write.mode(SaveMode.Overwrite).parquet(metaPath(indexDir))
-    }
+    run.stage("commit marker")
+    StagedRun.appendMarker(vecs.sparkSession, metaPath(indexDir), metaSchema,
+      batchId, params, inHash, nVecs)
+  }
 
   /** The initial build's reserved batch id. */
   private[ops] val BaseBatch = "base"
@@ -332,8 +354,7 @@ object AnnOps {
   /** Append a DELTA of new vectors to a committed index — the growing-
     * corpus path: production similarity corpora gain a shard per day,
     * and re-running the k-means + full re-assignment per shard is the
-    * same economics bug the persisted index fixed for serving
-    * (IncrementalDedup's batch-lineage pattern, applied here).
+    * same economics bug the persisted index fixed for serving.
     *
     * The delta is quantized against the EXISTING codebook (no retrain):
     * with nProbe = nCells serving stays exact over the grown corpus
@@ -343,36 +364,26 @@ object AnnOps {
     * fresh dir when the drift observable (per-batch counts in `meta/`)
     * says the appended mass rivals the base.
     *
-    * Layout/commit contract (mirrors IncrementalDedup):
-    *  - assignments append as a (batch_id, cell)-partitioned write;
-    *  - one meta marker row per batch, appended AFTER the assignment
-    *    write: a batch is part of the index iff its marker exists, and
-    *    the serve path reads ONLY committed batches — a kill between
-    *    the two writes leaves an invisible partial partition that the
-    *    re-run overwrites (dynamic partition overwrite, idempotent);
-    *  - a committed batchId re-runs as a no-op (input-hash checked:
-    *    same id + different input rejects loudly);
-    *  - params come from the stored meta, never from the caller —
-    *    there is nothing the caller could drift;
-    *  - delta ids must be new: an id already assigned (any batch)
-    *    rejects loudly (the pair-op/global-id contract). */
+    * A [[graft.util.StagedRun]] `ivf[<batchId>]`: the assignments are a
+    * `batch_id=<batchId>` partition, the `meta/` marker row comes after
+    * them, and serving reads committed batches only, so a kill leaves an
+    * invisible partition that the re-run replaces. Params come from the
+    * stored meta, so the caller cannot drift them; delta ids must be new
+    * across the index. */
   def appendIvfBatch(spark: SparkSession,
       delta: DataFrame, deltaId: Column, deltaVec: Column,
       indexDir: String, batchId: String): Unit =
     // AQE off — same rationale as buildIvfIndex (the id-clash semi-join
     // is an ids-only column join whose static plan is fine at scale)
-    graft.util.Adaptive.withoutAqe(spark) {
-    require(batchId.matches("[A-Za-z][A-Za-z0-9_.-]*") && batchId != BaseBatch,
-      s"batchId must match [A-Za-z][A-Za-z0-9_.-]* and not '$BaseBatch' " +
-        s"(got '$batchId'): it becomes a partition directory name")
-    val committed = committedMarkers(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no committed index at $indexDir — " +
-        "run buildIvfIndex before appending deltas"))
-    val params = committed(BaseBatch).params
+    StagedRun(spark, "ivf", batchId) { run => graft.util.Adaptive.withoutAqe(spark) {
+    StagedRun.requireBatchId(batchId, BaseBatch)
+    run.stage("control: commit markers")
+    val committed = requireIndex(spark, indexDir)
+    val params = committed(BaseBatch).getAs[String]("ann_params")
 
     val d = nonNullVecs(delta.select(deltaId.as("cid"), deltaVec.as("cv")), "cv")
-    val fp = d.agg(
-      coalesce(expr("bit_xor(xxhash64(cid, cv))"), lit(0L)).as("h"),
+    run.stage("fingerprint")
+    val fp = d.agg(StagedRun.fingerprint(col("cid"), col("cv")).as("h"),
       count(lit(1)).as("n"), countDistinct(col("cid")).as("nd")).head()
     val (inHash, nVecs) = (fp.getLong(0), fp.getLong(1))
     require(nVecs > 0, s"appendIvfBatch: delta '$batchId' has no non-null " +
@@ -380,50 +391,25 @@ object AnnOps {
     require(fp.getLong(2) == nVecs,
       s"delta '$batchId' carries duplicated vector id(s) — ids must be unique")
 
-    committed.get(batchId) match {
-      case Some(m) =>
-        require(m.inputHash == inHash && m.nVecs == nVecs,
-          s"batch '$batchId' is already committed in $indexDir with a " +
-            s"DIFFERENT input (hash/count ${m.inputHash}/${m.nVecs} vs " +
-            s"${inHash}/${nVecs}) — batch ids must be stable per input shard")
-        return // idempotent re-run
-      case None => ()
+    // a committed batch re-runs as a no-op
+    if (!StagedRun.isCommitted(batchId, indexDir, committed.get(batchId).map(inputOf),
+        inHash, nVecs)) {
+      // global id uniqueness across committed batches: one aggregate over
+      // a column-pruned semi-join of the id column only (uncommitted
+      // partials excluded so a killed append does not block its own retry)
+      run.stage("id-clash check")
+      val clash = spark.read.parquet(assignPath(indexDir))
+        .where(col("batch_id").isin(committed.keys.toSeq: _*))
+        .select(col("cid")).join(d.select(col("cid")), Seq("cid"), "left_semi")
+        .agg(min(col("cid"))).head().get(0)
+      require(clash == null,
+        s"delta '$batchId' carries vector id $clash already indexed at " +
+          s"$indexDir — ids must be globally unique")
+
+      commitBatch(run, indexDir, d, committedCodebook(spark, indexDir),
+        batchId, params, inHash, nVecs)
     }
-    // global id uniqueness across committed batches: one aggregate over
-    // a column-pruned semi-join of the id column only (uncommitted
-    // partials excluded so a killed append does not block its own retry)
-    val clash = spark.read.parquet(assignPath(indexDir))
-      .where(col("batch_id").isin(committed.keys.toSeq: _*))
-      .select(col("cid")).join(d.select(col("cid")), Seq("cid"), "left_semi")
-      .agg(min(col("cid"))).head().get(0)
-    require(clash == null,
-      s"delta '$batchId' carries vector id $clash already indexed at " +
-        s"$indexDir — ids must be globally unique")
-
-    // a killed earlier attempt may have left visible files under this
-    // (uncommitted) batch partition. If the shard was regenerated with
-    // DIFFERENT content since, dynamic overwrite would replace only the
-    // cells the NEW delta touches and ghost rows from the old attempt
-    // would be committed under this batch's marker — wipe the whole
-    // uncommitted partition first, statically, so the write below is the
-    // partition's only content no matter what the first attempt wrote
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"${assignPath(indexDir)}/batch_id=$batchId"), true)
-
-    val codebook = committedCodebook(spark, indexDir)
-    d.select(nearestCell(col("cv"), codebook).as("cell"), col("cid"), col("cv"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "cell")
-      .parquet(assignPath(indexDir))
-
-    spark.createDataFrame(Seq((batchId, params, inHash, nVecs)))
-      .toDF("batch_id", "ann_params", "input_hash", "n_vecs")
-      .write.mode(SaveMode.Append).parquet(metaPath(indexDir))
-    }
+    } }
 
   /** Most probe rows (query rows x nProbe, each carrying its query
     * vector) one [[ivfTopKFromIndex]] call collects to the driver: 2^18,
@@ -455,10 +441,7 @@ object AnnOps {
     // the index = the COMMITTED batches (base build + appended deltas):
     // a killed append leaves assignment files without a marker row, and
     // reading them would serve uncommitted, possibly-partial data
-    val committed = committedMarkers(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed index at $indexDir (missing meta marker) — run " +
-          "buildIvfIndex first; a killed build leaves no marker by design"))
+    val committed = requireIndex(spark, indexDir)
     val probePlan = probeCells(queries, queryId, queryVec,
       committedCodebook(spark, indexDir), nProbe)
     // the probe set is query-batch-sized (queries x nProbe, at most

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.util.ParquetState
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import graft.util.{ParquetState, StagedRun}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,11 +18,8 @@ import org.apache.spark.sql.types._
   *    brought it, with full lineage (batch id, params, and an
   *    order-insensitive input hash over BOTH ids and content — so a
   *    regenerated shard with the same ids but different text cannot
-  *    silently no-op against its old commit marker). Written ONCE per document; never
-  *    rewritten by later batches. This is the reopen-and-continue
-  *    persistence the reference applies to its filter state
-  *    (/root/reference/src/cqf/u64_cqf.rs:46-93: new_file → open_file →
-  *    keep inserting), applied to the dedup pipeline's state.
+  *    silently no-op against its old commit marker). Written ONCE per
+  *    document; never rewritten by later batches.
   *  - `buckets/` — the PERSISTED LSH banding: one compact (id, band,
   *    bucket) triple per (doc, band), partitioned by batch. Written once
   *    per batch; a delta then joins against stored triples instead of
@@ -67,9 +64,10 @@ import org.apache.spark.sql.types._
   * exceeds the cap, which the gate data satisfies and IncrementalDedupSpec
   * pins).
   *
-  * Resume/idempotence contract (mirrors jobs/BuildSketches):
-  *  - a batch id already committed re-runs as a no-op (input-hash checked:
-  *    reusing a batch id for DIFFERENT input rejects loudly);
+  * Each batch is a [[graft.util.StagedRun]] `incdedup[<batchId>]`: its
+  * jobs are labelled by stage, the delta is fingerprinted over (id,
+  * grams), and a committed batch id re-runs as a no-op, or rejects for a
+  * DIFFERENT input. Beyond that protocol, resume works per store:
   *  - a kill between the signature append and the pair append resumes by
   *    recomputing the batch's pairs FROM THE STORE (the store, not the
   *    caller's input, is the source of truth; once the batch's pairs
@@ -124,10 +122,9 @@ object IncrementalDedup {
   private val bucketSchema = StructType(Seq(
     StructField("id", LongType), StructField("band", IntegerType),
     StructField("bucket", LongType), batchIdField))
-  private val pairSchema = StructType(Seq(
+  private val pairStoreSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
-    StructField("inter", LongType), StructField("uni", LongType)))
-  private val pairStoreSchema = pairSchema.add(batchIdField)
+    StructField("inter", LongType), StructField("uni", LongType), batchIdField))
   private val markerSchema = StructType(Seq(
     batchIdField,
     StructField("n_docs", LongType),
@@ -137,13 +134,11 @@ object IncrementalDedup {
   /** All exact-verified near-dup pairs accumulated in `stateDir`:
     * (id_a, id_b, inter, uni), id_a < id_b, distinct. */
   def allPairs(spark: SparkSession, stateDir: String): DataFrame =
-    ParquetState.readIfAny(spark, pairPath(stateDir), pairStoreSchema)
+    ParquetState.readOrEmpty(spark, pairPath(stateDir), pairStoreSchema)
       // a kill between the pair append and the commit marker re-appends
       // the batch's identical rows on resume — collapse by pair key
-      .map(_.dropDuplicates("id_a", "id_b")
-        .select(col("id_a"), col("id_b"), col("inter"), col("uni")))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], pairSchema))
+      .dropDuplicates("id_a", "id_b")
+      .select(col("id_a"), col("id_b"), col("inter"), col("uni"))
 
   /** Near-dup clusters over everything ingested so far: (id, component,
     * kept) — [[DedupOps.dedupByPairs]] over the accumulated pair set,
@@ -151,10 +146,8 @@ object IncrementalDedup {
     * edge set, so re-deriving clusters after a delta costs O(edges), not
     * a corpus re-scan. */
   def clusters(spark: SparkSession, stateDir: String): DataFrame = {
-    val nodes = ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema)
-      .map(_.select(col("id")).distinct())
-      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("id", LongType)))))
+    val nodes = ParquetState.readOrEmpty(spark, sigPath(stateDir), sigSchema)
+      .select(col("id")).distinct()
     DedupOps.dedupByPairs(nodes, allPairs(spark, stateDir))
   }
 
@@ -166,44 +159,29 @@ object IncrementalDedup {
     * @param batchId caller-chosen batch name (shard date, ingest run id);
     *                re-running a committed batchId with identical input is
     *                a no-op, with different input an error. Must start
-    *                with a letter: the signature store partitions by
-    *                batch_id, and a numeric-looking name ("20260818")
-    *                would be partition-TYPE-INFERRED as an integer by any
-    *                reader that infers the store's schema (graft's own
-    *                reads declare it a string), and leading-zero names
-    *                would not even round-trip there
+    *                with a letter ([[graft.util.StagedRun.requireBatchId]]):
+    *                the stores partition by batch_id
     */
   def run(spark: SparkSession, df: DataFrame, tokens: Column, id: Column,
-      stateDir: String, batchId: String, cfg: Config = Config()): DataFrame = {
-    // runImpl labels its stages through the thread-local job description;
-    // the caller's own description comes back on every exit path
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    try graft.util.Adaptive.withCoalescedShuffles(spark) {
-      runImpl(spark, df, tokens, id, stateDir, batchId, cfg)
-    } finally sc.setJobDescription(callerDescription)
-  }
+      stateDir: String, batchId: String, cfg: Config = Config()): DataFrame =
+    StagedRun(spark, "incdedup", batchId) { run =>
+      graft.util.Adaptive.withCoalescedShuffles(spark) {
+        runImpl(run, spark, df, tokens, id, stateDir, batchId, cfg)
+      }
+    }
 
-  private def runImpl(spark: SparkSession, df: DataFrame, tokens: Column,
+  private def runImpl(run: StagedRun, spark: SparkSession, df: DataFrame, tokens: Column,
       id: Column, stateDir: String, batchId: String, cfg: Config): DataFrame = {
-    require(batchId.matches("[A-Za-z][A-Za-z0-9_.-]*"),
-      s"batchId must match [A-Za-z][A-Za-z0-9_.-]* (got '$batchId'): it " +
-        "becomes a partition directory name, where numeric-looking values " +
-        "are type-inferred on read and special characters are escaped — " +
-        "both break exact resume matching")
+    StagedRun.requireBatchId(batchId)
     val params = paramString(cfg)
     val nHashes = cfg.bands * cfg.rowsPerBand
 
     // ---- validate stored state against this run's config ----
-    // ONE control pass over the signature store serves three consumers
-    // that each paid their own job (guide §1.2): the params validation,
-    // the already-signed probe, and the per-batch signed counts the
-    // bucket completeness check needs (this batch's own count is known
-    // from the fingerprint agg below, so the pre-write read stays
-    // correct after the signature append).
-    def label(stage: String): Unit =
-      spark.sparkContext.setJobDescription(s"incdedup[$batchId] $stage")
-    label("control: signature stats")
+    // ONE control pass over the signature store serves the params check,
+    // the already-signed probe and the per-batch signed counts of the
+    // bucket completeness check (this batch's own count comes from the
+    // fingerprint agg below).
+    run.stage("control: signature stats")
     val existingSigs = ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema)
     val sigStats: Seq[(String, String, Long)] = existingSigs.map { st =>
       graft.util.Adaptive.withoutAqe(spark) {
@@ -220,41 +198,28 @@ object IncrementalDedup {
           "mixed-parameter signatures are not comparable; resume with " +
           "the original config or rebuild from a fresh state dir")
     }
-    label("control: commit markers")
-    val committed: Map[String, (Long, Long)] =
-      ParquetState.readIfAny(spark, batchPath(stateDir), markerSchema).map { m =>
-        graft.util.Adaptive.withoutAqe(spark) {
-          m.select(col("batch_id"), col("input_hash"), col("n_docs"))
-            .collect()
-            .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        }
-      }.getOrElse(Map.empty)
+    run.stage("control: commit markers")
+    val committed = StagedRun.markers(spark, batchPath(stateDir), markerSchema)
 
-    // the delta's fingerprint — needed for the commit marker and every
-    // idempotence check, so the one aggregation pass is paid up front.
-    // The hash covers id AND content (grams is a pure function of the
-    // text + k): an id-only hash would let a regenerated shard with the
-    // same ids but different text silently no-op against its old commit
-    // marker (or resume onto stale signatures) instead of rejecting
-    // ONE materialization of the delta's derived columns (guide §1.2
-    // "don't compute things twice"): the fingerprint agg, the signature
-    // append, the id-clash check, and the delta's own bucket banding
-    // each consumed this projection — re-tokenizing and re-hashing the
-    // delta once per consumer. Delta-sized by contract (never the
+    // ONE materialization of the delta's derived columns serves the
+    // fingerprint agg, the signature append, the id-clash check and the
+    // delta's own bucket banding. Delta-sized by contract (never the
     // corpus); MEMORY_AND_DISK spills rather than OOMs on a fat delta;
-    // released in the finally at the end of run().
-    // A daily delta often arrives as ONE file (the streaming front end
-    // feeds literal single-file micro-batches) — an unsplittable scan
-    // would serialize the whole signing pass on one core; rebalanced()
-    // is a no-op whenever the delta already has >= slots splits.
+    // released in the finally at the end of run(). A daily delta often
+    // arrives as ONE file (the streaming front end feeds single-file
+    // micro-batches), so rebalanced() spreads the signing pass over the
+    // slots; it is a no-op when the delta already has enough splits.
     val newBase = TextOps.rebalanced(df).select(id.as("id"),
       DedupOps.shingleMinhashSig(tokens, cfg.k, nHashes).as("sig"),
       DedupOps.shingleHashSet(tokens, cfg.k).as("grams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    label("sign: fingerprint+materialize")
+    // the fingerprint covers id AND content (grams is a pure function of
+    // the text + k): an id-only hash would let a regenerated shard with
+    // the same ids but different text no-op against its old marker
+    run.stage("sign: fingerprint+materialize")
     val fpRow = graft.util.Adaptive.withoutAqe(spark) { newBase.agg(
-      coalesce(expr("bit_xor(xxhash64(id, grams))"), lit(0L)).as("h"),
+      StagedRun.fingerprint(col("id"), col("grams")).as("h"),
       count(lit(1)).as("n"),
       countDistinct(col("id")).as("nd")).head() }
     val (inHash, inCount) = (fpRow.getLong(0), fpRow.getLong(1))
@@ -267,21 +232,12 @@ object IncrementalDedup {
         "document id(s) WITHIN the batch — ids must be unique (the " +
         "pair-op contract)")
 
-    committed.get(batchId) match {
-      case Some((h, n)) =>
-        require(h == inHash && n == inCount,
-          s"batch '$batchId' is already committed in $stateDir with a " +
-            s"DIFFERENT input (hash/count ${h}/${n} vs ${inHash}/${inCount}) " +
-            "— batch ids must be stable per input shard")
-        return allPairs(spark, stateDir) // idempotent re-run
-      case None => ()
-    }
+    if (StagedRun.isCommitted(batchId, stateDir, committed.get(batchId).map(m =>
+        (m.getAs[Long]("input_hash"), m.getAs[Long]("n_docs"))), inHash, inCount))
+      return allPairs(spark, stateDir) // idempotent re-run
 
-    def writeMarker(): Unit = {
-      val marker = spark.createDataFrame(
-        java.util.Arrays.asList(Row(batchId, inCount, inHash, params)), markerSchema)
-      marker.write.mode(SaveMode.Append).parquet(batchPath(stateDir))
-    }
+    def writeMarker(): Unit = StagedRun.appendMarker(spark, batchPath(stateDir),
+      markerSchema, batchId, inCount, inHash, params)
 
     // an empty delta (a zero-row day) is a legitimate no-op, not an
     // error: stage 1 would append NO data files, and on a first batch the
@@ -296,21 +252,16 @@ object IncrementalDedup {
     // ---- stage 1: signature append (skipped when resuming past it) ----
     val alreadySigned = sigStats.exists(_._1 == batchId)
     val signedMatches = alreadySigned && {
-      // killed between the signature append and the pair append: the
-      // STORE is the source of truth for this batch's members — require
-      // the caller's input to be the same shard that was signed. A
-      // MISMATCH has two possible causes, distinguished by whether the
-      // batch's pairs exist: pairs present ⇒ the signature partition was
-      // complete when stage 3 ran, so the CALLER's input changed —
-      // reject; no pairs ⇒ the partition may itself be a PARTIAL from a
-      // kill mid-commit of the signature append (visible subset of task
-      // files) — nothing downstream depends on it, so wipe this batch's
-      // signature + bucket partitions and re-sign from the current
-      // input (presence-based skip would wedge the batch forever behind
-      // a misleading 'input shard changed' error)
+      // killed after the signature append: the STORE is the source of
+      // truth for this batch's members, so the caller's input must be the
+      // shard that was signed. On a mismatch, the batch's pairs decide:
+      // present ⇒ the partition was complete when stage 3 ran, so the
+      // CALLER's input changed — reject; absent ⇒ the partition may be a
+      // PARTIAL left by a kill mid-commit, which nothing downstream
+      // depends on yet — wipe this batch's signature + bucket partitions
+      // and re-sign from the current input
       val st = existingSigs.get.where(col("batch_id") === batchId)
-      val r = st.agg(coalesce(expr("bit_xor(xxhash64(id, grams))"), lit(0L)),
-        count(lit(1))).head()
+      val r = st.agg(StagedRun.fingerprint(col("id"), col("grams")), count(lit(1))).head()
       val ok = r.getLong(0) == inHash && r.getLong(1) == inCount
       if (!ok) {
         val pairsForBatch = ParquetState.readIfAny(spark, pairPath(stateDir),
@@ -322,12 +273,8 @@ object IncrementalDedup {
             s"this run's input (${inHash}/${inCount}) and the batch's " +
             "pairs already exist — the input shard changed between the " +
             "kill and the resume")
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${sigPath(stateDir)}/batch_id=$batchId"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${bucketPath(stateDir)}/batch_id=$batchId"), true)
+        ParquetState.deletePartition(spark, sigPath(stateDir), batchId)
+        ParquetState.deletePartition(spark, bucketPath(stateDir), batchId)
       }
       ok
     }
@@ -335,13 +282,10 @@ object IncrementalDedup {
       // id-uniqueness guard (the pair-op contract): a duplicated id would
       // silently fan pairs out through the payload re-joins. Re-read the
       // store here (existingSigs' file listing predates a possible
-      // partial-partition wipe above) and exclude this batch's own rows
-      label("sign: id-clash check")
-      // ids-only semi-join probe — static plan is fine at any scale
-      // (column-pruned id scan, no skew decision AQE could improve). A
-      // global min is one result job whether or not an id clashes, where
-      // a take(1) that finds nothing in its first partition re-runs over
-      // the rest
+      // partial-partition wipe above) and exclude this batch's own rows.
+      // An ids-only semi-join under a static plan; a global min is one
+      // result job whether or not an id clashes
+      run.stage("sign: id-clash check")
       ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema).foreach { st =>
         graft.util.Adaptive.withoutAqe(spark) {
         val clash = st.where(col("batch_id") =!= batchId).select(col("id"))
@@ -353,7 +297,7 @@ object IncrementalDedup {
             "across batches")
         }
       }
-      label("sign: append")
+      run.stage("sign: append")
       newBase
         .withColumn("batch_id", lit(batchId))
         .withColumn("dedup_params", lit(params))
@@ -362,39 +306,23 @@ object IncrementalDedup {
     }
 
     // ---- stage 1b: persist this batch's banded buckets ----
-    // The bucket store holds one compact (id, band, bucket) triple per
-    // (doc, band), partitioned by batch_id — the persisted form of the
-    // LSH banding. Without it every delta re-read and re-banded the WHOLE
-    // signature store (sig arrays + bands×hash per stored doc, every
-    // day); with it a delta scans only the triple table, ~an order of
-    // magnitude fewer bytes and zero re-hashing, and the signature
-    // store's heavy columns (sig, grams) are read only partition-pruned.
-    // Reference analog: reopen-and-continue persistence
-    // (/root/reference/src/cqf/u64_cqf.rs:46-93) — never re-derive what
-    // an earlier run already materialized.
-    //
     // The loop also covers resume (a kill between the signature and
     // bucket appends leaves this batch signed but unbucketed) and
     // migration (a store written before bucket tracking backfills every
-    // batch once, from its own signature partition, then never again).
+    // batch once, from its own signature partition).
     val store = ParquetState.read(spark, sigPath(stateDir), sigSchema)
     // presence alone is NOT completeness: a kill mid-commit of a bucket
-    // append can leave a PARTIAL batch partition whose files are visible
-    // — treating it as done would silently drop its docs from every
-    // later NEW × ALL join (pairs lost forever, no error). The banding
-    // is exactly `bands` triples per signed doc, so per-batch triple
-    // counts give a cheap structural completeness check; an incomplete
-    // partition is rebuilt by overwriting JUST that partition
-    // (dynamic partitionOverwriteMode), which is idempotent under
-    // repeated kills.
-    // per-batch counts from the pre-write control pass (sigStats): the
-    // signature append above touched ONLY this batch's partition, whose
-    // post-write count is inCount by construction (freshly written from
-    // newBase, or hash+count-verified equal to it) — no re-scan needed
+    // append can leave a PARTIAL visible partition, whose missing docs
+    // every later NEW × ALL join would silently drop. The banding is
+    // exactly `bands` triples per signed doc, so per-batch triple counts
+    // check completeness; an incomplete partition is rebuilt by dynamic
+    // partition overwrite, idempotent under repeated kills. The signed
+    // counts come from the pre-write control pass: the append above
+    // touched ONLY this batch's partition, which now holds inCount rows
     val signedCounts: Map[String, Long] =
       sigStats.groupBy(_._1).map { case (b, rows) => b -> rows.map(_._3).sum } ++
         Map(batchId -> inCount)
-    label("buckets: counts")
+    run.stage("buckets: counts")
     val bucketCounts: Map[String, Long] =
       ParquetState.readIfAny(spark, bucketPath(stateDir), bucketSchema).map { b =>
         graft.util.Adaptive.withoutAqe(spark) {
@@ -404,7 +332,7 @@ object IncrementalDedup {
       }.getOrElse(Map.empty)
     val incomplete = signedCounts.filter { case (b, n) =>
       bucketCounts.getOrElse(b, 0L) != n * cfg.bands }
-    label("buckets: append")
+    run.stage("buckets: append")
     incomplete.keys.toSeq.sorted.foreach { b =>
       // the delta's own partition bands from the persisted newBase
       // instead of a parquet read-back: its content is PROVABLY the
@@ -436,35 +364,23 @@ object IncrementalDedup {
       .select(keys.map(col): _*).distinct()
     val matchedAll = buckets.join(newKeys, keys, "left_semi")
     // the cap must see FULL bucket sizes (old + new): the semi-join keeps
-    // whole buckets, so counting matchedAll equals counting the full
-    // banding for every touched bucket; the cap guards the ALL side once,
-    // and because capBuckets keeps or drops WHOLE buckets and the new
-    // batch's rows are a subset of matchedAll (their buckets are in
-    // newKeys by construction), the capped NEW side is exactly
-    // guardedAll filtered to this batch — the former bandedNew semi-join
-    // + distinct re-derived that same set through two more exchanges
-    // (round-7 plan diet; hot buckets still drop from both sides
-    // consistently)
+    // whole buckets, so counting matchedAll counts the full banding of
+    // every touched bucket. capBuckets keeps or drops WHOLE buckets, so
+    // the capped NEW side is exactly guardedAll filtered to this batch
     val guardedAll = DedupOps.capBuckets(matchedAll, keys, cfg.bucketCap)
     val guardedNew = guardedAll.where(col("batch_id") === batchId)
     // keep the old side's batch_id through the join: stage 3 then reads
     // gram sets only from the signature partitions that actually hold a
     // candidate (partition pruning), not the whole store
-    label("candidates: NEWxALL bucket join")
-    // normalize the pair orientation BEFORE the distinct (round 7): a
-    // new-new pair arrives in both orientations but normalizes to one
-    // row, and a new-old pair exists only as (new, old) — so a single
-    // distinct on (id_a, id_b, batch_o) is the pair distinct (batch_o
-    // is determined by the pair: batchId for new-new, the old side's
-    // batch otherwise). The former two-step (orientation distinct, then
-    // normalized distinct) paid a second full exchange for the same set.
-    // AQE off for the propose/dispose joins as well (measured): their
-    // skew is BOUNDED BY CONSTRUCTION (capBuckets caps every bucket, so
-    // no post-shuffle partition can exceed cap x bands rows) and both
-    // sides are delta-proportional — the two properties AQE's runtime
-    // re-planning exists to discover. Static planning saves one
-    // re-planning job per exchange across the hottest stage of the
-    // pipeline.
+    run.stage("candidates: NEWxALL bucket join")
+    // normalize the pair orientation BEFORE the distinct: a new-new pair
+    // arrives in both orientations but normalizes to one row, and a
+    // new-old pair exists only as (new, old) — so one distinct on (id_a,
+    // id_b, batch_o) is the pair distinct (batch_o is determined by the
+    // pair). AQE off for the propose/dispose joins: their skew is bounded
+    // by construction (capBuckets caps every bucket) and both sides are
+    // delta-proportional, so static planning loses nothing and saves one
+    // re-planning job per exchange.
     val cand0 = graft.util.Adaptive.withoutAqe(spark) { guardedNew
       .select(keys.map(col) :+ col("id").as("id_n"): _*)
       .join(guardedAll.select(
@@ -484,14 +400,14 @@ object IncrementalDedup {
     // batches holding a candidate member (plus the delta itself, whose
     // ids sit on both sides of new×new pairs) — the grams read below
     // partition-prunes to these
-    label("verify: touched batches")
+    run.stage("verify: touched batches")
     val touched = (graft.util.Adaptive.withoutAqe(spark) {
       cand0.select(col("batch_o")).distinct()
         .collect().map(_.getString(0)).toSet
     } + batchId).toSeq.sorted
     val gramsSrc = store.where(col("batch_id").isin(touched: _*))
       .select(col("id"), col("grams"))
-    label("verify: jaccard recheck + pair append")
+    run.stage("verify: jaccard recheck + pair append")
     // same bounded-skew/static-plan argument as cand0 above
     graft.util.Adaptive.withoutAqe(spark) {
       val verified = DedupOps.verifyByJaccard(candidates, gramsSrc, cfg.threshold)
@@ -501,7 +417,7 @@ object IncrementalDedup {
     }
 
     // ---- stage 4: commit marker — the batch is now done ----
-    label("commit marker")
+    run.stage("commit marker")
     writeMarker()
 
     allPairs(spark, stateDir)

@@ -3,7 +3,7 @@ package graft.util
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -33,10 +33,20 @@ object ParquetState {
     else fs.listStatus(path).toSeq.filter(visible)
   }
 
+  /** Delete the `batch_id=<batchId>` partition of the store at `dir`:
+    * what an uncommitted attempt at that batch left. */
+  def deletePartition(spark: SparkSession, dir: String, batchId: String): Unit =
+    fsOf(spark, dir).delete(new Path(s"$dir/batch_id=$batchId"), true)
+
   /** [[read]] a state table under its declared schema only if the
     * directory holds visible data entries ([[visibleEntries]]). */
   def readIfAny(spark: SparkSession, dir: String, schema: StructType): Option[DataFrame] =
     Option.when(visibleEntries(spark, dir).nonEmpty)(read(spark, dir, schema))
+
+  /** [[readIfAny]], or an empty frame of `schema`. */
+  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    readIfAny(spark, dir, schema).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 
   /** Read a state table under its DECLARED schema: no schema-inference
     * job. A declared schema alone reads a column the files lack as null

@@ -295,6 +295,67 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs.length <= 19, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
   }
 
+  test("every job of buildIvfIndex and appendIvfBatch carries an ivf[<batch>] label") {
+    val idx = Files.createTempDirectory("ann_idx_labels").toString
+    // the frames (and their schema inference) exist before the window opens
+    val (base, delta) = (emb.where(pmod(col("vec_id"), lit(3)) === 0),
+      emb.where(pmod(col("vec_id"), lit(3)) === 1))
+    val jobs = graft.JobsOf(spark) {
+      AnnOps.buildIvfIndex(spark, base, col("vec_id"), col("embedding"), idx,
+        nCells = 8, kmeansIters = 2)
+      AnnOps.appendIvfBatch(spark, delta, col("vec_id"), col("embedding"), idx, "d1")
+    }
+    assert(jobs.nonEmpty && jobs.forall(d => d.startsWith("ivf[base] ") || d.startsWith("ivf[d1] ")),
+      jobs.mkString(" | "))
+    assert(jobs.exists(_.startsWith("ivf[d1] ")), jobs.mkString(" | "))
+  }
+
+  test("the caller's job description survives the IVF build and append, also when they reject") {
+    val idx = Files.createTempDirectory("ann_idx_desc").toString
+    def part(b: Int) = emb.where(pmod(col("vec_id"), lit(3)) === b)
+    val sc = spark.sparkContext
+    def description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller: nightly index")
+    try {
+      AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+        nCells = 8, kmeansIters = 2)
+      assert(description == "caller: nightly index")
+      AnnOps.appendIvfBatch(spark, part(1), col("vec_id"), col("embedding"), idx, "d1")
+      assert(description == "caller: nightly index")
+      // rejected after the first stage label: drifted params, reused id
+      intercept[IllegalArgumentException] {
+        AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+          nCells = 16, kmeansIters = 2)
+      }
+      assert(description == "caller: nightly index")
+      intercept[IllegalArgumentException] {
+        AnnOps.appendIvfBatch(spark, part(2), col("vec_id"), col("embedding"), idx, "d1")
+      }
+      assert(description == "caller: nightly index")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("a codebook a kill left partial is retrained, not reused") {
+    val idx = Files.createTempDirectory("ann_idx_partial_cb").toString
+    AnnOps.buildIvfIndex(spark, emb, col("vec_id"), col("embedding"), idx,
+      nCells = 8, kmeansIters = 2)
+    val reference = serveSet(AnnOps.ivfTopKFromIndex(spark, idx, queries,
+      col("vec_id"), col("embedding"), k = 3, nProbe = 3))
+    // the kill: no marker, no assignments, and only some codebook files
+    graft.util.ParquetState.deleteRecursively(new java.io.File(AnnOps.metaPath(idx)))
+    graft.util.ParquetState.deleteRecursively(new java.io.File(AnnOps.assignPath(idx)))
+    val parts = codebookFiles(idx).keys.filter(_.startsWith("part-")).toSeq.sorted
+    assert(parts.length > 1, parts)
+    parts.indices.filter(_ % 2 == 0).foreach { i =>
+      assert(new java.io.File(AnnOps.codebookPath(idx), parts(i)).delete())
+    }
+    AnnOps.buildIvfIndex(spark, emb, col("vec_id"), col("embedding"), idx,
+      nCells = 8, kmeansIters = 2)
+    assert(spark.read.parquet(AnnOps.codebookPath(idx)).count() == 8)
+    assert(serveSet(AnnOps.ivfTopKFromIndex(spark, idx, queries,
+      col("vec_id"), col("embedding"), k = 3, nProbe = 3)) == reference)
+  }
+
   test("lshParamsFor: occupancy bounded, recall reached, scales with corpus") {
     // closed-form recall of the returned params must clear the target
     def recallOf(b: Int, r: Int, cos: Double): Double = {
