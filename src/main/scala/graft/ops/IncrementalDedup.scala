@@ -32,8 +32,7 @@ import org.apache.spark.sql.types._
   *  - `pairs/` — the exact-verified near-dup pairs, appended per batch.
   *  - `batches/` — one commit-marker row per completed batch (batch id,
   *    doc count, input hash, params), appended AFTER the batch's pairs:
-  *    a batch is done iff its marker exists, so a kill at any point
-  *    leaves a state a re-run completes to the identical answer.
+  *    a batch is done, and visible to readers, iff its marker exists.
   *
   * Every store is read under its declared schema (`sigSchema`,
   * `bucketSchema`, `pairStoreSchema`, `markerSchema`) through
@@ -45,11 +44,12 @@ import org.apache.spark.sql.types._
   * persist their bucket triples, and bucket-join NEW × ALL over the
   * triples the delta touches — old×old pairs were settled by earlier
   * batches and are never re-proposed. The exact shingle-Jaccard recheck
-  * then disposes candidates exactly as in the batch pipeline. Connected components over the ACCUMULATED pair set
-  * stay cheap by construction — near-dup edges above a high threshold are
-  * a tiny fraction of the corpus, and [[DedupOps.connectedComponents]] is
-  * log-round — so "pairs + CC delta" is delta-proportional in the only
-  * stage that was corpus-proportional (the LSH propose/dispose).
+  * then disposes candidates exactly as in the batch pipeline. Connected
+  * components over the ACCUMULATED pair set stay cheap by construction —
+  * near-dup edges above a high threshold are a tiny fraction of the
+  * corpus, and [[DedupOps.connectedComponents]] is log-round — so "pairs
+  * + CC delta" is delta-proportional in the only stage that was
+  * corpus-proportional (the LSH propose/dispose).
   *
   * Batch-composition law (why incremental ≡ from-scratch): every unordered
   * pair lands in exactly one batch — (old, old) in the earlier batch that
@@ -67,26 +67,23 @@ import org.apache.spark.sql.types._
   * Each batch is a [[graft.util.StagedRun]] `incdedup[<batchId>]`: its
   * jobs are labelled by stage, the delta is fingerprinted over (id,
   * grams), and a committed batch id re-runs as a no-op, or rejects for a
-  * DIFFERENT input. Beyond that protocol, resume works per store:
-  *  - a kill between the signature append and the pair append resumes by
-  *    recomputing the batch's pairs FROM THE STORE (the store, not the
-  *    caller's input, is the source of truth; once the batch's pairs
-  *    exist the input must hash-match what was signed — before that, a
-  *    hash-mismatched signature partition is treated as a PARTIAL left
-  *    by a kill mid-commit and is wiped + re-signed from the current
-  *    input, since nothing downstream depends on it yet); any signed
-  *    batch whose bucket partition is missing OR structurally incomplete
-  *    (triple count != docs × bands — a kill mid-commit of the bucket
-  *    append) is rebuilt from its own signature partition by dynamic
-  *    partition overwrite;
-  *  - a kill between the pair append and the commit marker re-appends the
-  *    identical pair rows; [[allPairs]] reads through a (id_a, id_b)
-  *    dropDuplicates so the double append is invisible;
-  *  - params drift (bands, k, threshold...) against stored state rejects
-  *    before any append — mixed-parameter signatures are not comparable;
+  * DIFFERENT input. Resume rests on one rule: every read of the
+  * signature, bucket and pair stores ([[allPairs]], [[clusters]], and
+  * inside a run the id-clash check, the NEW × ALL join and the gram
+  * read) sees the committed batches only, plus, inside its own run, the
+  * running batch. So whatever a killed attempt left — complete or
+  * partial partitions in any store — is invisible, and a run of a batch
+  * without a marker first deletes that batch's partition in all three
+  * stores, then redoes the batch from the caller's input (which may
+  * differ from the killed attempt's). Beyond that:
+  *  - params drift (bands, k, threshold...) against the committed
+  *    markers rejects before any write — mixed-parameter signatures are
+  *    not comparable;
+  *  - a store written before bucket tracking (committed batches without
+  *    a bucket partition) rejects before any write: rebuild it;
   *  - document ids must be globally unique across batches (the pair-op
   *    contract, [[DedupOps.joinPairPayload]]): a new batch carrying an id
-  *    the store already holds rejects loudly.
+  *    a committed batch holds rejects loudly.
   */
 object IncrementalDedup {
 
@@ -131,24 +128,40 @@ object IncrementalDedup {
     StructField("input_hash", LongType),
     StructField("dedup_params", StringType)))
 
-  /** All exact-verified near-dup pairs accumulated in `stateDir`:
-    * (id_a, id_b, inter, uni), id_a < id_b, distinct. */
+  /** The rows of the batches `ids` in the store at `dir`. Every read of
+    * the signature, bucket and pair stores goes through here with the
+    * committed batch ids (inside [[run]], plus the running batch's own),
+    * so nothing an uncommitted attempt left is ever read. */
+  private def batchRows(spark: SparkSession, dir: String, schema: StructType,
+      ids: Seq[String]): DataFrame =
+    ParquetState.readOrEmpty(spark, dir, schema).where(col("batch_id").isin(ids: _*))
+
+  private def committedIds(spark: SparkSession, stateDir: String): Seq[String] =
+    StagedRun.markers(spark, batchPath(stateDir), markerSchema).keys.toSeq
+
+  /** All exact-verified near-dup pairs of the committed batches in
+    * `stateDir`: (id_a, id_b, inter, uni), id_a < id_b, distinct. */
   def allPairs(spark: SparkSession, stateDir: String): DataFrame =
-    ParquetState.readOrEmpty(spark, pairPath(stateDir), pairStoreSchema)
-      // a kill between the pair append and the commit marker re-appends
-      // the batch's identical rows on resume — collapse by pair key
+    pairsOf(spark, stateDir, committedIds(spark, stateDir))
+
+  private def pairsOf(spark: SparkSession, stateDir: String, ids: Seq[String]): DataFrame =
+    batchRows(spark, pairPath(stateDir), pairStoreSchema, ids)
+      // a store written before uncommitted attempts were wiped can hold a
+      // committed batch's pairs twice: a kill between the pair append and
+      // the marker, then a resume that appended the same rows again
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"))
 
-  /** Near-dup clusters over everything ingested so far: (id, component,
+  /** Near-dup clusters over everything committed so far: (id, component,
     * kept) — [[DedupOps.dedupByPairs]] over the accumulated pair set,
     * nodes drawn from the signature store. The CC input is the (tiny)
     * edge set, so re-deriving clusters after a delta costs O(edges), not
     * a corpus re-scan. */
   def clusters(spark: SparkSession, stateDir: String): DataFrame = {
-    val nodes = ParquetState.readOrEmpty(spark, sigPath(stateDir), sigSchema)
+    val ids = committedIds(spark, stateDir)
+    val nodes = batchRows(spark, sigPath(stateDir), sigSchema, ids)
       .select(col("id")).distinct()
-    DedupOps.dedupByPairs(nodes, allPairs(spark, stateDir))
+    DedupOps.dedupByPairs(nodes, pairsOf(spark, stateDir, ids))
   }
 
   /** Ingest one batch and return [[allPairs]] over the grown corpus.
@@ -175,31 +188,31 @@ object IncrementalDedup {
     StagedRun.requireBatchId(batchId)
     val params = paramString(cfg)
     val nHashes = cfg.bands * cfg.rowsPerBand
+    val dataStores = Seq(sigPath(stateDir) -> sigSchema,
+      bucketPath(stateDir) -> bucketSchema, pairPath(stateDir) -> pairStoreSchema)
 
     // ---- validate stored state against this run's config ----
-    // ONE control pass over the signature store serves the params check,
-    // the already-signed probe and the per-batch signed counts of the
-    // bucket completeness check (this batch's own count comes from the
-    // fingerprint agg below).
-    run.stage("control: signature stats")
-    val existingSigs = ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema)
-    val sigStats: Seq[(String, String, Long)] = existingSigs.map { st =>
-      graft.util.Adaptive.withoutAqe(spark) {
-        st.groupBy(col("batch_id"), col("dedup_params"))
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      }
-    }.getOrElse(Seq.empty)
-    locally {
-      val stored = sigStats.map(_._2).distinct
-      require(stored.forall(_ == params),
-        s"state at $stateDir was built with parameters " +
-          s"'${stored.mkString(",")}' but this run uses '$params' — " +
-          "mixed-parameter signatures are not comparable; resume with " +
-          "the original config or rebuild from a fresh state dir")
-    }
     run.stage("control: commit markers")
     val committed = StagedRun.markers(spark, batchPath(stateDir), markerSchema)
+    val storedParams = committed.values.map(_.getAs[String]("dedup_params")).toSeq.distinct
+    require(storedParams.forall(_ == params),
+      s"state at $stateDir was built with parameters " +
+        s"'${storedParams.mkString(",")}' but this run uses '$params' — " +
+        "mixed-parameter signatures are not comparable; resume with " +
+        "the original config or rebuild from a fresh state dir")
+    // a store from before bucket tracking holds committed batches without
+    // a bucket partition, whose pairs with every later batch the NEW × ALL
+    // join would silently miss. One driver listing, no job
+    val bucketed = ParquetState.visibleEntries(spark, bucketPath(stateDir))
+      .map(_.getPath.getName).toSet
+    val unbucketed = committed.collect { case (b, m)
+      if m.getAs[Long]("n_docs") > 0 && !bucketed(s"batch_id=$b") => b }.toSeq.sorted
+    require(unbucketed.isEmpty,
+      s"state at $stateDir predates bucket tracking: committed batch(es) " +
+        s"${unbucketed.mkString(", ")} have no partition in " +
+        s"${bucketPath(stateDir)} — rebuild from a fresh dir")
+    // the footer guard of every existing store, before anything is written
+    dataStores.foreach { case (dir, schema) => ParquetState.readIfAny(spark, dir, schema) }
 
     // ONE materialization of the delta's derived columns serves the
     // fingerprint agg, the signature append, the id-clash check and the
@@ -234,128 +247,55 @@ object IncrementalDedup {
 
     if (StagedRun.isCommitted(batchId, stateDir, committed.get(batchId).map(m =>
         (m.getAs[Long]("input_hash"), m.getAs[Long]("n_docs"))), inHash, inCount))
-      return allPairs(spark, stateDir) // idempotent re-run
+      return pairsOf(spark, stateDir, committed.keys.toSeq) // idempotent re-run
 
+    // the batch has no marker, so no reader has seen its partitions: wipe
+    // what a killed attempt left and redo the batch from the caller's input
+    dataStores.foreach { case (dir, _) => ParquetState.deletePartition(spark, dir, batchId) }
+    val visible = committed.keys.toSeq :+ batchId
     def writeMarker(): Unit = StagedRun.appendMarker(spark, batchPath(stateDir),
       markerSchema, batchId, inCount, inHash, params)
 
     // an empty delta (a zero-row day) is a legitimate no-op, not an
-    // error: stage 1 would append NO data files, and on a first batch the
-    // unconditional store read below would then find no data file —
-    // commit the marker (burning the batch id with hash 0 / count 0 so a
-    // later NON-empty reuse of the id rejects) and skip the pipeline
+    // error: commit the marker (burning the batch id with hash 0 / count
+    // 0 so a later NON-empty reuse of the id rejects) and skip the pipeline
     if (inCount == 0L) {
       writeMarker()
-      return allPairs(spark, stateDir)
+      return pairsOf(spark, stateDir, visible)
     }
 
-    // ---- stage 1: signature append (skipped when resuming past it) ----
-    val alreadySigned = sigStats.exists(_._1 == batchId)
-    val signedMatches = alreadySigned && {
-      // killed after the signature append: the STORE is the source of
-      // truth for this batch's members, so the caller's input must be the
-      // shard that was signed. On a mismatch, the batch's pairs decide:
-      // present ⇒ the partition was complete when stage 3 ran, so the
-      // CALLER's input changed — reject; absent ⇒ the partition may be a
-      // PARTIAL left by a kill mid-commit, which nothing downstream
-      // depends on yet — wipe this batch's signature + bucket partitions
-      // and re-sign from the current input
-      val st = existingSigs.get.where(col("batch_id") === batchId)
-      val r = st.agg(StagedRun.fingerprint(col("id"), col("grams")), count(lit(1))).head()
-      val ok = r.getLong(0) == inHash && r.getLong(1) == inCount
-      if (!ok) {
-        val pairsForBatch = ParquetState.readIfAny(spark, pairPath(stateDir),
-          pairStoreSchema).exists(
-          _.where(col("batch_id") === batchId).take(1).nonEmpty)
-        require(!pairsForBatch,
-          s"resuming batch '$batchId' in $stateDir: the signed state " +
-            s"(hash/count ${r.getLong(0)}/${r.getLong(1)}) does not match " +
-            s"this run's input (${inHash}/${inCount}) and the batch's " +
-            "pairs already exist — the input shard changed between the " +
-            "kill and the resume")
-        ParquetState.deletePartition(spark, sigPath(stateDir), batchId)
-        ParquetState.deletePartition(spark, bucketPath(stateDir), batchId)
-      }
-      ok
+    // ---- stage 1: signature append ----
+    // id-uniqueness guard (the pair-op contract): a duplicated id would
+    // silently fan pairs out through the payload re-joins. An ids-only
+    // semi-join under a static plan; a global min is one result job
+    // whether or not an id clashes
+    run.stage("sign: id-clash check")
+    if (committed.nonEmpty) graft.util.Adaptive.withoutAqe(spark) {
+      val clash = batchRows(spark, sigPath(stateDir), sigSchema, committed.keys.toSeq)
+        .select(col("id"))
+        .join(newBase.select(col("id")), Seq("id"), "left_semi")
+        .agg(min(col("id"))).head().get(0)
+      require(clash == null,
+        s"batch '$batchId' carries document id $clash " +
+          s"already present in $stateDir — ids must be globally unique " +
+          "across batches")
     }
-    if (!signedMatches) {
-      // id-uniqueness guard (the pair-op contract): a duplicated id would
-      // silently fan pairs out through the payload re-joins. Re-read the
-      // store here (existingSigs' file listing predates a possible
-      // partial-partition wipe above) and exclude this batch's own rows.
-      // An ids-only semi-join under a static plan; a global min is one
-      // result job whether or not an id clashes
-      run.stage("sign: id-clash check")
-      ParquetState.readIfAny(spark, sigPath(stateDir), sigSchema).foreach { st =>
-        graft.util.Adaptive.withoutAqe(spark) {
-        val clash = st.where(col("batch_id") =!= batchId).select(col("id"))
-          .join(newBase.select(col("id")), Seq("id"), "left_semi")
-          .agg(min(col("id"))).head().get(0)
-        require(clash == null,
-          s"batch '$batchId' carries document id $clash " +
-            s"already present in $stateDir — ids must be globally unique " +
-            "across batches")
-        }
-      }
-      run.stage("sign: append")
-      newBase
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("dedup_params", lit(params))
-        .write.mode(SaveMode.Append).partitionBy("batch_id")
-        .parquet(sigPath(stateDir))
-    }
+    run.stage("sign: append")
+    newBase
+      .withColumn("batch_id", lit(batchId))
+      .withColumn("dedup_params", lit(params))
+      .write.mode(SaveMode.Append).partitionBy("batch_id")
+      .parquet(sigPath(stateDir))
 
     // ---- stage 1b: persist this batch's banded buckets ----
-    // The loop also covers resume (a kill between the signature and
-    // bucket appends leaves this batch signed but unbucketed) and
-    // migration (a store written before bucket tracking backfills every
-    // batch once, from its own signature partition).
-    val store = ParquetState.read(spark, sigPath(stateDir), sigSchema)
-    // presence alone is NOT completeness: a kill mid-commit of a bucket
-    // append can leave a PARTIAL visible partition, whose missing docs
-    // every later NEW × ALL join would silently drop. The banding is
-    // exactly `bands` triples per signed doc, so per-batch triple counts
-    // check completeness; an incomplete partition is rebuilt by dynamic
-    // partition overwrite, idempotent under repeated kills. The signed
-    // counts come from the pre-write control pass: the append above
-    // touched ONLY this batch's partition, which now holds inCount rows
-    val signedCounts: Map[String, Long] =
-      sigStats.groupBy(_._1).map { case (b, rows) => b -> rows.map(_._3).sum } ++
-        Map(batchId -> inCount)
-    run.stage("buckets: counts")
-    val bucketCounts: Map[String, Long] =
-      ParquetState.readIfAny(spark, bucketPath(stateDir), bucketSchema).map { b =>
-        graft.util.Adaptive.withoutAqe(spark) {
-          b.groupBy(col("batch_id")).agg(count(lit(1)).as("n")).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-      }.getOrElse(Map.empty)
-    val incomplete = signedCounts.filter { case (b, n) =>
-      bucketCounts.getOrElse(b, 0L) != n * cfg.bands }
     run.stage("buckets: append")
-    incomplete.keys.toSeq.sorted.foreach { b =>
-      // the delta's own partition bands from the persisted newBase
-      // instead of a parquet read-back: its content is PROVABLY the
-      // stored partition's (either written from newBase above, or
-      // hash+count-verified equal in the resume check — and sig is a
-      // pure function of the gram set the hash covers). Other batches
-      // (resume/migration backfill) keep the store as source of truth.
-      DedupOps.bandSignatures(
-          (if (b == batchId) newBase.select(col("id"), col("sig"))
-           else store.where(col("batch_id") === b)
-             .select(col("id"), col("sig"))),
-          cfg.bands, cfg.rowsPerBand)
-        .withColumn("batch_id", lit(b))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(bucketPath(stateDir))
-    }
+    DedupOps.bandSignatures(newBase.select(col("id"), col("sig")), cfg.bands, cfg.rowsPerBand)
+      .withColumn("batch_id", lit(batchId))
+      .write.mode(SaveMode.Append).partitionBy("batch_id")
+      .parquet(bucketPath(stateDir))
 
     // ---- stage 2: NEW × ALL candidate pairs from the bucket store ----
-    // everything reads back through the persisted state so a resume and
-    // a straight-through run join the exact same rows
-    val buckets = ParquetState.read(spark, bucketPath(stateDir), bucketSchema)
+    val buckets = batchRows(spark, bucketPath(stateDir), bucketSchema, visible)
     val keys = Seq("band", "bucket")
     // only buckets the DELTA touches matter: old×old pairs were settled
     // by earlier batches, so buckets without a new member cannot produce
@@ -405,7 +345,7 @@ object IncrementalDedup {
       cand0.select(col("batch_o")).distinct()
         .collect().map(_.getString(0)).toSet
     } + batchId).toSeq.sorted
-    val gramsSrc = store.where(col("batch_id").isin(touched: _*))
+    val gramsSrc = batchRows(spark, sigPath(stateDir), sigSchema, touched)
       .select(col("id"), col("grams"))
     run.stage("verify: jaccard recheck + pair append")
     // same bounded-skew/static-plan argument as cand0 above
@@ -420,7 +360,7 @@ object IncrementalDedup {
     run.stage("commit marker")
     writeMarker()
 
-    allPairs(spark, stateDir)
+    pairsOf(spark, stateDir, visible)
     } finally newBase.unpersist(false)
   }
 }

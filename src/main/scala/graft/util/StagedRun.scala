@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.StructType
   * `<pipeline>[<id>] <stage>`; its input is identified by [[fingerprint]]
   * and row count; a batch is done iff its commit marker, appended after
   * everything the batch writes, exists ([[markers]], [[appendMarker]],
-  * [[isCommitted]]). The parameters a pipeline records, and the drift it
-  * tolerates, stay in the pipeline. */
+  * [[isCommitted]]). The readers of the dedup and IVF stores see
+  * committed batches only, so what a killed attempt left stays invisible
+  * until the batch's re-run replaces it. The parameters a pipeline
+  * records, and the drift it tolerates, stay in the pipeline. */
 final class StagedRun private (sc: SparkContext, private val name: String) {
 
   /** Call the boundary hook, then label the next jobs `<name> <stage>`. */

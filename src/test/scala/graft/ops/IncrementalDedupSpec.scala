@@ -44,6 +44,37 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     DedupOps.minhashVerifiedPairs(docs, TextOps.tokens(col("text")),
       col("doc_id"), k = 3, bands = 16, rowsPerBand = 4, threshold = 0.8))
 
+  /** Every row of every store under `state`, as sorted text per store. */
+  private def storeRows(state: String): Seq[Seq[String]] =
+    Seq("signatures", "buckets", "pairs", "batches").map(s"$state/" + _).map(dir =>
+      if (graft.util.ParquetState.visibleEntries(spark, dir).isEmpty) Seq.empty
+      else spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq)
+
+  /** Resume batch `batchId` in `state`, where an uncommitted attempt
+    * left rows, from `input`: the run must commit, its pair set must
+    * equal a straight-through build (batch b0, then `input`), and every
+    * store must hold exactly that build's rows — none of the attempt's. */
+  private def assertRedoneFrom(state: String, input: DataFrame, batchId: String): Unit = {
+    val redone = IncrementalDedup.run(spark, input,
+      TextOps.tokens(col("text")), col("doc_id"), state, batchId, cfg)
+    val ref = Files.createTempDirectory("inc_dedup_redo_ref").toString
+    if (batchId != "b0") IncrementalDedup.run(spark, batch(0),
+      TextOps.tokens(col("text")), col("doc_id"), ref, "b0", cfg)
+    val straight = IncrementalDedup.run(spark, input,
+      TextOps.tokens(col("text")), col("doc_id"), ref, batchId, cfg)
+    assert(pairSet(redone) == pairSet(straight))
+    assert(storeRows(state) == storeRows(ref))
+  }
+
+  /** The relative paths of the regular files under `state`. */
+  private def stateFiles(state: String): Set[String] = {
+    val root = java.nio.file.Paths.get(state)
+    val walk = Files.walk(root)
+    try walk.filter(Files.isRegularFile(_)).toArray.map(p =>
+      root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+    finally walk.close()
+  }
+
   test("three growth batches == from-scratch pair set") {
     val state = Files.createTempDirectory("inc_dedup_grow").toString
     var last: DataFrame = null
@@ -181,8 +212,8 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       e.getMessage.contains("pairs already exist"))
 
     // and the exact kill-after-pairs window (complete signatures + pairs
-    // on disk, marker lost) pins the INNER guard: a drifted input must
-    // hit 'pairs already exist', never the partial-partition rebuild
+    // on disk, marker lost) is an uncommitted attempt like any other: a
+    // changed input wipes it and commits the batch from the new input
     val st3 = Files.createTempDirectory("inc_dedup_pairpin").toString
     IncrementalDedup.run(spark, batch(0),
       TextOps.tokens(col("text")), col("doc_id"), st3, "b0", cfg)
@@ -196,11 +227,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.read.parquet(s"$ref/pairs").where(col("batch_id") === "b1")
       .write.mode(SaveMode.Append).partitionBy("batch_id")
       .parquet(s"$st3/pairs")
-    val e2 = intercept[IllegalArgumentException] {
-      IncrementalDedup.run(spark, batch(1).where(pmod(col("doc_id"), lit(2)) === 0),
-        TextOps.tokens(col("text")), col("doc_id"), st3, "b1", cfg)
-    }
-    assert(e2.getMessage.contains("pairs already exist"))
+    assertRedoneFrom(st3, batch(1).where(pmod(col("doc_id"), lit(2)) === 0), "b1")
   }
 
   test("kill after pair append (marker lost): resume double-appends invisibly") {
@@ -251,16 +278,12 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
     }
     assert(e2.getMessage.contains("DIFFERENT input"))
-    // and the same holds for the mid-resume check (marker lost, stored
-    // signatures disagree with the mutated input)
+    // with the marker lost the batch is uncommitted: the mutated input
+    // replaces the stored attempt
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(state), spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$state/batches"), true)
-    val e3 = intercept[IllegalArgumentException] {
-      IncrementalDedup.run(spark, mutated,
-        TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
-    }
-    assert(e3.getMessage.contains("does not match"))
+    assertRedoneFrom(state, mutated, "b0")
   }
 
   test("duplicate ids WITHIN a batch reject (first batch has no store to check against)") {
@@ -432,5 +455,68 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("grams") && e.getMessage.contains(s"$state/signatures"),
       e.getMessage)
     assert(files() == before, "the rejected run changed the state dir")
+  }
+
+  test("a batch killed before its commit stays invisible to later batches, clusters and a retry") {
+    val toks = TextOps.tokens(col("text"))
+    val state = Files.createTempDirectory("inc_dedup_leak").toString
+    IncrementalDedup.run(spark, batch(0), toks, col("doc_id"), state, "b0", cfg)
+    // kill b1 at its candidates boundary: its signatures and buckets are
+    // appended, its pairs and marker are not
+    graft.util.StagedRun.onBoundary.set((_, stage) =>
+      if (stage.startsWith("candidates")) throw new IllegalStateException("killed"))
+    try intercept[IllegalStateException](
+      IncrementalDedup.run(spark, batch(1), toks, col("doc_id"), state, "b1", cfg))
+    finally graft.util.StagedRun.onBoundary.remove()
+    assert(spark.read.parquet(IncrementalDedup.bucketPath(state))
+      .where(col("batch_id") === "b1").count() == batch(1).count() * cfg.bands)
+    IncrementalDedup.run(spark, batch(2), toks, col("doc_id"), state, "b2", cfg)
+
+    val ref = Files.createTempDirectory("inc_dedup_leak_ref").toString
+    Seq(0, 2).foreach(b =>
+      IncrementalDedup.run(spark, batch(b), toks, col("doc_id"), ref, s"b$b", cfg))
+    assert(pairSet(IncrementalDedup.allPairs(spark, state)) ==
+      pairSet(IncrementalDedup.allPairs(spark, ref)))
+    val clustered = IncrementalDedup.clusters(spark, state).select(col("id"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val committedDocs = batch(0).union(batch(2)).select(col("doc_id"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(clustered == committedDocs)
+
+    // b1's documents under a new batch id commit, and the corpus converges
+    val retried = IncrementalDedup.run(spark, batch(1), toks, col("doc_id"), state, "b1retry", cfg)
+    assert(pairSet(retried) == fromScratch)
+    assert(pairSet(IncrementalDedup.allPairs(spark, state)) == fromScratch)
+  }
+
+  test("a store whose committed batches lack a bucket partition rejects before any write") {
+    // the layout written before bucket tracking: no buckets/ store at all
+    val state = Files.createTempDirectory("inc_dedup_nobuckets").toString
+    IncrementalDedup.run(spark, batch(0),
+      TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
+    graft.util.ParquetState.deleteRecursively(new java.io.File(IncrementalDedup.bucketPath(state)))
+    val before = stateFiles(state)
+    val e = intercept[IllegalArgumentException] {
+      IncrementalDedup.run(spark, batch(1),
+        TextOps.tokens(col("text")), col("doc_id"), state, "b1", cfg)
+    }
+    assert(e.getMessage.contains("predates bucket tracking") &&
+      e.getMessage.contains("b0"), e.getMessage)
+    assert(stateFiles(state) == before, "the rejected run changed the state dir")
+  }
+
+  test("a non-first batch runs at most 15 jobs, none of them a repair pass") {
+    val state = Files.createTempDirectory("inc_dedup_jobs").toString
+    IncrementalDedup.run(spark, batch(0),
+      TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
+    val input = batch(1) // the read's schema inference job is the caller's
+    val jobs = graft.JobsOf(spark) {
+      IncrementalDedup.run(spark, input,
+        TextOps.tokens(col("text")), col("doc_id"), state, "b1", cfg)
+    }
+    info(s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+    assert(jobs.size <= 15, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(!jobs.exists(d => d.contains("signature stats") || d.contains("buckets: counts")),
+      jobs.mkString("\n"))
   }
 }
