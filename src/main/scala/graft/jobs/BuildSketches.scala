@@ -4,7 +4,6 @@ import graft.api
 import graft.agg.{SketchBuild, SketchBuildAgg}
 import graft.agg.SketchBuild._
 import graft.util.StagedRun
-import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
@@ -28,10 +27,14 @@ import org.apache.spark.sql.types._
   * `build_params` string, the kind name and its `*_merge_agg` — and name
   * no kind themselves.
   *
-  * Layout: checkpoints written before the flat layout hold one `salt=N`
-  * directory per shard and resume in that layout ([[appendPartials]]).
-  * graft versions that record build parameters but predate the flat
-  * layout reject a flat checkpoint before appending to it ([[FlatTag]]).
+  * Format: the flat layout is the only one `run` reads or writes. Every
+  * partial's `build_params` is the kind's parameter string plus
+  * [[FlatTag]], and its `salt_scheme` is `v2;`-tagged. A checkpoint with
+  * a `salt=N` directory (the layout before flat), a partial with a null
+  * or untagged `build_params` or `salt_scheme`, or a malformed scheme is
+  * rejected before any write, naming the directory: rebuild it from a
+  * fresh dir. graft versions that predate the flat layout reject a flat
+  * checkpoint before appending to it ([[FlatTag]]).
   *
   * Resume: `run` is the [[graft.util.StagedRun]] `build[<kind>]`, which
   * labels its jobs; each shard records its input fingerprint. One driver
@@ -113,28 +116,11 @@ object BuildSketches {
     * discovery would then silently skip. */
   private[jobs] val FlatTag = ";layout=flat"
 
-  /** Append stage-1 partials to the checkpoint whose visible entries
-    * ([[graft.util.ParquetState.visibleEntries]]) were listed before
-    * this append — the one place the checkpoint layout is decided. A
-    * fresh or flat checkpoint gets one part file per write task. A
-    * checkpoint of `salt=N` directories, written before the flat layout,
-    * keeps that layout: partition discovery skips part files that sit
-    * beside partition directories, so a mix of both would drop partials
-    * without a trace — and a mix already on disk is rejected. */
-  private[jobs] def appendPartials(partials: DataFrame, checkpointDir: String,
-      entries: Seq[FileStatus]): Unit = {
-    val saltDirs = entries.count(e =>
-      e.isDirectory && e.getPath.getName.startsWith("salt="))
-    require(saltDirs == 0 || saltDirs == entries.length,
-      s"checkpoint at $checkpointDir mixes salt=N directories with flat " +
-      "part files; Spark would skip the part files when reading it — " +
-      "rebuild from a fresh dir")
-    val writer =
-      if (saltDirs > 0) partials.write.partitionBy("salt")
-      else partials.withColumn("build_params",
-        concat(col("build_params"), lit(FlatTag))).write
-    writer.mode(SaveMode.Append).parquet(checkpointDir)
-  }
+  /** Append stage-1 partials to the checkpoint as flat part files, one
+    * per write task, each partial's `build_params` tagged [[FlatTag]]. */
+  private[jobs] def appendPartials(partials: DataFrame, checkpointDir: String): Unit =
+    partials.withColumn("build_params", concat(col("build_params"), lit(FlatTag)))
+      .write.mode(SaveMode.Append).parquet(checkpointDir)
 
   /** Per-source shard counts: the total shard budget (cfg.salts x
     * #sources) split proportionally to observed per-source row counts,
@@ -170,30 +156,36 @@ object BuildSketches {
     * under the CHECKPOINT's scheme rather than a freshly derived one. */
   // source names come straight from data (adversarial by policy): a name
   // containing the scheme's own delimiters (',' '=' ';') would corrupt
-  // the encoding or crash the parse — percent-encode each name. Names
-  // without special characters encode to themselves, so schemes recorded
-  // by earlier builds keep parsing identically.
+  // the encoding or crash the parse — percent-encode each name. "v2;"
+  // tags this encoding.
   private def encName(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
-  private def decName(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
 
-  // "v2;" tags percent-encoded schemes. Untagged (legacy) schemes were
-  // written with raw names, so decoding them would corrupt any name that
-  // legitimately contains '%' or '+' — legacy parses raw, v2 decodes.
   private[jobs] def schemeString(map: Map[String, Int], default: Int): String =
     map.toSeq.sortBy(_._1).map { case (s, n) => s"${encName(s)}=$n" }
       .mkString(s"v2;default=$default;", ",", "")
 
-  private[jobs] def parseScheme(s: String): (Map[String, Int], Int) = {
-    val (tagged, body) =
-      if (s.startsWith("v2;")) (true, s.substring(3)) else (false, s)
-    val Array(head, rest @ _*) = body.split(";", 2)
-    val default = head.stripPrefix("default=").toInt
-    val dec: String => String = if (tagged) decName else identity
+  /** Decode the scheme the checkpoint at `checkpointDir` recorded. The
+    * string comes from disk: a null, untagged (pre-v2, raw names) or
+    * malformed one, or a shard count below 1 (a `pmod` divisor), throws
+    * IllegalArgumentException naming the directory. */
+  private[jobs] def parseScheme(s: String, checkpointDir: String): (Map[String, Int], Int) = {
+    def reject(why: String): Nothing = throw new IllegalArgumentException(
+      s"checkpoint at $checkpointDir records salt scheme '$s', $why — " +
+      "rebuild from a fresh dir")
+    if (s == null || !s.startsWith("v2;"))
+      reject("written before v2 salt-scheme tracking")
+    def count(n: String): Int = n.toIntOption.filter(_ >= 1)
+      .getOrElse(reject(s"whose shard count '$n' is not a positive integer"))
+    def decode(name: String): String =
+      try java.net.URLDecoder.decode(name, "UTF-8")
+      catch { case _: IllegalArgumentException => reject(s"whose name '$name' is not percent-encoded") }
+    val Array(head, rest @ _*) = s.substring(3).split(";", 2)
+    val default = count(head.stripPrefix("default="))
     val map = rest.headOption.filter(_.nonEmpty).map(_.split(",").map { kv =>
       val i = kv.lastIndexOf('=')
-      dec(kv.substring(0, i)) -> kv.substring(i + 1).toInt
+      if (i < 0) reject(s"whose entry '$kv' has no '='")
+      decode(kv.substring(0, i)) -> count(kv.substring(i + 1))
     }.toMap).getOrElse(Map.empty)
     (map, default)
   }
@@ -225,8 +217,7 @@ object BuildSketches {
     StructField("input_hash", LongType)))
 
   /** The per-partial lineage a resume checks before it appends. A column
-    * an older checkpoint lacks reads as null, and `run` judges each null
-    * per partial, not per sampled file. */
+    * an older checkpoint lacks reads as null, which `run` rejects. */
   private[jobs] val ResumeSchema: StructType = StructType(Seq(
     StructField("source", StringType),
     StructField("salt", IntegerType),
@@ -305,9 +296,14 @@ object BuildSketches {
     // the advertised killed-job resume into a parquet read with zero
     // data files instead of a fresh start
     val entries = graft.util.ParquetState.visibleEntries(spark, checkpointDir)
+    // the layout before flat: rejected from the listing, before any job
+    val saltDirs = entries.map(_.getPath.getName).filter(_.startsWith("salt="))
+    require(saltDirs.isEmpty,
+      s"checkpoint at $checkpointDir holds salt=N directories " +
+      s"(${saltDirs.sorted.take(3).mkString(", ")}), the layout before flat " +
+      "checkpoints, which this version does not read — rebuild from a fresh dir")
     // ONE driver collect of the checkpoint's lineage serves every resume
-    // check and the done-set; the columns are read by name, because a
-    // salt=N checkpoint lists its partition column last
+    // check and the done-set
     run.stage("resume checks")
     val priorLineage: Option[Array[Row]] = Option.when(entries.nonEmpty)(
       spark.read.schema(ResumeSchema).parquet(checkpointDir).collect())
@@ -322,19 +318,14 @@ object BuildSketches {
     // config can change) would silently drop/double-count rows against
     // the recorded (source, salt) done-set. The scheme travels inside the
     // checkpoint itself; a partial without it is rejected loudly. A
-    // checkpoint of zero partials (a flat append of an empty input leaves
+    // checkpoint of zero partials (an append of an empty input leaves
     // one schema-only part file) constrains nothing.
     val scheme: (Map[String, Int], Int) = priorLineage match {
       case None => derivedScheme()
       case Some(rows) =>
         def recorded(column: String): Array[String] =
           rows.map(_.getAs[String](column)).distinct
-        if (rows.exists(_.getAs[String]("salt_scheme") == null))
-          throw new IllegalStateException(
-            s"checkpoint at $checkpointDir predates salt-scheme tracking — " +
-            "its shard assignment cannot be reproduced safely; rebuild it " +
-            "from scratch (delete the checkpoint dir)")
-        // the checkpoint's KIND must match too: resuming a cqf build as
+        // the checkpoint's KIND must match: resuming a cqf build as
         // hll would append incompatible partials beside the old ones and
         // stage 2 would feed cqf bytes into hll_merge_agg
         val kinds = recorded("sketch_kind")
@@ -343,25 +334,20 @@ object BuildSketches {
           s"'${kinds.mkString(",")}' but this run builds '${cfg.kind}' — " +
           "use a fresh checkpoint dir per kind")
         // same-kind resumes with drifted parameters are rejected BEFORE
-        // any append. A partial written before parameter tracking has a
-        // NULL build_params — a legacy checkpoint (or one already resumed
-        // once by newer code, mixing tagged and untagged partials) stays
-        // resumable as long as every TAGGED partial matches this run.
-        val params = recorded("build_params").filter(_ != null)
-          .map(_.stripSuffix(FlatTag)).distinct
-        require(params.isEmpty || params.sameElements(Array(build.paramString)),
+        // any append, and so is a partial whose parameters are null or
+        // untagged (written before parameter tracking or the flat layout)
+        val params = recorded("build_params")
+        val expected = build.paramString + FlatTag
+        require(params.forall(_ == expected),
           s"checkpoint at $checkpointDir was built with parameters " +
-          s"'${params.mkString(",")}' but this run uses " +
-          s"'${build.paramString}' — appending would poison the " +
-          "checkpoint with unmergeable partials; resume with the " +
-          "original config or rebuild from a fresh dir")
-        // compared parsed, not as strings: a resume of a pre-v2 checkpoint
-        // appends the v2 encoding of the same scheme beside the untagged one
-        val schemeStrings = recorded("salt_scheme")
-        val schemes = schemeStrings.map(parseScheme).distinct
+          s"'${params.mkString(",")}' but this run writes '$expected' — " +
+          "appending would poison the checkpoint with unmergeable partials; " +
+          "resume with the original config or rebuild from a fresh dir")
+        val schemes = recorded("salt_scheme")
         require(schemes.length <= 1,
-          s"checkpoint at $checkpointDir mixes salt schemes: ${schemeStrings.mkString(" | ")}")
-        schemes.headOption.getOrElse(derivedScheme())
+          s"checkpoint at $checkpointDir mixes salt schemes: ${schemes.mkString(" | ")} — " +
+          "rebuild from a fresh dir")
+        schemes.headOption.map(parseScheme(_, checkpointDir)).getOrElse(derivedScheme())
     }
     val salt = saltExprFor(scheme._1, scheme._2)
     val remaining = priorLineage match {
@@ -382,13 +368,12 @@ object BuildSketches {
     // writes no partial rows (at most a schema-only part file, which a
     // resume reads as a checkpoint of zero partials)
     run.stage("stage 1")
-    appendPartials(buildPartials(remaining, cfg, Some(scheme)), checkpointDir, entries)
+    appendPartials(buildPartials(remaining, cfg, Some(scheme)), checkpointDir)
 
     // the read-back always finds a data file, even after a zero-row build
-    // on a fresh dir: a flat append commits at least one (schema-only)
-    // part file, and a salt=N checkpoint holds data by construction. The
-    // file list is fixed here, so the lineage check and stage 2 see the
-    // same partials even if another run appends in between.
+    // on a fresh dir: an append commits at least one (schema-only) part
+    // file. The file list is fixed here, so the lineage check and stage 2
+    // see the same partials even if another run appends in between.
     run.stage("lineage")
     val partials = graft.util.ParquetState.read(spark, checkpointDir, Stage2Schema)
     // Concurrent resumes (operator retry, overlapping cron) can append

@@ -75,7 +75,12 @@ import org.apache.spark.sql.types._
   * partial partitions in any store — is invisible, and a run of a batch
   * without a marker first deletes that batch's partition in all three
   * stores, then redoes the batch from the caller's input (which may
-  * differ from the killed attempt's). Beyond that:
+  * differ from the killed attempt's). An uncommitted batch id that is
+  * never run again keeps its partitions on disk: readers never see
+  * them, and the remedy is to re-run that id or to delete its
+  * `batch_id=<id>` directories. A run never deletes another id's
+  * partitions, since a concurrent run's in-flight batch would be lost.
+  * Beyond that:
   *  - params drift (bands, k, threshold...) against the committed
   *    markers rejects before any write — mixed-parameter signatures are
   *    not comparable;

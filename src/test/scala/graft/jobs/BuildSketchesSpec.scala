@@ -42,10 +42,9 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     Cqf.deserialize(bytes).iterator.toList
 
   /** Append partials exactly as `run` does: through the product's append
-    * function, which picks the checkpoint layout from the listing. */
+    * function, which tags `build_params` with the flat layout. */
   private def appendAsRun(partials: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    BuildSketches.appendPartials(partials, dir,
-      graft.util.ParquetState.visibleEntries(spark, dir))
+    BuildSketches.appendPartials(partials, dir)
 
   /** Visible entry names of a checkpoint dir (hidden _SUCCESS/.crc excluded). */
   private def visibleNames(dir: String): Seq[String] =
@@ -158,8 +157,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prefix = input
       .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
       .where(col("salt") === 0).drop("salt")
-    BuildSketches.buildPartials(prefix, cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dir)
+    appendAsRun(BuildSketches.buildPartials(prefix, cfg, Some(scheme)), dir)
     // drift: drop most of the head source's rows — a re-derived scheme
     // would assign it fewer salts and misalign with the done-set
     val drifted = input.where(col("source") =!= TokenGen.Sources.head ||
@@ -177,13 +175,12 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a checkpoint without the scheme column must be rejected loudly
     val dirOld = Files.createTempDirectory("graft_ckpt_old").toString
-    BuildSketches.buildPartials(prefix, cfg, Some(scheme))
-      .drop("salt_scheme")
-      .write.mode("append").partitionBy("salt").parquet(dirOld)
-    val ex = intercept[IllegalStateException] {
+    appendAsRun(BuildSketches.buildPartials(prefix, cfg, Some(scheme))
+      .drop("salt_scheme"), dirOld)
+    val ex = intercept[IllegalArgumentException] {
       BuildSketches.run(spark, input, dirOld, cfg).collect()
     }
-    assert(ex.getMessage.contains("salt-scheme"))
+    assert(ex.getMessage.contains("salt-scheme") && ex.getMessage.contains(dirOld), ex.getMessage)
   }
 
   test("lineage rows carry exact per-shard counts and input hashes") {
@@ -274,8 +271,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prefix = input
       .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
       .where(col("salt") < 2).drop("salt")
-    BuildSketches.buildPartials(prefix, cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(part)
+    appendAsRun(BuildSketches.buildPartials(prefix, cfg, Some(scheme)), part)
     val resumed = BuildSketches.run(spark, input, part, cfg)
       .select(col("source"), col("sketch_bytes"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
@@ -300,22 +296,36 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("salt scheme survives adversarial source names (delimiters)") {
     val hostile = Map("x=2,y" -> 7, "a,b" -> 3, "plain" -> 4)
     val enc = BuildSketches.schemeString(hostile, 16)
-    assert(BuildSketches.parseScheme(enc) == ((hostile, 16)))
+    assert(BuildSketches.parseScheme(enc, "ck") == ((hostile, 16)))
     // v2-tagged encoding; sane names still encode to themselves
     assert(BuildSketches.schemeString(Map("web" -> 64, "news" -> 8), 16)
       == "v2;default=16;news=8,web=64")
   }
 
-  test("salt scheme: percent/plus names round-trip; legacy untagged parses raw") {
+  test("salt scheme: percent/plus names round-trip") {
     // names with URL-special bytes survive the v2 percent-encoding
     val tricky = Map("pct%20ok" -> 5, "a+b" -> 3)
     val enc = BuildSketches.schemeString(tricky, 8)
-    assert(BuildSketches.parseScheme(enc) == ((tricky, 8)))
-    // a checkpoint written by pre-v2 code recorded names RAW — they must
-    // not be URL-decoded on resume ('%20'/'+' stay literal)
-    assert(BuildSketches.parseScheme("default=16;a+b=3,pct%20ok=5")
-      == ((Map("pct%20ok" -> 5, "a+b" -> 3), 16)))
-    assert(BuildSketches.parseScheme("default=4") == ((Map.empty[String, Int], 4)))
+    assert(BuildSketches.parseScheme(enc, "ck") == ((tricky, 8)))
+    assert(BuildSketches.parseScheme("v2;default=4", "ck") == ((Map.empty[String, Int], 4)))
+  }
+
+  test("a null, untagged or malformed salt scheme rejects, naming the checkpoint") {
+    // the scheme string comes from parquet on disk
+    for (bad <- Seq(
+        null,                       // written before scheme tracking
+        "default=16;a+b=3",         // pre-v2: raw names, untagged
+        "v2;default=4;abc",         // an entry without '='
+        "v2;default=4;web=x",       // a count that is no integer
+        "v2;default=4;web=0",       // a count < 1: a pmod divisor of 0
+        "v2;default=0",
+        "v2;default=4;%zz=3")) {    // a name that is not percent-encoded
+      val e = intercept[IllegalArgumentException] {
+        BuildSketches.parseScheme(bad, "/ckpt/dir")
+      }
+      assert(e.getMessage.contains("/ckpt/dir") &&
+        e.getMessage.contains("rebuild from a fresh dir"), e.getMessage)
+    }
   }
 
   test("empty input on a fresh checkpoint returns an empty result, not a crash") {
@@ -353,50 +363,54 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sameElements(Array(BuildSketches.buildFor(cfg).paramString + BuildSketches.FlatTag)))
   }
 
-  test("a legacy salt=N checkpoint resumes to the same answer and keeps its layout") {
-    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
-    val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
-    val full = perSource(BuildSketches.run(spark, input,
-      Files.createTempDirectory("graft_ckpt_new").toString, cfg))
-    // the layout every version before flat checkpoints wrote, killed
-    // after salts 0-2
-    val dir = Files.createTempDirectory("graft_ckpt_legacy").toString
+  /** Salts 0 and 1 of `input`'s partials, sharded under its scheme. */
+  private def firstShards(input: org.apache.spark.sql.DataFrame,
+      cfg: BuildSketches.Config): org.apache.spark.sql.DataFrame = {
     val scheme = BuildSketches.deriveScheme(input, cfg)
     BuildSketches.buildPartials(input
-        .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
-        .where(col("salt") < 3).drop("salt"), cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dir)
-    assert(visibleNames(dir).sorted == Seq("salt=0", "salt=1", "salt=2"))
-    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
-    val names = visibleNames(dir)
-    assert(names.length > 3 && names.forall(_.startsWith("salt=")),
-      s"legacy checkpoint lost its layout: $names")
-    // its partials keep the untagged parameters older versions expect
-    assert(spark.read.parquet(dir).select(col("build_params")).distinct()
-      .collect().map(_.getString(0)).sameElements(Array(BuildSketches.buildFor(cfg).paramString)))
-    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+      .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
+      .where(col("salt") < 2).drop("salt"), cfg, Some(scheme))
   }
 
-  test("a pre-v2 salt scheme checkpoint resumes twice to the uninterrupted answer") {
-    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
+  /** Every file under a checkpoint dir, as paths relative to it, with
+    * its bytes. */
+  private def filesUnder(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.filter(Files.isRegularFile(_)).toArray.map { f =>
+      val p = f.asInstanceOf[java.nio.file.Path]
+      root.relativize(p).toString -> Files.readAllBytes(p).toSeq
+    }.toMap
+    finally walk.close()
+  }
+
+  /** Resume `dir` with `cfg`, which must reject and leave every file of
+    * the checkpoint byte-identical: the message and the jobs it started. */
+  private def rejectedResume(input: org.apache.spark.sql.DataFrame, dir: String,
+      cfg: BuildSketches.Config): (String, Seq[String]) = {
+    val files = filesUnder(dir)
+    var message = ""
+    val jobs = jobsOf {
+      message = intercept[IllegalArgumentException] {
+        BuildSketches.run(spark, input, dir, cfg)
+      }.getMessage
+    }
+    assert(filesUnder(dir) == files, s"the rejected resume changed $dir")
+    (message, jobs)
+  }
+
+  test("a salt=N checkpoint rejects before any Spark job and leaves its files unchanged") {
+    // the layout before flat checkpoints: one directory per shard
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
     val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
-    val full = perSource(BuildSketches.run(spark, input,
-      Files.createTempDirectory("graft_ckpt_v2ref").toString, cfg))
-    // salts 0-1 of a build by a version that recorded the scheme untagged
-    // with raw names; the first resume appends the v2 encoding beside it
-    val dir = Files.createTempDirectory("graft_ckpt_prev2").toString
-    val (map, default) = BuildSketches.deriveScheme(input, cfg)
-    val untagged = map.toSeq.sortBy(_._1).map { case (s, n) => s"$s=$n" }
-      .mkString(s"default=$default;", ",", "")
-    assert(BuildSketches.parseScheme(untagged) == ((map, default)))
-    BuildSketches.buildPartials(input
-        .withColumn("salt", BuildSketches.saltExprFor(map, default))
-        .where(col("salt") < 2).drop("salt"), cfg, Some((map, default)))
-      .withColumn("salt_scheme", lit(untagged))
-      .write.mode("append").partitionBy("salt").parquet(dir)
-    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
-    assert(spark.read.parquet(dir).select(col("salt_scheme")).distinct().count() == 2)
-    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
+    val dir = Files.createTempDirectory("graft_ckpt_saltdirs").toString
+    firstShards(input, cfg).write.mode("append").partitionBy("salt").parquet(dir)
+    assert(visibleNames(dir).sorted == Seq("salt=0", "salt=1"))
+    val (message, jobs) = rejectedResume(input, dir, cfg)
+    assert(message.contains("salt=N directories") && message.contains(dir) &&
+      message.contains("rebuild from a fresh dir"), message)
+    assert(jobs.isEmpty, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    input.unpersist()
   }
 
   test("a checkpoint mixing flat part files and salt=N directories rejects") {
@@ -406,17 +420,40 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val input = TokenGen.generate(spark, 300, vocab = 500).cache()
     val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
     val dir = Files.createTempDirectory("graft_ckpt_mixed").toString
-    val scheme = BuildSketches.deriveScheme(input, cfg)
-    val salted = input.withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
-    appendAsRun(BuildSketches.buildPartials(
-      salted.where(col("salt") === 0).drop("salt"), cfg, Some(scheme)), dir)
-    BuildSketches.buildPartials(
-        salted.where(col("salt") === 1).drop("salt"), cfg, Some(scheme))
-      .write.mode("append").partitionBy("salt").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      BuildSketches.run(spark, input, dir, cfg).collect()
+    val shards = firstShards(input, cfg)
+    appendAsRun(shards.where(col("salt") === 0), dir)
+    shards.where(col("salt") === 1).write.mode("append").partitionBy("salt").parquet(dir)
+    val (message, jobs) = rejectedResume(input, dir, cfg)
+    assert(message.contains("salt=N directories"), message)
+    assert(jobs.isEmpty, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    input.unpersist()
+  }
+
+  test("a flat checkpoint with a null or untagged build_params or salt_scheme rejects before stage 1") {
+    val input = TokenGen.generate(spark, 300, vocab = 500).cache()
+    val cfg = BuildSketches.Config(kind = "cqf", salts = 4, quotientBits = 10)
+    val shards = firstShards(input, cfg)
+    val untagged = col("salt_scheme").substr(lit(4), lit(Int.MaxValue))
+    val fixtures = Seq[(String, String => Unit, String)](
+      // written before parameter tracking, and before the flat layout
+      ("null build_params", shards.drop("build_params").write.parquet(_),
+        "parameters 'null'"),
+      ("untagged build_params", shards.write.parquet(_),
+        s"parameters '${BuildSketches.buildFor(cfg).paramString}'"),
+      // written before scheme tracking, and before the v2 encoding
+      ("null salt_scheme", appendAsRun(shards.drop("salt_scheme"), _),
+        "salt scheme 'null'"),
+      ("untagged salt_scheme", appendAsRun(shards.withColumn("salt_scheme", untagged), _),
+        "salt scheme 'default="))
+    for ((name, write, expected) <- fixtures) {
+      val dir = Files.createTempDirectory("graft_ckpt_untagged").toString + "/ck"
+      write(dir)
+      val (message, jobs) = rejectedResume(input, dir, cfg)
+      assert(message.contains(expected) && message.contains(dir) &&
+        message.contains("rebuild from a fresh dir"), s"$name: $message")
+      assert(jobs == Seq("build[cqf] resume checks"), s"$name: ${jobs.mkString(" | ")}")
     }
-    assert(e.getMessage.contains("mixes salt=N directories"), e.getMessage)
+    input.unpersist()
   }
 
   test("a checkpoint dir holding only hidden entries is a fresh start, not a broken resume") {
@@ -448,21 +485,13 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `(salt, build_params)` of every partial, read under a declared
-    * schema: an inferred read of a mixed legacy checkpoint may sample a
-    * file without `build_params` and drop the column. */
+    * schema: an inferred read of a checkpoint that mixes partials with
+    * and without `build_params` may sample a file without it and drop
+    * the column. */
   private def saltParams(dir: String): Seq[(Int, Option[String])] =
     spark.read.schema("salt INT, build_params STRING").parquet(dir)
       .select(col("salt"), col("build_params")).collect()
       .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq.sorted
-
-  /** Every file under a checkpoint dir, as paths relative to it. */
-  private def filesUnder(dir: String): Set[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    val walk = Files.walk(root)
-    try walk.filter(Files.isRegularFile(_)).toArray.map(p =>
-      root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
-    finally walk.close()
-  }
 
   test("drifted parameters reject on a checkpoint whose oldest partial predates build_params") {
     val input = TokenGen.generate(spark, 300, vocab = 500).cache()
@@ -473,11 +502,12 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     def shard(s: Int) =
       BuildSketches.buildPartials(salted.where(col("salt") === s).drop("salt"), cfg, Some(scheme))
     // salt 0 as a version predating build_params wrote it, then salt 1
-    // as a legacy-layout resume appends it: untagged `hll;p=12`
-    shard(0).drop("build_params").write.mode("append").partitionBy("salt").parquet(dir)
+    // as run appends it
+    shard(0).drop("build_params").write.mode("append").parquet(dir)
     appendAsRun(shard(1), dir)
     val params = saltParams(dir)
-    assert(params.map(_._2).toSet == Set(None, Some(BuildSketches.buildFor(cfg).paramString)), params)
+    assert(params.map(_._2).toSet ==
+      Set(None, Some(BuildSketches.buildFor(cfg).paramString + BuildSketches.FlatTag)), params)
     val files = filesUnder(dir)
     val e = intercept[IllegalArgumentException] {
       BuildSketches.run(spark, input, dir, cfg.copy(hllP = 14))
@@ -485,23 +515,6 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("parameters"), e.getMessage)
     assert(filesUnder(dir) == files, "the rejected resume appended to the checkpoint")
     assert(saltParams(dir) == params)
-    input.unpersist()
-  }
-
-  test("a checkpoint whose partials all predate build_params resumes to the same answer") {
-    val input = TokenGen.generate(spark, 1000, vocab = 2000).cache()
-    val cfg = BuildSketches.Config(kind = "cqf", salts = 8, quotientBits = 10)
-    val full = perSource(BuildSketches.run(spark, input,
-      Files.createTempDirectory("graft_ckpt_noparams_ref").toString, cfg))
-    // salts 0-2 of a build by a version that recorded no build parameters
-    val dir = Files.createTempDirectory("graft_ckpt_noparams").toString
-    val scheme = BuildSketches.deriveScheme(input, cfg)
-    BuildSketches.buildPartials(input
-        .withColumn("salt", BuildSketches.saltExprFor(scheme._1, scheme._2))
-        .where(col("salt") < 3).drop("salt"), cfg, Some(scheme))
-      .drop("build_params")
-      .write.mode("append").partitionBy("salt").parquet(dir)
-    assert(perSource(BuildSketches.run(spark, input, dir, cfg)) == full)
     input.unpersist()
   }
 
@@ -653,7 +666,7 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     input.unpersist()
   }
 
-  test("a checkpoint lacking a declared column rejects before stage 2; salt=N dirs pass") {
+  test("a checkpoint lacking a declared column rejects before stage 2; partition dirs count as present") {
     val input = TokenGen.generate(spark, 300, vocab = 500).cache()
     val cfg = BuildSketches.Config(kind = "cqf", salts = 2, quotientBits = 10)
     // a complete checkpoint whose partials lack input_hash: the declared
@@ -665,11 +678,14 @@ class BuildSketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
       BuildSketches.run(spark, input, dir, cfg)
     }
     assert(e.getMessage.contains("input_hash") && e.getMessage.contains(dir), e.getMessage)
-    // a partition column present only as salt=N directories counts
-    val legacy = Files.createTempDirectory("graft_ckpt_saltdirs").toString
-    BuildSketches.buildPartials(input, cfg).write.partitionBy("salt").parquet(legacy + "/ck")
-    val read = graft.util.ParquetState.read(spark, legacy + "/ck", BuildSketches.Stage2Schema)
-    assert(read.select(col("salt")).distinct().count() > 1)
+    // a column present only as name=value partition directories counts,
+    // as in the batch_id= stores of IncrementalDedup and the IVF index
+    val store = Files.createTempDirectory("graft_state_batches").toString + "/st"
+    BuildSketches.buildPartials(input, cfg).withColumn("batch_id", lit("b0"))
+      .write.partitionBy("batch_id").parquet(store)
+    val read = graft.util.ParquetState.read(spark, store,
+      BuildSketches.Stage2Schema.add("batch_id", "string"))
+    assert(read.select(col("batch_id")).distinct().collect().map(_.getString(0)).toSeq == Seq("b0"))
     assert(read.where(col("input_hash").isNull).count() == 0)
     input.unpersist()
   }

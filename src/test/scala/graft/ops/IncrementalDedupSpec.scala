@@ -230,7 +230,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertRedoneFrom(st3, batch(1).where(pmod(col("doc_id"), lit(2)) === 0), "b1")
   }
 
-  test("kill after pair append (marker lost): resume double-appends invisibly") {
+  test("kill after pair append (marker lost): resume wipes and redoes the batch") {
     val state = Files.createTempDirectory("inc_dedup_pair").toString
     val done = IncrementalDedup.run(spark, batch(0),
       TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
@@ -241,10 +241,14 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       new java.net.URI(state), spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$state/batches"), true)
 
+    val pairRows = spark.read.parquet(s"$state/pairs").where(col("batch_id") === "b0").count()
+    assert(pairRows > 0, "batch b0 must hold pairs for this check")
     val resumed = IncrementalDedup.run(spark, batch(0),
       TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg)
-    // the raw pair table now holds the batch twice; the read contract
-    // collapses it and the answer is byte-identical
+    // the resume deleted the uncommitted batch's partitions before
+    // redoing it: the raw pair table holds b0's rows once
+    val raw = spark.read.parquet(s"$state/pairs").where(col("batch_id") === "b0")
+    assert(raw.count() == pairRows && raw.distinct().count() == pairRows)
     assert(pairSet(resumed) == expected)
     assert(pairSet(IncrementalDedup.allPairs(spark, state)) == expected)
   }
