@@ -602,7 +602,7 @@ object SparkEntry {
         "graft_stream_sessions", "append")
     }),
 
-    "streaming_dedup_incremental" -> ((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
+    "streaming_dedup_incremental" -> ((s, dir) => {
       // streaming front end for the growing-corpus dedup (9th streaming
       // shape): Structured Streaming drives IncrementalDedup from
       // foreachBatch with the epoch id as the batch id, so the engine's
@@ -1447,7 +1447,7 @@ object SparkEntry {
         col("doc_id"), k = 3, bands = 16, rowsPerBand = 4, threshold = 0.8)
     }),
 
-    eager("dedup_incremental")((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
+    eager("dedup_incremental")((s, dir) => {
       // the GROWING-corpus near-dup pipeline: three ingest batches
       // (doc_id mod 3) into a fresh signature/pair store, each paying
       // only its NEW x ALL LSH join — old x old pairs are never
@@ -1544,7 +1544,7 @@ object SparkEntry {
         .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"))
     }),
 
-    eager("ann_ivf_persisted")((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
+    eager("ann_ivf_persisted")((s, dir) => {
       // build-once / serve-many IVF: the index persists (codebook +
       // cell-PARTITIONED assignments + commit marker — buildIvfIndex),
       // then serving reads it back and probes every cell (nProbe =
@@ -1563,7 +1563,7 @@ object SparkEntry {
       collectThenDelete(servedTopK(s, idx, emb), idx)
     }),
 
-    eager("ann_ivf_incremental")((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
+    eager("ann_ivf_incremental")((s, dir) => {
       // the GROWING-corpus similarity index: base build on a third of
       // the vectors, then two appendIvfBatch deltas quantized against
       // the stored codebook (no k-means re-pay, batch-lineage commit
@@ -1584,7 +1584,7 @@ object SparkEntry {
       collectThenDelete(servedTopK(s, idx, emb), idx)
     }),
 
-    "streaming_ann_ingest" -> ((s, dir) => graft.util.Adaptive.withCoalescedShuffles(s) {
+    "streaming_ann_ingest" -> ((s, dir) => {
       // 10th streaming shape: the growing similarity index fed by the
       // engine — foreachBatch drives appendIvfBatch with epoch-keyed
       // batch ids over a committed base build (the streaming analog of

@@ -2,9 +2,10 @@ package graft.ops
 
 import graft.agg.VecMeanAgg
 import graft.functions.{CosineSim, NearestCentroid, VecLshBucket}
-import graft.util.{ParquetState, StagedRun}
+import graft.util.{Adaptive, ParquetState, StagedRun}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -85,13 +86,12 @@ object AnnOps {
     * vectors) + a partial/final [[VecMeanAgg]] (the shuffle carries
     * nCells x (dim+1) doubles per partition, not the corpus) + a
     * driver-side collect of the nCells new centroids. Cells that lose all
-    * members keep their previous centroid. */
+    * members keep their previous centroid. Plans with AQE off, as the IVF
+    * index runs do ([[buildIvfIndex]] has the rationale): the sample and
+    * the mean aggregations shuffle KB-sized partials and join nothing. */
   def ivfCodebook(corpus: DataFrame, vec: Column, id: Column,
       nCells: Int, kmeansIters: Int = 2): Array[Array[Double]] =
-    // the sample + per-iteration mean aggregations shuffle nCells x
-    // (dim+1) doubles — KB-sized at any corpus scale, no joins: AQE off
-    // removes the re-planning job per k-means round (guide §2.2)
-    graft.util.Adaptive.withoutAqe(corpus.sparkSession) {
+    Adaptive.withoutAqe(corpus.sparkSession) {
       ivfCodebookImpl(corpus, vec, id, nCells, kmeansIters)
     }
 
@@ -263,19 +263,23 @@ object AnnOps {
     * and rejects on drift (a stale index silently serving a changed
     * corpus). An uncommitted dir (killed build) reuses a complete stored
     * codebook of the same params and corpus — the k-means passes are the
-    * expensive stage — and re-derives the assignments by overwrite. */
+    * expensive stage — and re-derives the assignments by overwrite.
+    *
+    * The build, like [[appendIvfBatch]], plans with AQE off
+    * ([[graft.util.Adaptive.withoutAqe]]), its input re-bound to `spark`
+    * so a `foreachBatch` micro-batch plans the same way: every action is
+    * control-sized at any corpus scale — the fingerprint, the codebook
+    * sample, k-means partials of nCells x (dim+1) doubles, an ids-only
+    * id-clash semi-join, commit-marker I/O — and none holds a join whose
+    * strategy AQE could improve, so adaptive execution only adds a
+    * re-planning job per exchange. */
   def buildIvfIndex(spark: SparkSession,
       corpus: DataFrame, corpusId: Column, corpusVec: Column,
       indexDir: String, nCells: Int = 16, kmeansIters: Int = 2): Unit =
-    // AQE off for the whole build (guide §2.2/§1.2 job diet): every
-    // action here is control-sized at ANY corpus scale — fingerprint
-    // agg, codebook sample, k-means partials of nCells x (dim+1)
-    // doubles, commit-marker I/O — and none contains a join whose
-    // strategy AQE could improve, so adaptive execution only adds a
-    // re-planning job per exchange
-    StagedRun(spark, "ivf", BaseBatch) { run => graft.util.Adaptive.withoutAqe(spark) {
+    StagedRun(spark, "ivf", BaseBatch) { run => Adaptive.withoutAqe(spark) {
+    val bound = GraftBridge.bind(spark, corpus)
     val params = ivfParamString(nCells, kmeansIters)
-    val c = nonNullVecs(corpus.select(corpusId.as("cid"), corpusVec.as("cv")), "cv")
+    val c = nonNullVecs(bound.select(corpusId.as("cid"), corpusVec.as("cv")), "cv")
     run.stage("fingerprint")
     val fp = c.agg(StagedRun.fingerprint(col("cid"), col("cv")).as("h"),
       count(lit(1)).as("n")).head()
@@ -316,7 +320,7 @@ object AnnOps {
         }
         val codebook: Array[Array[Double]] = stored.getOrElse {
           run.stage("codebook: k-means")
-          val fresh = ivfCodebook(corpus, corpusVec, corpusId, nCells, kmeansIters)
+          val fresh = ivfCodebook(bound, corpusVec, corpusId, nCells, kmeansIters)
           val rows = fresh.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
           spark.createDataFrame(rows).toDF("cell", "centroid")
             .withColumn("ann_params", lit(params))
@@ -369,19 +373,18 @@ object AnnOps {
     * them, and serving reads committed batches only, so a kill leaves an
     * invisible partition that the re-run replaces. Params come from the
     * stored meta, so the caller cannot drift them; delta ids must be new
-    * across the index. */
+    * across the index. Plans with AQE off, as [[buildIvfIndex]] does. */
   def appendIvfBatch(spark: SparkSession,
       delta: DataFrame, deltaId: Column, deltaVec: Column,
       indexDir: String, batchId: String): Unit =
-    // AQE off — same rationale as buildIvfIndex (the id-clash semi-join
-    // is an ids-only column join whose static plan is fine at scale)
-    StagedRun(spark, "ivf", batchId) { run => graft.util.Adaptive.withoutAqe(spark) {
+    StagedRun(spark, "ivf", batchId) { run => Adaptive.withoutAqe(spark) {
     StagedRun.requireBatchId(batchId, BaseBatch)
     run.stage("control: commit markers")
     val committed = requireIndex(spark, indexDir)
     val params = committed(BaseBatch).getAs[String]("ann_params")
 
-    val d = nonNullVecs(delta.select(deltaId.as("cid"), deltaVec.as("cv")), "cv")
+    val d = nonNullVecs(GraftBridge.bind(spark, delta)
+      .select(deltaId.as("cid"), deltaVec.as("cv")), "cv")
     run.stage("fingerprint")
     val fp = d.agg(StagedRun.fingerprint(col("cid"), col("cv")).as("h"),
       count(lit(1)).as("n"), countDistinct(col("cid")).as("nd")).head()
@@ -451,7 +454,7 @@ object AnnOps {
     // query-side scan + centroid ranking twice. A control action: AQE
     // off saves its re-planning jobs; the serve join itself stays lazy
     // and runs under the caller's conf
-    val probeRows = graft.util.Adaptive.withoutAqe(spark) {
+    val probeRows = Adaptive.withoutAqe(spark) {
       collectServeProbes(probePlan, MaxServeProbes)
     }
     val probes = spark.createDataFrame(

@@ -302,17 +302,7 @@ object DedupOps {
     * union-find path) — the scale-rehearsal observable: round counts
     * must stay ~log(diameter) as the corpus grows. */
   def connectedComponentsWithRounds(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 30, localEdgeThreshold: Long = 1L << 17): (DataFrame, Int) =
-    // near-dup edge sets are tiny relative to the corpus, so every
-    // per-round shuffle here is KB-to-MB-sized: coalesced post-shuffle
-    // stages (guide §2.2) cut the fixed per-round task overhead; at a
-    // genuinely large edge set AQE keeps full parallelism
-    graft.util.Adaptive.withCoalescedShuffles(nodes.sparkSession) {
-      ccWithRoundsImpl(nodes, pairs, maxRounds, localEdgeThreshold)
-    }
-
-  private def ccWithRoundsImpl(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int, localEdgeThreshold: Long): (DataFrame, Int) = {
+      maxRounds: Int = 30, localEdgeThreshold: Long = 1L << 17): (DataFrame, Int) = {
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))

@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.util.{ParquetState, StagedRun}
+import graft.util.{Adaptive, ParquetState, StagedRun}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -179,12 +180,20 @@ object IncrementalDedup {
     *                a no-op, with different input an error. Must start
     *                with a letter ([[graft.util.StagedRun.requireBatchId]]):
     *                the stores partition by batch_id
+    *
+    * The whole run plans with AQE off ([[graft.util.Adaptive.withoutAqe]]),
+    * `df` re-bound to `spark` so a `foreachBatch` micro-batch plans the
+    * same way: the control actions are metadata- or delta-sized, and the
+    * candidate join and the recheck have their skew bounded by the bucket
+    * cap with both sides delta-proportional, so a static plan loses
+    * nothing and saves a re-planning job per exchange. The returned frame
+    * is lazy and runs under the caller's setting.
     */
   def run(spark: SparkSession, df: DataFrame, tokens: Column, id: Column,
       stateDir: String, batchId: String, cfg: Config = Config()): DataFrame =
     StagedRun(spark, "incdedup", batchId) { run =>
-      graft.util.Adaptive.withCoalescedShuffles(spark) {
-        runImpl(run, spark, df, tokens, id, stateDir, batchId, cfg)
+      Adaptive.withoutAqe(spark) {
+        runImpl(run, spark, GraftBridge.bind(spark, df), tokens, id, stateDir, batchId, cfg)
       }
     }
 
@@ -236,10 +245,10 @@ object IncrementalDedup {
     // the text + k): an id-only hash would let a regenerated shard with
     // the same ids but different text no-op against its old marker
     run.stage("sign: fingerprint+materialize")
-    val fpRow = graft.util.Adaptive.withoutAqe(spark) { newBase.agg(
+    val fpRow = newBase.agg(
       StagedRun.fingerprint(col("id"), col("grams")).as("h"),
       count(lit(1)).as("n"),
-      countDistinct(col("id")).as("nd")).head() }
+      countDistinct(col("id")).as("nd")).head()
     val (inHash, inCount) = (fpRow.getLong(0), fpRow.getLong(1))
     // within-batch id uniqueness (the cross-batch check below cannot see
     // it, and the FIRST batch has no store to check against): duplicate
@@ -272,10 +281,10 @@ object IncrementalDedup {
     // ---- stage 1: signature append ----
     // id-uniqueness guard (the pair-op contract): a duplicated id would
     // silently fan pairs out through the payload re-joins. An ids-only
-    // semi-join under a static plan; a global min is one result job
-    // whether or not an id clashes
+    // semi-join; a global min is one result job whether or not an id
+    // clashes
     run.stage("sign: id-clash check")
-    if (committed.nonEmpty) graft.util.Adaptive.withoutAqe(spark) {
+    if (committed.nonEmpty) {
       val clash = batchRows(spark, sigPath(stateDir), sigSchema, committed.keys.toSeq)
         .select(col("id"))
         .join(newBase.select(col("id")), Seq("id"), "left_semi")
@@ -322,11 +331,8 @@ object IncrementalDedup {
     // arrives in both orientations but normalizes to one row, and a
     // new-old pair exists only as (new, old) — so one distinct on (id_a,
     // id_b, batch_o) is the pair distinct (batch_o is determined by the
-    // pair). AQE off for the propose/dispose joins: their skew is bounded
-    // by construction (capBuckets caps every bucket) and both sides are
-    // delta-proportional, so static planning loses nothing and saves one
-    // re-planning job per exchange.
-    val cand0 = graft.util.Adaptive.withoutAqe(spark) { guardedNew
+    // pair)
+    val cand0 = guardedNew
       .select(keys.map(col) :+ col("id").as("id_n"): _*)
       .join(guardedAll.select(
         keys.map(col) :+ col("id").as("id_o") :+ col("batch_id").as("batch_o"): _*),
@@ -338,7 +344,7 @@ object IncrementalDedup {
       // materialized once: the candidate set is delta-proportional (the
       // LSH-propose contract) and feeds both the touched-batch collect
       // and the verify join below
-      .localCheckpoint() }
+      .localCheckpoint()
     val candidates = cand0.select(col("id_a"), col("id_b"))
 
     // ---- stage 3: exact shingle-Jaccard recheck + pair append ----
@@ -346,20 +352,15 @@ object IncrementalDedup {
     // ids sit on both sides of new×new pairs) — the grams read below
     // partition-prunes to these
     run.stage("verify: touched batches")
-    val touched = (graft.util.Adaptive.withoutAqe(spark) {
-      cand0.select(col("batch_o")).distinct()
-        .collect().map(_.getString(0)).toSet
-    } + batchId).toSeq.sorted
+    val touched = (cand0.select(col("batch_o")).distinct()
+      .collect().map(_.getString(0)).toSet + batchId).toSeq.sorted
     val gramsSrc = batchRows(spark, sigPath(stateDir), sigSchema, touched)
       .select(col("id"), col("grams"))
     run.stage("verify: jaccard recheck + pair append")
-    // same bounded-skew/static-plan argument as cand0 above
-    graft.util.Adaptive.withoutAqe(spark) {
-      val verified = DedupOps.verifyByJaccard(candidates, gramsSrc, cfg.threshold)
-      verified.withColumn("batch_id", lit(batchId))
-        .write.mode(SaveMode.Append).partitionBy("batch_id")
-        .parquet(pairPath(stateDir))
-    }
+    DedupOps.verifyByJaccard(candidates, gramsSrc, cfg.threshold)
+      .withColumn("batch_id", lit(batchId))
+      .write.mode(SaveMode.Append).partitionBy("batch_id")
+      .parquet(pairPath(stateDir))
 
     // ---- stage 4: commit marker — the batch is now done ----
     run.stage("commit marker")

@@ -875,7 +875,10 @@ object Cqf {
     * compact flags reconcile by logical AND over the NON-EMPTY inputs —
     * the same semantic as mergeInPlace's empty-`other` early return, so
     * both merge surfaces produce identical metadata (and identical
-    * serialized bytes) for the same inputs. */
+    * serialized bytes) for the same inputs in the same order. A fold in
+    * another order gives the same content (`iterator`, `distinctAndTotal`)
+    * but can grow at another step, so its `quotientBits` and bytes may
+    * differ. */
   def merge(a: Cqf, b: Cqf): Cqf = {
     val (inv, comp) = reconciledFlags(a, b)
     val r = Cqf(math.max(a.quotientBits, b.quotientBits), a.hashBits, inv, comp)

@@ -335,6 +335,35 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.setJobDescription(null)
   }
 
+  test("the caller's AQE setting survives the IVF build and append, set or unset, also when they reject") {
+    val key = "spark.sql.adaptive.enabled"
+    // the caller's explicit setting; an unset key reads None here, where
+    // spark.conf.getOption would read the default
+    def setting = spark.conf.getAll.get(key)
+    def part(b: Int) = emb.where(pmod(col("vec_id"), lit(3)) === b)
+    for (caller <- Seq(Some("true"), None)) {
+      val idx = Files.createTempDirectory("ann_idx_aqe").toString
+      caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      try {
+        AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+          nCells = 8, kmeansIters = 2)
+        assert(setting == caller)
+        AnnOps.appendIvfBatch(spark, part(1), col("vec_id"), col("embedding"), idx, "d1")
+        assert(setting == caller)
+        // rejected after the first stage label: drifted params, reused id
+        intercept[IllegalArgumentException] {
+          AnnOps.buildIvfIndex(spark, part(0), col("vec_id"), col("embedding"), idx,
+            nCells = 16, kmeansIters = 2)
+        }
+        assert(setting == caller)
+        intercept[IllegalArgumentException] {
+          AnnOps.appendIvfBatch(spark, part(2), col("vec_id"), col("embedding"), idx, "d1")
+        }
+        assert(setting == caller)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("a codebook a kill left partial is retrained, not reused") {
     val idx = Files.createTempDirectory("ann_idx_partial_cb").toString
     AnnOps.buildIvfIndex(spark, emb, col("vec_id"), col("embedding"), idx,

@@ -1,6 +1,7 @@
 package graft.sketch
 
 import org.scalacheck.{Gen, Prop, Test => ScTest}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
@@ -11,9 +12,9 @@ class CqfPropertySpec extends AnyFunSuite {
 
   /** Run a ScalaCheck property under scalatest (the scalatestplus bridge
     * is not on the offline classpath). */
-  private def check(prop: Prop): Unit = {
-    val res = ScTest.check(
-      ScTest.Parameters.default.withMinSuccessfulTests(60), prop)
+  private def check(prop: Prop,
+      params: ScTest.Parameters = ScTest.Parameters.default.withMinSuccessfulTests(60)): Unit = {
+    val res = ScTest.check(params, prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -51,6 +52,33 @@ class CqfPropertySpec extends AnyFunSuite {
       val merged = shards.reduceLeft(_.mergeInPlace(_))
       merged.iterator.toList == seq.iterator.toList
     })
+  }
+
+  test("property: folding partials with merge in any order gives the same content") {
+    // Cqf.merge's contract: the same content and counts in any order. Not
+    // the same bytes: the fold order can move a grow, so equal content may
+    // land at different quotientBits
+    val partialGen: Gen[List[(Long, Long)]] = Gen.chooseNum(1, 2000).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(
+        Gen.frequency(1 -> Gen.long, 1 -> Gen.chooseNum(0L, 3000L)),
+        Gen.chooseNum(1L, 3L))))
+    val foldGen = for {
+      parts <- Gen.chooseNum(2, 7).flatMap(Gen.listOfN(_, partialGen))
+      order <- Gen.long
+    } yield (parts, order)
+    check(Prop.forAll(foldGen) { case (parts, order) =>
+      val partials = parts.map { inserts =>
+        val c = Cqf(10, 64)
+        inserts.foreach { case (k, n) => c.insert(k, n) }
+        c
+      }
+      val inOrder = partials.reduceLeft(Cqf.merge)
+      val shuffled = new scala.util.Random(order).shuffle(partials).reduceLeft(Cqf.merge)
+      inOrder.iterator.toList == shuffled.iterator.toList &&
+        inOrder.distinctAndTotal == shuffled.distinctAndTotal &&
+        inOrder.totalCount == parts.flatten.map(_._2).sum
+    }, ScTest.Parameters.default.withMinSuccessfulTests(200)
+      .withInitialSeed(Seed(0x6772616674L)))
   }
 
   test("property: serialize/deserialize is the identity") {

@@ -90,6 +90,31 @@ class StreamingAnnIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$idx/assignments").count() == emb.count())
   }
 
+  test("a foreachBatch epoch starts the same stage jobs as a direct append of its shard") {
+    val dir = Files.createTempDirectory("sann_plan").toString
+    val src = s"$dir/src"
+    new java.io.File(src).mkdirs()
+    graft.util.ParquetState.writeSingleFile(part(1), s"$src/batch_1.parquet")
+    val (direct, streamed) = (s"$dir/direct", s"$dir/streamed")
+    Seq(direct, streamed).foreach(idx => AnnOps.buildIvfIndex(spark, part(0),
+      col("vec_id"), col("embedding"), idx, nCells = 8, kmeansIters = 2))
+    // the same single file both ways, so both plans see the same splits
+    val shard = spark.read.schema(emb.schema).parquet(src)
+    def append(idx: String, df: DataFrame, batchId: String): Seq[String] =
+      graft.JobsOf(spark)(AnnOps.appendIvfBatch(spark, df,
+        col("vec_id"), col("embedding"), idx, batchId))
+    val directJobs = append(direct, shard, "d1")
+    var epochJobs = Seq.empty[String]
+    runStream(src, streamed, s"$dir/ckpt") { (df, epochId) =>
+      if (!df.isEmpty) epochJobs = append(streamed, df, s"epoch_$epochId")
+    }
+    // the stage labels without the batch id
+    def stages(jobs: Seq[String]) = jobs.map(_.replaceFirst("""\[[^\]]*\]""", "[]")).sorted
+    info(s"${directJobs.size} jobs direct, ${epochJobs.size} in the epoch")
+    assert(directJobs.nonEmpty && stages(epochJobs) == stages(directJobs),
+      s"direct:\n${directJobs.mkString("\n")}\nepoch:\n${epochJobs.mkString("\n")}")
+  }
+
   test("kill AFTER a delta commits but before the engine records it: replay is a no-op") {
     val dir = Files.createTempDirectory("sann_kill").toString
     val idx = s"$dir/idx"

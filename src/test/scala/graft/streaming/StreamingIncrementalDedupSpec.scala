@@ -85,6 +85,30 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$dir/state/signatures").count() == docs.count())
   }
 
+  test("a foreachBatch epoch starts the same stage jobs as a direct run of its shard") {
+    val dir = Files.createTempDirectory("sinc_plan").toString
+    val src = s"$dir/src"
+    new java.io.File(src).mkdirs()
+    graft.util.ParquetState.writeSingleFile(
+      docs.where(pmod(col("doc_id"), lit(3)) === 1), s"$src/batch_1.parquet")
+    val (direct, streamed) = (s"$dir/direct", s"$dir/streamed")
+    Seq(direct, streamed).foreach(state => IncrementalDedup.run(spark,
+      docs.where(pmod(col("doc_id"), lit(3)) === 0),
+      TextOps.tokens(col("text")), col("doc_id"), state, "b0", cfg))
+    // the same single file both ways, so both plans see the same splits
+    val shard = spark.read.schema(docs.schema).parquet(src)
+    val directJobs = graft.JobsOf(spark)(ingest(direct)(shard, 1L))
+    var epochJobs = Seq.empty[String]
+    runStream(src, streamed, s"$dir/ckpt") { (df, epochId) =>
+      if (!df.isEmpty) epochJobs = graft.JobsOf(spark)(ingest(streamed)(df, epochId))
+    }
+    // the stage labels without the batch id
+    def stages(jobs: Seq[String]) = jobs.map(_.replaceFirst("""\[[^\]]*\]""", "[]")).sorted
+    info(s"${directJobs.size} jobs direct, ${epochJobs.size} in the epoch")
+    assert(directJobs.nonEmpty && stages(epochJobs) == stages(directJobs),
+      s"direct:\n${directJobs.mkString("\n")}\nepoch:\n${epochJobs.mkString("\n")}")
+  }
+
   test("kill AFTER a batch commits but before the engine records it: replay is a no-op") {
     val dir = Files.createTempDirectory("sinc_kill").toString
     val src = stageShards(dir)
